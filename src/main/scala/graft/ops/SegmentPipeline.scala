@@ -1,17 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.core._
 import graft.store.Store
 
 /** The /segment job (SURVEY.md §3.1): ARD chip scan → per-pixel CCD →
   * 37-col projection → chip/pixel/segment sinks.
   *
-  * Spark shape: `read ARD → [limit] → mapPartitions(ccd) → selects →
-  * overwrite-write`. Chip-parallelism is the partitioning (one task
-  * works one chip's pixels when the source is partitioned by (cx, cy));
-  * pixel-parallelism inside a chip comes free because rows are pixels.
+  * Spark shape: `read ARD → [limit] → mapPartitions(ccd) → cache`, then
+  * four jobs over the cache and no shuffle: a per-partition tally
+  * collected to the driver (the counts, the F3 guard and the chip
+  * rows), then the segment, pixel and chip writes, the last from the
+  * tally's small local rows. Chip-parallelism is the partitioning (one
+  * task works one chip's pixels when the source is partitioned by
+  * (cx, cy)); pixel-parallelism inside a chip comes free because rows
+  * are pixels.
   * The reference's multiprocessing.Pool (segment.py:189-195) maps to
   * Spark tasks; its empty-scan guard (F3) and limit (L1) are preserved.
   */
@@ -62,40 +65,46 @@ object SegmentPipeline {
     val pixels = detections
       .map(d => PixelRecord(d.cx, d.cy, d.px, d.py, d.mask))
 
-    // S7: chip sink — groupBy(cx,cy).agg(first(dates)) (A3)
-    val chips = detections
-      .map(d => (d.cx, d.cy,
-        d.dates.map(o => HarmonicCcd.dateOfOrdinal(o))))
-      .toDF("cx", "cy", "dates")
-      .groupBy($"cx", $"cy")
-      .agg(first($"dates").as("dates"))
-      .as[ChipRecord]
-
-    // Counts FIRST, as ONE aggregate action over the cache: it forces
-    // detection, so a detector failure surfaces before any sink is
-    // touched — the nothing-persisted half of the reference's error
-    // contract (ref: test/test_A_segment.py:159-194) — and a single
-    // pass yields all three sink counts (at tile scale, 3 counting
-    // passes per chip would triple the read volume). The same action
-    // doubles as the F3 nodata guard (ref segment.py:178-184): zero
-    // pixels means the scan was empty. The writes then stream from the
-    // cache; JobQueue compensates if a write itself fails.
     // try/finally: the nodata throw, a detector failure surfacing in
-    // the count, or a failed write must all still release the cache —
+    // the tally, or a failed write must all still release the cache —
     // a long-running JobQueue answering repeated failing requests
     // would otherwise accumulate CacheManager entries until executor
     // storage memory is gone
     try {
-      val c = detections
-        .toDF()
-        .agg(countDistinct(struct($"cx", $"cy")).as("chips"),
-          count(lit(1)).as("pixels"),
-          sum(size($"segments")).cast("long").as("segs"))
-        .head()
-      if (c.getLong(1) == 0L)
+      // The tally FIRST, as ONE shuffle-free action over the cache: it
+      // forces detection, so a detector failure surfaces before any
+      // sink is touched — the nothing-persisted half of the
+      // reference's error contract (ref: test/test_A_segment.py:
+      // 159-194). Each partition reports, per chip it holds, its pixel
+      // and segment counts and the dates of the first pixel it sees;
+      // the driver merges the few rows. That yields all three counts,
+      // the F3 nodata guard (ref segment.py:178-184: zero pixels means
+      // the scan was empty) and the chip sink's rows (A3: the
+      // reference's insert_chip takes the first pixel's dates in
+      // memory, ceph.py:150-161) without an aggregate's exchanges.
+      val tally = detections.mapPartitions { it =>
+        val byChip =
+          scala.collection.mutable.HashMap.empty[(Long, Long), ChipTally]
+        it.foreach { d =>
+          val t = byChip.getOrElseUpdate((d.cx, d.cy),
+            ChipTally(d.cx, d.cy, d.dates, 0L, 0L))
+          byChip((d.cx, d.cy)) = t.copy(pixels = t.pixels + 1,
+            segments = t.segments + d.segments.size)
+        }
+        byChip.valuesIterator
+      }.collect()
+      // collect keeps partition order: each chip's first tally row
+      // holds the first pixel's dates
+      val firstPerChip =
+        tally.groupBy(t => (t.cx, t.cy)).values.map(_.head).toSeq
+      val counts = SegmentResult(chips = firstPerChip.size,
+        pixels = tally.map(_.pixels).sum,
+        segments = tally.map(_.segments).sum)
+      if (counts.pixels == 0L)
         throw new IllegalStateException("No timeseries data available")
-      val counts = SegmentResult(
-        chips = c.getLong(0), pixels = c.getLong(1), segments = c.getLong(2))
+      // S7: chip sink — one row per chip from the tally
+      val chips = spark.createDataset(firstPerChip.map(t =>
+        ChipRecord(t.cx, t.cy, t.dates.map(HarmonicCcd.dateOfOrdinal))))
       def sink(entity: String, df: org.apache.spark.sql.DataFrame): Unit =
         keyHint match {
           case Some(kv) => store.writeKeyed(entity, df, Seq("cx", "cy"), kv)
@@ -107,6 +116,11 @@ object SegmentPipeline {
       counts
     } finally detections.unpersist()
   }
+
+  /** One partition's share of one chip: its pixel and segment counts
+    * and the dates of the first pixel the partition saw. */
+  private[ops] final case class ChipTally(cx: Long, cy: Long,
+      dates: Array[Int], pixels: Long, segments: Long)
 }
 
 final case class SegmentResult(chips: Long, pixels: Long, segments: Long)

@@ -20,7 +20,8 @@ final case class JobRequest(
 /** The result record appended to the job log for each processed
   * request. `status` carries the reference's HTTP contract: 200 ok,
   * 400 invalid request (failed validation, nothing ran), 500 pipeline
-  * failure (nothing persisted). */
+  * failure (nothing persisted, unless `error` also names a compensating
+  * delete that failed: that entity's key may hold a partial sink). */
 final case class JobResult(kind: String, cx: Long, cy: Long,
     tx: Long, ty: Long, ok: Boolean, rows: Long, error: String,
     status: Int)
@@ -39,7 +40,8 @@ final case class JobResult(kind: String, cx: Long, cy: Long,
   *  - a pipeline failure yields a 500-equivalent JobResult; if the
   *    request had reached its save stage, its key partitions end up
   *    EMPTY (the observable state the reference's delete-before-write
-  *    produces on a failed save) via compensating keyed deletes, and
+  *    produces on a failed save) via compensating keyed deletes (a
+  *    delete that itself fails is named in the result's `error`), and
   *    if it failed while still reading, previously-persisted data at
   *    those keys is left byte-for-byte untouched.
   */
@@ -229,19 +231,6 @@ final class JobQueue(
     * re-memoizes). */
   def close(): Unit = resetMemo(false)
 
-  /** The request's own key, handed to the pipelines as their write
-    * hint: each per-request sink then takes the single-partition
-    * [[graft.store.Store.writeKeyed]] commit (one task + one rename)
-    * instead of a keys-hash exchange plus the dynamic-overwrite
-    * staging walk per write — the r14 lifecycle optimization.
-    * SPARK_GRAFT_OLDWRITE=1 routes every write back through the
-    * generic write() so the before/after can be reproduced on one
-    * binary (same-window A/B); observable store state is identical
-    * either way (StoreSpec pins the parity). */
-  private val oldWrite = sys.env.get("SPARK_GRAFT_OLDWRITE").contains("1")
-  private def keyOf(kv: (String, Any)*): Option[Seq[(String, Any)]] =
-    if (oldWrite) None else Some(kv)
-
   /** Run one validated request through its pipeline. */
   private def handle(r: JobRequest): JobResult =
     domainCheck(r) match {
@@ -256,7 +245,7 @@ final class JobQueue(
               // single-partition keyed commit (Store.writeKeyed)
               val out = SegmentPipeline.run(spark, ardSource(r.cx, r.cy),
                 rs, detector,
-                keyHint = keyOf("cx" -> r.cx, "cy" -> r.cy))
+                keyHint = Some(Seq("cx" -> r.cx, "cy" -> r.cy)))
               JobResult(r.kind, r.cx, r.cy, r.tx, r.ty, ok = true,
                 out.segments, "", 200)
             case "tile" =>
@@ -265,7 +254,7 @@ final class JobQueue(
                 classifier, r.tx, r.ty,
                 TrainingPipeline.Params(date = r.date,
                   targetSamples = 1000000, classMin = 1, classMax = 1000000),
-                keyHint = keyOf("tx" -> r.tx, "ty" -> r.ty))
+                keyHint = Some(Seq("tx" -> r.tx, "ty" -> r.ty)))
               JobResult(r.kind, r.cx, r.cy, r.tx, r.ty, ok = true,
                 out.trainRows, "", 200)
             case "prediction" =>
@@ -292,7 +281,7 @@ final class JobQueue(
                 batchAux()
                   .filter(col("cx") === r.cx && col("cy") === r.cy),
                 rs, classifier, modelBytes, r.month, r.day,
-                keyHint = keyOf("cx" -> r.cx, "cy" -> r.cy))
+                keyHint = Some(Seq("cx" -> r.cx, "cy" -> r.cy)))
               JobResult(r.kind, r.cx, r.cy, r.tx, r.ty, ok = true, n, "", 200)
             case other =>
               JobResult(other, r.cx, r.cy, r.tx, r.ty, ok = false, 0,
@@ -305,12 +294,21 @@ final class JobQueue(
             // the reference's delete-first + failed save
             // (ref: test/test_A_segment.py:159-194). A failure BEFORE
             // any write leaves the store byte-for-byte untouched.
-            if (rs.wrote) touched(r).foreach { case (entity, keys) =>
-              try store.delete(entity, keys)
-              catch { case _: Exception => () }
-            }
+            // A delete that itself fails may leave a partial sink at
+            // its key, so the error names it instead of implying an
+            // empty key.
+            val failedDeletes =
+              if (!rs.wrote) Nil
+              else touched(r).flatMap { case (entity, keys) =>
+                try { store.delete(entity, keys); None }
+                catch { case d: Exception =>
+                  Some(s"compensating delete of $entity failed: " +
+                    d.getMessage)
+                }
+              }
             JobResult(r.kind, r.cx, r.cy, r.tx, r.ty, ok = false, 0,
-              String.valueOf(e.getMessage), 500)
+              (String.valueOf(e.getMessage) +: failedDeletes).mkString("; "),
+              500)
         }
     }
 

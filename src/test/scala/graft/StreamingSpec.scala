@@ -507,12 +507,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       r3.toString)
   }
 
-  test("a save failure is compensated: touched keys end up empty") {
-    val root = Files.createTempDirectory("graft-jobq-save").toString
-    // fail the LAST of the three segment-stage writes, so the first two
-    // have already landed and must be rolled back
+  /** A store whose chip write fails — the LAST of the three
+    * segment-stage writes, so the first two have already landed and
+    * must be rolled back — and whose delete of `undeletable` fails. */
+  private def chipWriteFailing(root: String,
+      undeletable: Set[String] = Set.empty): graft.store.Store = {
     val inner = new graft.store.ParquetStore(root)
-    val store: graft.store.Store = new graft.store.Store {
+    new graft.store.Store {
       override def write(entity: String,
           df: org.apache.spark.sql.DataFrame, keys: Seq[String]): Unit = {
         if (entity == "chip")
@@ -522,9 +523,17 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       override def read(entity: String,
           s: org.apache.spark.sql.SparkSession) = inner.read(entity, s)
       override def delete(entity: String,
-          keyValues: Seq[(String, Any)]): Unit =
+          keyValues: Seq[(String, Any)]): Unit = {
+        if (undeletable(entity))
+          throw new RuntimeException("test_delete_exception")
         inner.delete(entity, keyValues)
+      }
     }
+  }
+
+  test("a save failure is compensated: touched keys end up empty") {
+    val store = chipWriteFailing(
+      Files.createTempDirectory("graft-jobq-save").toString)
     val (f, jq) = jobQueue(store)
     jq.dispatch(spark.createDataset(Seq(
       JobRequest("segment", f.Cx, f.Cy, 0, 0, "", 0, 0))))
@@ -532,6 +541,26 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(!r.ok && r.status == 500)
     assert(r.error.contains("test_save_exception"))
     Seq("segment", "pixel", "chip").foreach { e =>
+      assert(countFor(store, e) == 0,
+        s"$e still holds rows after the compensating delete")
+    }
+  }
+
+  test("a failed compensating delete is named in the 500's error") {
+    val store = chipWriteFailing(
+      Files.createTempDirectory("graft-jobq-del").toString,
+      undeletable = Set("segment"))
+    val (f, jq) = jobQueue(store)
+    jq.dispatch(spark.createDataset(Seq(
+      JobRequest("segment", f.Cx, f.Cy, 0, 0, "", 0, 0))))
+    val r = jq.results.head
+    assert(!r.ok && r.status == 500)
+    assert(r.error == "test_save_exception; compensating delete of " +
+      "segment failed: test_delete_exception", r.error)
+    // the partial sink the error names is really there; the deletes
+    // that succeeded emptied their keys
+    assert(countFor(store, "segment") > 0)
+    Seq("pixel", "chip").foreach { e =>
       assert(countFor(store, e) == 0,
         s"$e still holds rows after the compensating delete")
     }

@@ -172,4 +172,52 @@ class TileLifecycleSpec extends AnyFunSuite with SparkSpec {
       s"aux evaluated ${auxCalls.get() - auxBefore} times in one " +
         "prediction batch")
   }
+
+  test("a warm keyed segment request runs at most 4 jobs, no shuffle " +
+    "stage, and compiles no new code") {
+    val store = new ParquetStore(
+      Files.createTempDirectory("graft-tile-pin").toString)
+    def segment(k: Int): Unit = {
+      val cx = SyntheticTile.cxOf(k)
+      SegmentPipeline.run(spark,
+        SyntheticTile.chip(spark, cx, SyntheticTile.Cy, Side, Obs), store,
+        keyHint = Some(Seq("cx" -> cx, "cy" -> SyntheticTile.Cy)))
+    }
+    segment(0) // warm: plans compiled and cached
+    // count only this thread's jobs: tag them with a local property
+    val tag = "graft.test.segmentPin"
+    def tagged(p: java.util.Properties): Boolean =
+      p != null && p.getProperty(tag) != null
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (tagged(j.properties)) jobs.incrementAndGet()
+      // shuffleDepId is private[spark] (bytecode-public): defined
+      // exactly for shuffle-map stages
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted)
+          : Unit = if (tagged(s.properties)) {
+        val dep = s.stageInfo.getClass.getMethod("shuffleDepId")
+          .invoke(s.stageInfo).asInstanceOf[Option[_]]
+        if (dep.isDefined) shuffleStages.incrementAndGet()
+      }
+    }
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val compiled0 = compiles.getCount
+      spark.sparkContext.setLocalProperty(tag, "1")
+      try segment(1) // a chip the session has not seen
+      finally spark.sparkContext.setLocalProperty(tag, null)
+      val compiled = compiles.getCount - compiled0
+      org.apache.spark.sql.graftbridge.ColumnBridge.flushListenerBus(spark)
+      assert(jobs.get() <= 4, s"${jobs.get()} jobs for one segment request")
+      assert(shuffleStages.get() == 0,
+        s"${shuffleStages.get()} shuffle stages for one segment request")
+      assert(compiled == 0, s"$compiled classes compiled on a warm request")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
