@@ -32,9 +32,6 @@ object DateExprs {
   def averageReflectance(intercept: Column, coefs: Column, date: Column): Column =
     intercept + element_at(coefs, 1) * ordinalOf(date).cast("double")
 
-  /** Spectral slope = first coefficient (ref: blackmagic/segaux.py:176-186). */
-  def spectralSlope(coefs: Column): Column = element_at(coefs, 1)
-
   /** Default-segment predicate (ref: blackmagic/segaux.py:142-146, F4). */
   def isDefaultSegment(sday: Column, eday: Column): Column =
     sday === epoch && eday === epoch

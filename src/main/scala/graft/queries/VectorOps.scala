@@ -4286,13 +4286,6 @@ object VectorOps {
     annIvfTrained(s, dir, cells = c, k = k)
   }
 
-  /** [[semDedup]] with corpus-scaled cell count. */
-  def semDedupScaled(s: org.apache.spark.sql.SparkSession, dir: String,
-      threshold: Double = SemDedupTau): org.apache.spark.sql.DataFrame = {
-    val (c, _) = scaledGeometry(s, dir)
-    semDedup(s, dir, c, threshold)
-  }
-
   /** The x86 core shared by the registry query and the incremental
     * lifecycle: in-cell top-k edges over an assigned (vec_id, v, cell)
     * frame. Keeps the src cell in the output so the incremental path

@@ -301,15 +301,6 @@ object EventStream {
           out.result().iterator
       }
 
-  /** e7's aggregated cohort matrix, incrementally (Update mode): each
-    * emitted pair is unique per user, so the plain count is the
-    * distinct-user count. */
-  def retentionCounts(events: Dataset[Event],
-      watermark: String = "1 hour"): DataFrame =
-    retentionPairs(events, watermark)
-      .groupBy($"cohort", $"week_offset")
-      .agg(count(lit(1)).as("n_users"))
-
   /** Gap-based sessionization via flatMapGroupsWithState: a session
     * closes when `gap` passes with no events. Events fold through the
     * watermark buffer in global ts order, so a gap between two ripened

@@ -117,6 +117,20 @@ class CcdSpec extends AnyFunSuite {
     assert(seg.blrmse < 5, s"rmse ${seg.blrmse}") // rounding noise only
   }
 
+  test("band or QA arrays whose length differs from dates are rejected") {
+    val ts = synth()
+    def msg(bad: PixelTimeseries): String =
+      intercept[IllegalArgumentException](HarmonicCcd().detect(bad)).getMessage
+    val short = msg(ts.copy(reds = ts.reds.init))
+    assert(short.contains("(-2061585, 1922805, 0, 0)") &&
+      short.contains("reds has 229 entries, dates has 230"), short)
+    // a longer array is no longer silently truncated
+    assert(msg(ts.copy(qas = ts.qas :+ 0)).contains("qas has 231 entries"))
+    // the first offending field in PixelTimeseries order is named
+    assert(msg(ts.copy(thermals = ts.thermals.init, greens = null))
+      .contains("greens has null"))
+  }
+
   // --- golden digest: the kernel's output, bit for bit -----------------
 
   /** SHA-256 over the raw IEEE bits of every field of every segment,
@@ -125,7 +139,9 @@ class CcdSpec extends AnyFunSuite {
   private def digest(dets: Seq[PixelDetection]): String = {
     val md = MessageDigest.getInstance("SHA-256")
     val buf = java.nio.ByteBuffer.allocate(8)
-    def long(v: Long): Unit = { buf.clear(); buf.putLong(v); md.update(buf.array()) }
+    def long(v: Long): Unit = {
+      buf.clear(); buf.putLong(v); md.update(buf.array())
+    }
     def dbl(v: Double): Unit = long(java.lang.Double.doubleToRawLongBits(v))
     dets.foreach { d =>
       long(d.mask.length); d.mask.foreach(long(_))
@@ -223,7 +239,8 @@ class CcdSpec extends AnyFunSuite {
       spikes, fill)
   }
 
-  test("golden digest: segments and masks are bit-identical to the pinned kernel") {
+  test("golden digest: segments and masks are bit-identical to the " +
+      "pinned kernel") {
     // Digests of the kernel as first pinned (JDK 17 HotSpot, x86_64:
     // strict IEEE arithmetic; math.cos/sin use the JVM's libm stubs).
     // A deliberate change to the fit's results must update them and

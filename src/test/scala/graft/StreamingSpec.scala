@@ -465,6 +465,28 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("ARD with a band shorter than its dates answers 500 naming the " +
+      "field and persists nothing") {
+    val root = Files.createTempDirectory("graft-jobq-len").toString
+    val store = new graft.store.ParquetStore(root)
+    val fixtures = new PipelineFixtures(spark)
+    val ard = fixtures.chip().zipWithIndex.map { case (p, i) =>
+      if (i == 3) p.copy(nirs = p.nirs.init) else p }
+    val jq = new JobQueue(spark, store,
+      ardSource = (_, _) => spark.createDataset(ard),
+      auxSource = () => spark.createDataset(fixtures.aux()).toDF(),
+      classifier = new graft.ml.SoftmaxClassifier(numClasses = 4))
+    jq.dispatch(spark.createDataset(Seq(
+      JobRequest("segment", fixtures.Cx, fixtures.Cy, 0, 0, "", 0, 0))))
+    val r = jq.results.head
+    assert(!r.ok && r.status == 500)
+    assert(r.error.contains("IllegalArgumentException") &&
+      r.error.contains("nirs has"), r.error)
+    Seq("segment", "pixel", "chip").foreach { e =>
+      assert(countFor(store, e) == 0, s"$e persisted after failure")
+    }
+  }
+
   test("a read-path failure leaves previously persisted data untouched") {
     val root = Files.createTempDirectory("graft-jobq-read").toString
     val store = new graft.store.ParquetStore(root)
