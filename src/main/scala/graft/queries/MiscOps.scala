@@ -159,8 +159,8 @@ object MiscOps {
     },
 
     // ----- C7 JSON codec: parse the events props JSON + re-serialize
-    // a struct (the reference's gzip+JSON storage codec, ceph.py:297-333;
-    // gzip itself is a write-codec option, exercised by the store)
+    // a struct (the JSON half of the reference's gzip+JSON storage
+    // codec, ceph.py:297-333; the store itself writes parquet)
     "c7_json" -> Q(
       """SELECT event_id,
         |  CAST(json_extract(props, '$.k') AS BIGINT) AS k,

@@ -110,10 +110,9 @@ object TextOps {
   /** x33's index lifecycle THROUGH the storage layer (the production
     * shape x33 computes in-query from even doc_ids): persist the
     * historical corpus's dedup artifacts once — the band-bucket table
-    * ([[bandRowsOf]]'s output) partitioned by band and range-clustered
-    * on the band key, and the signature table range-clustered on
-    * doc_id — so later ingest batches probe parquet, never the
-    * historical corpus. */
+    * ([[bandRowsOf]]'s output) partitioned by band, and the signature
+    * table unpartitioned — so later ingest batches probe parquet, never
+    * the historical corpus. */
   def persistDedupIndex(s: org.apache.spark.sql.SparkSession,
       dir: String, bandStore: graft.store.Store,
       sigStore: graft.store.Store): Unit = {

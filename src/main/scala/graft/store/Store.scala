@@ -1,16 +1,23 @@
 package graft.store
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Keyed entity storage (SURVEY.md §2.1 S6–S13). The reference stores one
   * gzipped JSON array per chip/tile key on S3 and deletes-before-writes
   * for idempotent re-runs (ref: blackmagic/data/ceph.py:250-333,338-351).
   *
-  * Spark-first mapping: partitioned parquet with DYNAMIC partition
-  * overwrite — rewriting a chip's partition atomically subsumes the
-  * reference's delete+insert (S12), and (cx, cy) partition columns give
-  * the same key-addressed reads via partition pruning that the
-  * reference's key scheme hand-implements.
+  * Spark-first mapping ([[ParquetStore]]): partitioned parquet, where
+  * (cx, cy) partition columns give the same key-addressed reads that the
+  * reference's key scheme hand-implements. `write` replaces the keys its
+  * frame carries by dynamic partition overwrite (S12); `writeKeyed`
+  * replaces one key by delete-then-write. Neither is atomic for a
+  * reader: between `writeKeyed`'s delete and its commit the key reads as
+  * a GET miss (zero rows), and a writer that dies in that window leaves
+  * the key absent until the request is re-run — the same recovery the
+  * reference's delete-before-write relies on.
   *
   * At 100 TB: one partition per chip key ≈ the reference's object layout;
   * writers `repartition(keys)` first so each task writes exactly one
@@ -23,11 +30,11 @@ trait Store extends Serializable {
   /** Key-addressed point read — the reference's O(1) GET
     * (ref: blackmagic/data/ceph.py:125-129,338-351: one object per
     * key, listing never scales with the store). Base semantics:
-    * `read` + equality filters, correct for every impl; the
-    * partitioned stores override it to resolve the key DIRECTLY to
-    * its partition directory, so per-request cost is O(one partition
-    * listing) instead of O(store) — the difference between a flat and
-    * a super-linear serving path at tile scale (a 2,500-chip tile is
+    * `read` + equality filters, correct for every impl; ParquetStore
+    * overrides it to resolve the key DIRECTLY to its partition
+    * directory, so per-request cost is O(one partition listing)
+    * instead of O(store) — the difference between a flat and a
+    * super-linear serving path at tile scale (a 2,500-chip tile is
     * 2,500 keyed reads; each must not re-list 2,500 partitions). */
   def readKeyed(entity: String, keyValues: Seq[(String, Any)],
       spark: SparkSession): DataFrame = {
@@ -53,62 +60,152 @@ trait Store extends Serializable {
     *
     * Base implementation delegates to [[write]] (dynamic keyed
     * overwrite — identical observable state under the precondition).
-    * The partitioned stores override it with a direct single-partition
-    * commit: a per-chip write then pays ONE task and one directory
-    * rename instead of a shuffle exchange plus the dynamic-overwrite
-    * staging walk — the difference between O(1) and O(cores + staging
-    * listing) per request when a tile dispatches thousands of them
-    * (guide §5: keep the driver out of the per-request path). */
+    * ParquetStore overrides it with a direct single-partition commit:
+    * delete the key's directory, then write it (see the trait doc for
+    * the window in between). A per-chip write then pays ONE task and
+    * one directory rename instead of a shuffle exchange plus the
+    * dynamic-overwrite staging walk — the difference between O(1) and
+    * O(cores + staging listing) per request when a tile dispatches
+    * thousands of them (guide §5: keep the driver out of the
+    * per-request path). */
   def writeKeyed(entity: String, df: DataFrame, keys: Seq[String],
       keyValues: Seq[(String, Any)]): Unit =
     write(entity, df, keys)
 }
 
-/** Partition-path delete shared by the partitioned-layout stores: the
-  * key IS a directory (`entity/cx=1/cy=10`), so keyed delete is one
-  * filesystem remove — no scan, no rewrite, the same O(1)-per-key
-  * economy as the reference's object-store delete at any scale.
+/** Hive-style partitioned parquet under `root/entity`: the key IS a
+  * directory (`entity/cx=1/cy=10`), so keyed delete is one filesystem
+  * remove — no scan, no rewrite, the same O(1)-per-key economy as the
+  * reference's object-store delete at any scale — and a keyed read lists
+  * only that directory.
   *
-  * Key ORDER is discovered from the on-disk layout (the `k=` level
-  * names), not trusted from the caller: the connector and bucketed
-  * impls are insensitive to argument order, and a caller passing
-  * `Seq(cy -> .., cx -> ..)` against a `cx/cy` layout must delete the
-  * same partition, not silently no-op on a nonexistent path. */
-private[store] object PartitionedDelete {
+  * The key-order memo, the file-schema memo and the write generation
+  * that guards it (companion object) are JVM-global, keyed by root and
+  * entity, and only this JVM's writes invalidate them. One writer per
+  * store root is therefore assumed: a second driver rewriting the same
+  * root could leave this one replaying a stale schema or key order.
+  */
+final class ParquetStore(root: String) extends Store {
+  import ParquetStore.{generation, orderCache, schemaCache}
+  import org.apache.spark.sql.functions.{col, lit}
 
-  // discovered key order per (root, entity): the layout is fixed at
-  // write time, so one successful directory walk serves every later
-  // delete — keeping keyed delete O(1) after the first call instead
-  // of a sibling-directory search per call
-  private val orderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, List[String]]()
+  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
+    invalidate(entity)
+    df.repartition(keys.map(col): _*)
+      .write
+      .partitionBy(keys: _*)
+      .option("partitionOverwriteMode", "dynamic") // S12: overwrite == delete+insert
+      .mode("overwrite")
+      .parquet(s"$root/$entity")
+    invalidate(entity)
+  }
 
-  // per-(root, entity, fmt) FILE schema memo for keyed reads: a tile of
-  // prediction requests is thousands of keyed point reads against one
-  // unchanging entity, and each un-memoized spark.read.load() re-infers
-  // the schema (a driver-side footer read + file listing per REQUEST —
-  // pure driver work that serializes the job queue's worker pool; guide
-  // §5). One inference per entity serves every later keyed read; any
-  // write through the store invalidates. Only the file schema (before
-  // partition-column discovery) is memoized — partition columns still
-  // resolve from the directory layout per read, and keyTyped() pins
-  // their types to the caller's key values exactly as before.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  override def read(entity: String, spark: SparkSession): DataFrame =
+    spark.read.parquet(s"$root/$entity")
 
-  // per-(root, entity) write generation: a keyed read that was IN
-  // FLIGHT while a rewrite ran must never (re)populate schemaCache
-  // with the pre-rewrite schema — writers bump the generation before
-  // AND after the write, and a read only memoizes when the generation
-  // it started under is still current. Without this, a mid-rewrite
-  // read could repopulate the cache right after the writer's
-  // invalidate and every later keyed read would replay the stale
-  // schema (silently dropping columns the rewrite added).
-  private val generation =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Resolve the key to its partition directory and list ONLY that —
+    * one directory listing per request regardless of how many keys the
+    * entity holds (the reference's per-key GET, ceph.py:125-129).
+    * `basePath` keeps the partition columns in the result.
+    *
+    * Schema stability: partition-column TYPES are inferred from the
+    * directory names a read can see, so a single-partition listing
+    * could infer differently than the full listing (ts=3 alone reads
+    * int; alongside ts=5e9 it reads long). Both the hit and the miss
+    * path therefore cast each key column to the CALLER's key-value
+    * type — a keyed read's schema is deterministic in the call, never
+    * in which partitions happen to exist. A key whose directory holds
+    * no data (absent, or a crashed commit's leftovers) falls back to
+    * the filtered full read: same zero rows (or the same entity-absent
+    * error) as the unkeyed path. */
+  override def readKeyed(entity: String, keyValues: Seq[(String, Any)],
+      spark: SparkSession): DataFrame = {
+    def dtOf(v: Any): Option[String] = v match {
+      case _: Long | _: java.lang.Long => Some("bigint")
+      case _: Int | _: java.lang.Integer => Some("int")
+      case _: Short | _: java.lang.Short => Some("smallint")
+      case _: String => Some("string")
+      case _: Double | _: java.lang.Double => Some("double")
+      case _: Boolean | _: java.lang.Boolean => Some("boolean")
+      case _ => None // unknown key type: leave the inferred column
+    }
+    def keyTyped(df: DataFrame): DataFrame =
+      keyValues.foldLeft(df) { case (d, (k, v)) =>
+        dtOf(v).fold(d)(t => d.withColumn(k, col(k).cast(t))) }
+    val p = partPath(entity, keyValues)
+    val hit = holdsData(p)
+    // schema memo (see schemaCache): the first keyed read infers and
+    // remembers, every later one skips the per-request footer read.
+    // Only the FILE schema is memoized — the key/partition columns are
+    // stripped before the put, so directory discovery still resolves
+    // partition-column types per read (a memoized ts=3 int must not
+    // cast-corrupt a later ts=5000000000 partition before keyTyped can
+    // pin it) and keyTyped() then casts them to the caller's key types
+    // exactly as the inference path does.
+    // HIT path only: the miss fallback reads the whole entity without
+    // a schema, so a degenerate/emptied entity directory raises the
+    // same entity-absent error as the unkeyed read (a memoized schema
+    // would silently turn that into an empty frame).
+    val ck = s"$root/$entity"
+    val gen0 = genOf(ck)
+    val memo = if (hit) Option(schemaCache.get(ck)) else None
+    val df =
+      if (hit) {
+        val r = spark.read
+        memo.fold(r)(r.schema).option("basePath", ck).parquet(p.toString)
+      } else
+        keyValues.foldLeft(read(entity, spark)) {
+          case (d, (k, v)) => d.filter(col(k) === lit(v)) }
+    if (hit && memo.isEmpty && genOf(ck) == gen0) {
+      val keyNames = keyValues.map(_._1).toSet
+      schemaCache.put(ck, StructType(
+        df.schema.fields.filterNot(f => keyNames.contains(f.name))))
+    }
+    keyTyped(df)
+  }
 
-  private def genOf(root: String, entity: String): Long =
-    Option(generation.get(s"$root/$entity")).map(_.longValue).getOrElse(0L)
+  /** Direct single-partition keyed overwrite ([[Store.writeKeyed]]'s
+    * contract): delete the key's directory, then land `df`'s rows
+    * (minus the key columns — they live in the path, exactly where
+    * partitionBy puts them) straight into it as ONE file. Against the
+    * generic dynamic-overwrite write() this removes, per request, the
+    * keys-hash exchange (a chip's rows all hash to one of
+    * shuffle.partitions anyway), the staging-directory commit walk, and
+    * the full-entity listing — the per-chip write becomes one task plus
+    * one directory rename. Key order honors an existing layout
+    * (orderedKeys); a fresh entity lands in the caller's `keys` order,
+    * matching write(). */
+  override def writeKeyed(entity: String, df: DataFrame,
+      keys: Seq[String], keyValues: Seq[(String, Any)]): Unit = {
+    require(keys.toSet == keyValues.map(_._1).toSet,
+      s"writeKeyed keys $keys must match keyValues ${keyValues.map(_._1)}")
+    invalidate(entity)
+    val kv = keyValues.toMap
+    val p = partPath(entity, keys.map(k => k -> kv(k)))
+    val fs = p.getFileSystem(new Configuration())
+    fs.delete(p, true) // delete-before-write (S12), idempotent
+    df.drop(keys: _*)
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(p.toString)
+    // an all-empty df may leave only commit markers; drop them so the
+    // key reads as ABSENT (the ordinary GET-miss path)
+    if (!holdsData(p)) fs.delete(p, true)
+    // post-write invalidate: a concurrent read that overlapped this
+    // write must not leave a pre-write schema/order memo behind
+    invalidate(entity)
+  }
+
+  override def delete(entity: String,
+      keyValues: Seq[(String, Any)]): Unit = {
+    val p = partPath(entity, keyValues)
+    p.getFileSystem(new Configuration()).delete(p, true)
+    () // delete returns false when absent — idempotent by contract
+  }
+
+  private def genOf(ck: String): Long =
+    Option(generation.get(ck)).map(_.longValue).getOrElse(0L)
 
   /** Writers call this around (re)writes of an entity — BEFORE the
     * write (the layout/schema are about to change) and AFTER it lands
@@ -116,35 +213,34 @@ private[store] object PartitionedDelete {
     * memo from the old files): a rewrite may change the partition-key
     * order (and the file schema), so both are re-learned on the next
     * keyed access. */
-  def invalidate(root: String, entity: String): Unit = {
-    generation.merge(s"$root/$entity", 1L,
+  private def invalidate(entity: String): Unit = {
+    val ck = s"$root/$entity"
+    generation.merge(ck, 1L,
       (a: java.lang.Long, b: java.lang.Long) => a + b)
-    orderCache.remove(s"$root/$entity")
-    schemaCache.keys().asIterator().forEachRemaining { k =>
-      if (k.startsWith(s"$root/$entity@")) schemaCache.remove(k)
-    }
+    orderCache.remove(ck)
+    schemaCache.remove(ck)
   }
 
-  /** Key values reordered to the on-disk partition-key order (layout
-    * discovery + cache as described above); falls back to the
-    * caller's order when the entity is absent or unpartitioned. */
-  private[store] def orderedKeys(root: String, entity: String,
+  /** Key values reordered to the on-disk partition-key order. The order
+    * is discovered from the layout (the `k=` level names), not trusted
+    * from the caller: a caller passing `Seq(cy -> .., cx -> ..)` against
+    * a `cx/cy` layout must address the same partition, not silently
+    * no-op on a nonexistent path. Falls back to the caller's order when
+    * the entity is absent or unpartitioned. */
+  private def orderedKeys(entity: String,
       keyValues: Seq[(String, Any)]): Seq[(String, Any)] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val base = new org.apache.hadoop.fs.Path(s"$root/$entity")
-    val fs = base.getFileSystem(conf)
+    val base = new Path(s"$root/$entity")
+    val fs = base.getFileSystem(new Configuration())
     val kv = keyValues.toMap
     // find a COMPLETE depth-|keys| partition chain to learn the key
     // order — a single-path walk can dead-end in an empty parent dir a
     // prior delete left behind and silently fall back to the wrong
     // order; searching siblings makes discovery robust to that litter.
-    // Falls back to the caller's order when the entity is absent or
-    // unpartitioned. NonFatal (not just IOException): a connector or
-    // filesystem throwing RuntimeException during the discovery WALK
-    // must degrade to caller order, not escape a delete() that never
-    // listed directories before.
-    def chainOrder(dir: org.apache.hadoop.fs.Path,
-        remaining: Int): Option[List[String]] =
+    // NonFatal (not just IOException): a filesystem throwing
+    // RuntimeException during the discovery WALK must degrade to
+    // caller order, not escape a delete() that never listed
+    // directories before.
+    def chainOrder(dir: Path, remaining: Int): Option[List[String]] =
       if (remaining == 0) Some(Nil)
       else {
         val kids = try fs.listStatus(dir).toList.filter(st =>
@@ -155,13 +251,12 @@ private[store] object PartitionedDelete {
             .map(st.getPath.getName.takeWhile(_ != '=') :: _)
         }.nextOption()
       }
-    val cacheKey = s"$root/$entity"
-    val cached = Option(orderCache.get(cacheKey))
-      .filter(_.toSet == kv.keySet)
+    val ck = s"$root/$entity"
+    val cached = Option(orderCache.get(ck)).filter(_.toSet == kv.keySet)
     cached.map(_.map(k => k -> kv(k))).getOrElse {
       chainOrder(base, kv.size) match {
         case Some(o) if kv.keySet == o.toSet =>
-          orderCache.put(cacheKey, o)
+          orderCache.put(ck, o)
           o.map(k => k -> kv(k))
         case _ => keyValues
       }
@@ -177,445 +272,60 @@ private[store] object PartitionedDelete {
     * silently fall back to the full-scan path (losing the O(1)
     * contract) and delete no-op on a nonexistent path (breaking
     * delete-before-write idempotency). Numeric keys are unaffected. */
-  private def partPath(root: String, entity: String,
-      keyValues: Seq[(String, Any)]): org.apache.hadoop.fs.Path = {
-    val part = orderedKeys(root, entity, keyValues)
+  private def partPath(entity: String,
+      keyValues: Seq[(String, Any)]): Path = {
+    val part = orderedKeys(entity, keyValues)
       .map { case (k, v) =>
         s"$k=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName(String.valueOf(v))}" }
       .mkString("/")
-    new org.apache.hadoop.fs.Path(s"$root/$entity/$part")
+    new Path(s"$root/$entity/$part")
   }
 
-  def apply(root: String, entity: String,
-      keyValues: Seq[(String, Any)]): Unit = {
-    val p = partPath(root, entity, keyValues)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.delete(p, true)
-    () // delete returns false when absent — idempotent by contract
-  }
-
-  /** Key-addressed read for the partitioned layouts: resolve the key
-    * to its partition directory and list ONLY that — one directory
-    * listing per request regardless of how many keys the entity
-    * holds (the reference's per-key GET, ceph.py:125-129). `basePath`
-    * keeps the partition columns in the result.
-    *
-    * Schema stability: partition-column TYPES are inferred from the
-    * directory names a read can see, so a single-partition listing
-    * could infer differently than the full listing (ts=3 alone reads
-    * int; alongside ts=5e9 it reads long). Both the hit and the miss
-    * path therefore cast each key column to the CALLER's key-value
-    * type — a keyed read's schema is deterministic in the call, never
-    * in which partitions happen to exist. A missing partition falls
-    * back to the filtered full read: same zero rows (or the same
-    * entity-absent error) as the unkeyed path. */
-  def read(root: String, entity: String, keyValues: Seq[(String, Any)],
-      spark: SparkSession, fmt: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def dtOf(v: Any): Option[String] = v match {
-      case _: Long | _: java.lang.Long => Some("bigint")
-      case _: Int | _: java.lang.Integer => Some("int")
-      case _: Short | _: java.lang.Short => Some("smallint")
-      case _: String => Some("string")
-      case _: Double | _: java.lang.Double => Some("double")
-      case _: Boolean | _: java.lang.Boolean => Some("boolean")
-      case _ => None // unknown key type: leave the inferred column
-    }
-    def keyTyped(df: DataFrame): DataFrame =
-      keyValues.foldLeft(df) { case (d, (k, v)) =>
-        dtOf(v).fold(d)(t => d.withColumn(k, col(k).cast(t))) }
-    val p = partPath(root, entity, keyValues)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val exists = try fs.exists(p)
-      catch { case scala.util.control.NonFatal(_) => false }
-    // schema memo (see schemaCache above): the first keyed read infers
-    // and remembers, every later one skips the per-request footer read.
-    // Only the FILE schema is memoized — the key/partition columns are
-    // stripped before the put, so directory discovery still resolves
-    // partition-column types per read (a memoized ts=3 int must not
-    // cast-corrupt a later ts=5000000000 partition before keyTyped can
-    // pin it) and keyTyped() then casts them to the caller's key types
-    // exactly as the inference path does.
-    // parquet only: its footer schema is uniform across partitions by
-    // construction. A JSON partition's inferred schema is data-shaped
-    // (an all-null field vanishes), so memoizing one partition's view
-    // could narrow another's — the JSON store keeps per-read inference.
-    // HIT path only: the miss fallback reads the whole entity without
-    // a schema, so a degenerate/emptied entity directory raises the
-    // same entity-absent error as the unkeyed read (a memoized schema
-    // would silently turn that into an empty frame).
-    val ck = s"$root/$entity@$fmt"
-    val gen0 = genOf(root, entity)
-    val memo =
-      if (exists && fmt == "parquet") Option(schemaCache.get(ck)) else None
-    def reader() = {
-      val r = spark.read
-      memo.fold(r)(r.schema)
-    }
-    val df =
-      if (exists)
-        reader().option("basePath", s"$root/$entity")
-          .format(fmt).load(p.toString)
-      else
-        keyValues.foldLeft(
-          spark.read.format(fmt).load(s"$root/$entity")) {
-          case (d, (k, v)) => d.filter(col(k) === lit(v)) }
-    if (exists && memo.isEmpty && fmt == "parquet" &&
-        genOf(root, entity) == gen0) {
-      val keyNames = keyValues.map(_._1).toSet
-      schemaCache.put(ck, org.apache.spark.sql.types.StructType(
-        df.schema.fields.filterNot(f => keyNames.contains(f.name))))
-    }
-    keyTyped(df)
-  }
-
-  /** Direct single-partition keyed overwrite for the partitioned
-    * layouts ([[Store.writeKeyed]]'s contract): delete the key's
-    * directory, then land `df`'s rows (minus the key columns — they
-    * live in the path, exactly where partitionBy puts them) straight
-    * into it as ONE file. Against the generic dynamic-overwrite
-    * write() this removes, per request, the keys-hash exchange (a
-    * chip's rows all hash to one of shuffle.partitions anyway), the
-    * staging-directory commit walk, and the full-entity listing —
-    * the per-chip write becomes one task plus one directory rename.
-    * Key order honors an existing layout (orderedKeys); a fresh
-    * entity lands in the caller's `keys` order, matching write(). */
-  def writeKeyed(root: String, entity: String, df: DataFrame,
-      keys: Seq[String], keyValues: Seq[(String, Any)], fmt: String,
-      options: Map[String, String]): Unit = {
-    require(keys.toSet == keyValues.map(_._1).toSet,
-      s"writeKeyed keys $keys must match keyValues ${keyValues.map(_._1)}")
-    invalidate(root, entity)
-    val kv = keyValues.toMap
-    val p = partPath(root, entity, keys.map(k => k -> kv(k)))
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.delete(p, true) // delete-before-write (S12), idempotent
-    df.drop(keys: _*)
-      .coalesce(1)
-      .write.format(fmt).options(options)
-      .mode("overwrite").save(p.toString)
-    // an all-empty df writes no data file; drop the bare marker dir so
-    // the key reads as ABSENT (the ordinary GET-miss path) instead of
-    // an unreadable empty directory
-    val bare = try !fs.listStatus(p).exists(st =>
-        !st.getPath.getName.startsWith("_"))
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (bare) fs.delete(p, true)
-    // post-write invalidate: a concurrent read that overlapped this
-    // write must not leave a pre-write schema/order memo behind
-    invalidate(root, entity)
+  /** Whether a key directory holds data: an entry whose name starts
+    * with neither `_` nor `.` (the names Spark's file listing skips).
+    * An absent directory, bare commit markers, `.crc` sidecars, or a
+    * crashed commit's `_temporary/` tree alone hold none, so such a key
+    * reads as a GET miss instead of failing schema inference. One
+    * listing — the single filesystem call an `exists` test would cost.
+    * Any listing failure other than absence propagates. */
+  private def holdsData(dir: Path): Boolean = {
+    val fs = dir.getFileSystem(new Configuration())
+    try fs.listStatus(dir).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    } catch { case _: java.io.FileNotFoundException => false }
   }
 }
 
-final class ParquetStore(root: String) extends Store {
-  import org.apache.spark.sql.functions.col
+private object ParquetStore {
 
-  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
-    PartitionedDelete.invalidate(root, entity)
-    df.repartition(keys.map(col): _*)
-      .write
-      .partitionBy(keys: _*)
-      .option("partitionOverwriteMode", "dynamic") // S12: overwrite == delete+insert
-      .mode("overwrite")
-      .parquet(s"$root/$entity")
-    PartitionedDelete.invalidate(root, entity)
-  }
+  // discovered key order per (root, entity): the layout is fixed at
+  // write time, so one successful directory walk serves every later
+  // keyed call — keeping keyed delete O(1) after the first call instead
+  // of a sibling-directory search per call
+  private val orderCache =
+    new java.util.concurrent.ConcurrentHashMap[String, List[String]]()
 
-  override def read(entity: String, spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$root/$entity")
+  // per-(root, entity) FILE schema memo for keyed reads: a tile of
+  // prediction requests is thousands of keyed point reads against one
+  // unchanging entity, and each un-memoized read re-infers the schema
+  // (a driver-side footer read + file listing per REQUEST — pure
+  // driver work that serializes the job queue's worker pool; guide
+  // §5). One inference per entity serves every later keyed read; any
+  // write through the store invalidates. Parquet footers agree across
+  // partitions, so one partition's file schema serves them all.
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  override def readKeyed(entity: String, keyValues: Seq[(String, Any)],
-      spark: SparkSession): DataFrame =
-    PartitionedDelete.read(root, entity, keyValues, spark, "parquet")
-
-  override def writeKeyed(entity: String, df: DataFrame,
-      keys: Seq[String], keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete.writeKeyed(root, entity, df, keys, keyValues,
-      "parquet", Map.empty)
-
-  override def delete(entity: String,
-      keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete(root, entity, keyValues)
-}
-
-/** Range-clustered variant: rows are range-partitioned and sorted on
-  * `clusterKeys` at write time, so every output file covers a DISJOINT
-  * key range and parquet's per-row-group min/max statistics become
-  * selective — a pushed range predicate (a time window over an event
-  * log, an id range over a corpus) skips whole row groups and files at
-  * scan time instead of reading and discarding. This is the data-LAYOUT
-  * lever at 100 TB: bucketing (BucketedStore) buys exchange-free joins
-  * on the key; clustering buys scan-time skipping on the range
-  * dimension — the Spark-native form of the clustering/Z-order step
-  * warehouse engines run after load. `rangeFiles` bounds files per
-  * write (the range exchange samples keys, so files are
-  * evenly-populated, not key-skewed).
-  */
-final class ClusteredParquetStore(root: String, clusterKeys: Seq[String],
-    rangeFiles: Int = 32) extends Store {
-  import org.apache.spark.sql.functions.col
-
-  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
-    PartitionedDelete.invalidate(root, entity)
-    df.repartitionByRange(rangeFiles, clusterKeys.map(col): _*)
-      .sortWithinPartitions((keys ++ clusterKeys).map(col): _*)
-      .write
-      .partitionBy(keys: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$root/$entity")
-    PartitionedDelete.invalidate(root, entity)
-  }
-
-  override def read(entity: String, spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$root/$entity")
-
-  override def readKeyed(entity: String, keyValues: Seq[(String, Any)],
-      spark: SparkSession): DataFrame =
-    PartitionedDelete.read(root, entity, keyValues, spark, "parquet")
-
-  override def delete(entity: String,
-      keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete(root, entity, keyValues)
-}
-
-/** Z-order (Morton) clustered variant: rows sort on the BIT-INTERLEAVE
-  * of two integer dimensions before landing, so every file's (x, y)
-  * min/max envelope is a tight square-ish tile instead of a stripe.
-  * This is the 2-D layout lever the chip grid needs (the reference
-  * addresses everything by chip x/y — ref: blackmagic/blueprints/
-  * segment.py's chip-keyed reads): a bounding-box query
-  * `x BETWEEN a AND b AND y BETWEEN c AND d` prunes files/row groups
-  * on BOTH dimensions simultaneously, where 1-D clustering
-  * (ClusteredParquetStore on x) gives stripes that always span the
-  * full y range — selective boxes degrade to reading every stripe the
-  * x range touches. StoreSpec measures the difference: on a 128×128
-  * grid in 64 files, a 16×16 box intersects ≤3 z-tiles vs all 8
-  * x-stripes. The interleave column is write-time only (dropped before
-  * landing); reads stay plain parquet scans with pushed x/y filters
-  * doing stat-based skipping.
-  */
-final class ZOrderStore(root: String, xCol: String, yCol: String,
-    rangeFiles: Int = 32, bits: Int = 16) extends Store {
-  import org.apache.spark.sql.functions.col
-
-  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
-    PartitionedDelete.invalidate(root, entity)
-    df.withColumn("_z", ZOrderStore.interleave(col(xCol), col(yCol), bits))
-      .repartitionByRange(rangeFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write
-      .partitionBy(keys: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$root/$entity")
-    PartitionedDelete.invalidate(root, entity)
-  }
-
-  override def read(entity: String, spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$root/$entity")
-
-  override def readKeyed(entity: String, keyValues: Seq[(String, Any)],
-      spark: SparkSession): DataFrame =
-    PartitionedDelete.read(root, entity, keyValues, spark, "parquet")
-
-  override def delete(entity: String,
-      keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete(root, entity, keyValues)
-}
-
-object ZOrderStore {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{shiftleft, shiftright, lit}
-
-  /** Morton code of two non-negative integer columns: bit i of x lands
-    * at position 2i, bit i of y at 2i+1 — a pure codegen'd shift/mask
-    * fold, no UDF. `bits` per dimension (≤ 31: the result stays in a
-    * positive long). */
-  def interleave(x: Column, y: Column, bits: Int): Column = {
-    require(bits >= 1 && bits <= 31, s"bits $bits")
-    (0 until bits).map { i =>
-      shiftleft(shiftright(x.cast("long"), i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(shiftleft(
-          shiftright(y.cast("long"), i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-  }
-}
-
-/** Bucketed variant: rows are hash-bucketed (and sorted) on the key
-  * columns at write time, so two entities written with the same keys
-  * and bucket count join WITHOUT a shuffle — the physical layout
-  * carries the partitioning. This is the 100 TB answer to the
-  * segments ⋈ aux join (J1): at tile scale neither side broadcasts,
-  * and bucketing both tables on (cx, cy, px, py) makes the repeated
-  * train/predict joins exchange-free forever after one write.
-  *
-  * Bucketed output requires the table catalog (`saveAsTable`); the
-  * data itself lands as ordinary parquet under `root/entity`.
-  *
-  * Concurrency contract: within one JVM, writes/deletes to the same
-  * (root, entity) serialize on a companion-object lock shared by ALL
-  * instances; ACROSS JVMs the read-merge-rewrite has no coordination,
-  * so this store requires a single writing driver per entity.
-  *
-  * Keyed point reads: the default `readKeyed` (read + equality
-  * filters) gets Spark's BUCKET pruning — 1 of N bucket groups
-  * scanned — provided the session sets
-  * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`
-  * (the heuristic otherwise drops the bucketed scan on filter-only
-  * plans, and the pruning with it). StoreSpec pins the pruned plan.
-  */
-final class BucketedStore(root: String, buckets: Int) extends Store {
-  import BucketedStore.{entityKeys, lockFor}
-
-  // the catalog table name carries the ROOT (hashed — table names are
-  // identifier-restricted): named by entity alone, two instances with
-  // different roots but the same entity name would mutate and repoint
-  // ONE shared catalog table, silently orphaning the earlier root's
-  // data. With root in the name, the (root, entity) lock scope matches
-  // the named resource exactly.
-  private def table(entity: String) = {
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(root))
-    s"graft_bkt_${h}_$entity"
-  }
-
-  // session of the most recent write/read through this instance, so
-  // delete() — whose trait signature carries no session — resolves
-  // the SAME session the entity was written with instead of trusting
-  // SparkSession.active under a multi-session driver
-  @transient @volatile private var lastSession: SparkSession = _
-
-  /** S12 keyed overwrite. Bucketed files interleave keys, so this is a
-    * merge: drop the incoming keys from the current table (anti-join on
-    * the key columns), union the new rows, rewrite. localCheckpoint
-    * truncates lineage so the rewrite never reads the table it
-    * replaces. The rewrite cost is the bucketed trade-off — this store
-    * is for scan-heavy join entities, not upsert-churn ones, and the
-    * read-merge-rewrite makes it SINGLE-WRITER per entity (the
-    * partitioned stores take concurrent writers on distinct keys;
-    * JobQueue's parallel dispatch assumes those). */
-  // the read-merge-rewrite below is lost-update-prone under concurrent
-  // writers (both read, both rewrite, last overwrite wins — silently
-  // dropping the other's rows with ok=true upstream), so writes to the
-  // SAME (root, entity) serialize on a JVM-wide monitor shared by ALL
-  // BucketedStore instances pointing at that root (companion-object
-  // map — two instances over one directory still serialize). Distinct
-  // entities still write in parallel; JobQueue's parallelism=4 default
-  // is safe against this store instead of relying on a documented
-  // assumption. The lock scope is ONE JVM: across drivers this store
-  // requires a single writer per entity (see class doc).
-  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit =
-    lockFor(root, entity).synchronized {
-      import org.apache.spark.sql.functions.col
-      val spark = df.sparkSession
-      lastSession = spark
-      val toWrite = if (spark.catalog.tableExists(table(entity))) {
-        read(entity, spark)
-          .join(df.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          .unionByName(df)
-          .localCheckpoint(true)
-      } else df
-      rawWrite(entity, toWrite, keys)
-    }
-
-  private def rawWrite(entity: String, df: DataFrame,
-      keys: Seq[String]): Unit = {
-    entityKeys.put(s"$root/$entity", keys)
-    df.write
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", s"$root/$entity")
-      .mode("overwrite")
-      .saveAsTable(table(entity))
-  }
-
-  override def read(entity: String, spark: SparkSession): DataFrame = {
-    lastSession = spark
-    spark.table(table(entity))
-  }
-
-  /** Bucketed layout trades keyed delete for exchange-free joins: rows
-    * of one key live inside shared bucket files, so delete is a
-    * filtered rewrite of the entity. localCheckpoint truncates lineage
-    * so the overwrite doesn't read the table it replaces. Use the
-    * partitioned stores where frequent keyed deletes matter; bucketing
-    * is for the scan-heavy join tables. */
-  override def delete(entity: String,
-      keyValues: Seq[(String, Any)]): Unit =
-    // same read-rewrite race as write(): serialize per (root, entity)
-    lockFor(root, entity).synchronized {
-      import org.apache.spark.sql.functions.{col, lit, not}
-      // the session this instance last wrote/read with; .active only
-      // as a first-use fallback (delete before any write/read)
-      val spark = Option(lastSession).getOrElse(SparkSession.active)
-      val cur = read(entity, spark)
-      val hit = keyValues.map { case (k, v) => col(k) === lit(v) }
-        .reduce(_ && _)
-      val keep = cur.filter(not(hit)).localCheckpoint(true)
-      val keys = entityKeys
-        .getOrDefault(s"$root/$entity", keyValues.map(_._1))
-      rawWrite(entity, keep, keys)
-    }
-}
-
-object BucketedStore {
-  // shared across ALL instances in this JVM so two BucketedStores over
-  // the same root can't race the read-merge-rewrite; cross-JVM the
-  // store is single-writer-per-entity by contract
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def lockFor(root: String, entity: String): Object =
-    locks.computeIfAbsent(s"$root/$entity", _ => new Object)
-
-  // bucket columns of the last write per (root, entity), so delete's
-  // rewrite preserves the entity's layout even when deleting by a key
-  // subset — shared for the same multi-instance reason as the locks
-  private val entityKeys =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-}
-
-/** Gzipped-JSON variant mirroring the reference's storage codec
-  * byte-for-byte in spirit (one gzip JSON object set per key partition,
-  * ceph.py:297-333); parquet remains the performance default — this
-  * exists for interop with consumers of the reference's layout.
-  */
-final class JsonStore(root: String) extends Store {
-  import org.apache.spark.sql.functions.col
-
-  override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
-    PartitionedDelete.invalidate(root, entity)
-    df.repartition(keys.map(col): _*)
-      .write
-      .partitionBy(keys: _*)
-      .option("compression", "gzip")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .json(s"$root/$entity")
-    PartitionedDelete.invalidate(root, entity)
-  }
-
-  override def read(entity: String, spark: SparkSession): DataFrame =
-    spark.read.json(s"$root/$entity")
-
-  /** Partition-scoped GET like the parquet stores. Caveat inherent to
-    * JSON: schema inference sees only this partition's objects, so a
-    * column absent from every object AT THIS KEY is absent from the
-    * frame (the full read infers over all keys). The serving path
-    * reads fixed-schema entities, where the two agree. */
-  override def readKeyed(entity: String, keyValues: Seq[(String, Any)],
-      spark: SparkSession): DataFrame =
-    PartitionedDelete.read(root, entity, keyValues, spark, "json")
-
-  override def writeKeyed(entity: String, df: DataFrame,
-      keys: Seq[String], keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete.writeKeyed(root, entity, df, keys, keyValues,
-      "json", Map("compression" -> "gzip"))
-
-  override def delete(entity: String,
-      keyValues: Seq[(String, Any)]): Unit =
-    PartitionedDelete(root, entity, keyValues)
+  // per-(root, entity) write generation: a keyed read that was IN
+  // FLIGHT while a rewrite ran must never (re)populate schemaCache
+  // with the pre-rewrite schema — writers bump the generation before
+  // AND after the write, and a read only memoizes when the generation
+  // it started under is still current. Without this, a mid-rewrite
+  // read could repopulate the cache right after the writer's
+  // invalidate and every later keyed read would replay the stale
+  // schema (silently dropping columns the rewrite added).
+  private val generation =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 }

@@ -18,7 +18,7 @@ import graft.functions.{TextExprs => T}
   * the dedup, whose state is bounded by the watermark horizon — at
   * 100 TB/day the store holds one horizon's content keys, not the
   * stream's history. The sink appends via the exactly-once file-sink
-  * protocol (or any [[graft.store.Connector]] through foreachBatch).
+  * protocol (or a [[graft.store.Store]] write through foreachBatch).
   */
 object IngestStream {
 

@@ -3,128 +3,35 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.store.{BucketedStore, ClusteredParquetStore, ConnectorStore,
-  InMemoryConnector, JsonStore, KeyedApi, ParquetStore, Store, ZOrderStore}
+import graft.store.ParquetStore
 
-/** Keyed store contracts (S6/S12/S13): dynamic partition overwrite
-  * replaces delete+insert per key, other keys' partitions survive, and
-  * the gzip-JSON codec round-trips.
+/** Keyed store contracts (S6/S12/S13) on ParquetStore, the one store:
+  * dynamic partition overwrite replaces delete+insert per key, other
+  * keys' partitions survive, keyed reads list only their own partition,
+  * and a keyed commit that dies after its delete reads as a GET miss.
   */
 class StoreSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  test("dynamic partition overwrite rewrites only the written key") {
-    val store = new ParquetStore(
-      Files.createTempDirectory("graft-store-spec").toString)
-    val v1 = Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("cx", "cy", "v")
-    store.write("seg", v1, Seq("cx", "cy"))
-    // re-write ONLY chip (1, 10) with a new value
-    val v2 = Seq((1L, 10L, "a2")).toDF("cx", "cy", "v")
-    store.write("seg", v2, Seq("cx", "cy"))
-    val got = store.read("seg", spark)
-      .select($"cx", $"v").as[(Long, String)].collect().toSet
-    // chip 1 replaced (S12 delete+insert), chip 2 untouched
-    assert(got == Set((1L, "a2"), (2L, "b")))
-  }
-
-  test("gzip JSON store round-trips records and compresses files") {
-    val root = Files.createTempDirectory("graft-json-spec").toString
-    val store = new JsonStore(root)
-    val df = (1 to 50).map(i => (i % 3L, i.toLong, s"text $i"))
-      .toDF("cx", "id", "body")
-    store.write("chip", df, Seq("cx"))
-    val back = store.read("chip", spark)
-    assert(back.count() == 50)
-    assert(back.agg(sum($"id")).as[Long].head() == (1 to 50).sum)
-    // the codec actually wrote gzip members
-    val files = Files.walk(java.nio.file.Paths.get(root))
-      .toArray.map(_.toString).filter(_.endsWith(".gz"))
-    assert(files.nonEmpty)
-  }
-
-  // S12/S13 parity across every Store implementation, including the
-  // connector-shaped one (ref: blackmagic/data/__init__.py:13-70):
-  // keyed overwrite replaces only its key, explicit keyed delete drops
-  // only its key and is idempotent on absent keys.
+  // S12/S13 parity with the reference's storage interface (ref:
+  // blackmagic/data/__init__.py:13-70): keyed overwrite replaces only
+  // its key, explicit keyed delete drops only its key and is
+  // idempotent on absent keys.
   test("keyed upsert/delete parity holds across all store impls") {
-    val tmp = Files.createTempDirectory("graft-parity").toString
-    val stores: Seq[(String, Store)] = Seq(
-      "parquet" -> new ParquetStore(s"$tmp/pq"),
-      "json" -> new JsonStore(s"$tmp/js"),
-      "bucketed" -> new BucketedStore(s"$tmp/bk", buckets = 4),
-      "connector" -> new ConnectorStore(new InMemoryConnector),
-      "clustered" -> new ClusteredParquetStore(s"$tmp/cl", Seq("cy"),
-        rangeFiles = 2))
-    stores.foreach { case (name, store) =>
-      val v1 = Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("cx", "cy", "v")
-      store.write("par", v1, Seq("cx", "cy"))
-      store.write("par", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
-        Seq("cx", "cy"))
-      def got = store.read("par", spark)
-        .select($"cx".cast("long"), $"v").as[(Long, String)].collect().toSet
-      assert(got == Set((1L, "a2"), (2L, "b")), s"[$name] upsert")
-      store.delete("par", Seq("cx" -> 1L, "cy" -> 10L))
-      assert(got == Set((2L, "b")), s"[$name] delete")
-      store.delete("par", Seq("cx" -> 1L, "cy" -> 10L)) // re-delete
-      store.delete("par", Seq("cx" -> 99L, "cy" -> 99L)) // absent key
-      assert(got == Set((2L, "b")), s"[$name] idempotent delete")
-    }
-  }
-
-  test("the 15-method keyed API mirrors the reference storage interface") {
-    val api = new KeyedApi(new ConnectorStore(new InMemoryConnector), spark)
-    api.setup(); api.start()
-    api.insertTile(Seq((7L, 9L, Array[Byte](1, 2, 3)))
-      .toDF("tx", "ty", "model"))
-    api.insertChip(Seq((1L, 10L, "c")).toDF("cx", "cy", "dates"))
-    api.insertPixels(Seq((1L, 10L, 5L)).toDF("cx", "cy", "px"))
-    api.insertSegments(Seq((1L, 10L, 0.5)).toDF("cx", "cy", "coef"))
-    api.insertPredictions(Seq((1L, 10L, 0.9)).toDF("cx", "cy", "prob"))
-    assert(api.selectTile(7, 9).count() == 1)
-    assert(api.selectTile(7, 8).count() == 0) // partition-addressed
-    assert(api.selectChip(1, 10).count() == 1)
-    assert(api.selectPixels(1, 10).count() == 1)
-    assert(api.selectSegments(1, 10).count() == 1)
-    assert(api.selectPredictions(1, 10).count() == 1)
-    api.deleteTile(7, 9)
-    api.deleteChip(1, 10)
-    api.deletePixels(1, 10)
-    api.deleteSegments(1, 10)
-    api.deletePredictions(1, 10)
-    assert(api.selectTile(7, 9).count() == 0)
-    assert(api.selectChip(1, 10).count() == 0)
-    assert(api.selectPixels(1, 10).count() == 0)
-    assert(api.selectSegments(1, 10).count() == 0)
-    assert(api.selectPredictions(1, 10).count() == 0)
-    api.stop()
-  }
-
-  test("bucketed store joins co-located entities without a shuffle") {
-    val root = Files.createTempDirectory("graft-bkt-spec").toString
-    val store = new BucketedStore(root, buckets = 4)
-    val seg = (1 to 200).map(i => (i.toLong, s"seg $i")).toDF("k", "sv")
-    val aux = (1 to 200).map(i => (i.toLong, i * 2.0)).toDF("k", "av")
-    store.write("seg", seg, Seq("k"))
-    store.write("aux", aux, Seq("k"))
-
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // force the non-broadcast path so the bucket layout (not a
-      // broadcast) is what eliminates the exchange
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val joined = store.read("seg", spark)
-        .join(store.read("aux", spark), "k")
-      assert(joined.count() == 200)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange"),
-        s"bucketed join must not shuffle:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    val store = new ParquetStore(
+      Files.createTempDirectory("graft-parity").toString)
+    val v1 = Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("cx", "cy", "v")
+    store.write("par", v1, Seq("cx", "cy"))
+    store.write("par", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
+      Seq("cx", "cy"))
+    def got = store.read("par", spark)
+      .select($"cx".cast("long"), $"v").as[(Long, String)].collect().toSet
+    assert(got == Set((1L, "a2"), (2L, "b")), "upsert")
+    store.delete("par", Seq("cx" -> 1L, "cy" -> 10L))
+    assert(got == Set((2L, "b")), "delete")
+    store.delete("par", Seq("cx" -> 1L, "cy" -> 10L)) // re-delete
+    store.delete("par", Seq("cx" -> 99L, "cy" -> 99L)) // absent key
+    assert(got == Set((2L, "b")), "idempotent delete")
   }
 
   test("keyed delete honors the layout's key order, not the caller's " +
@@ -156,126 +63,14 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     assert(n == 0L, n.toString)
   }
 
-  test("a bucketed store that has written serializes (locks are " +
-    "transient)") {
-    val tmp = Files.createTempDirectory("graft-bkser").toString
-    val store = new BucketedStore(s"$tmp/bk", buckets = 2)
-    store.write("ser", Seq((1L, "a")).toDF("k", "v"), Seq("k"))
-    val out = new java.io.ObjectOutputStream(
-      new java.io.ByteArrayOutputStream())
-    out.writeObject(store) // must not throw NotSerializableException
-    out.close()
-  }
-
-  test("concurrent bucketed writes to one entity serialize: no lost " +
-    "updates") {
-    val tmp = Files.createTempDirectory("graft-bkconc").toString
-    val store = new BucketedStore(s"$tmp/bk", buckets = 2)
-    store.write("conc", Seq((0L, "seed")).toDF("k", "v"), Seq("k"))
-    // two writers upsert DIFFERENT keys at once; the read-merge-rewrite
-    // must not let one overwrite swallow the other
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val futures = (1L to 2L).map { k =>
-        pool.submit(new Runnable {
-          def run(): Unit =
-            store.write("conc", Seq((k, s"w$k")).toDF("k", "v"), Seq("k"))
-        })
-      }
-      futures.foreach(_.get())
-    } finally pool.shutdown()
-    val got = store.read("conc", spark)
-      .select($"k".cast("long")).as[Long].collect().toSet
-    assert(got == Set(0L, 1L, 2L), got.toString)
-  }
-
-  test("clustered store writes disjoint time-range files and the range " +
-    "predicate reaches the scan") {
-    val tmp = Files.createTempDirectory("graft-clustered").toString
-    val store = new ClusteredParquetStore(s"$tmp/cl", Seq("ts"),
-      rangeFiles = 8)
-    store.write("events",
-      Tables(spark, "/root/testdata/sf0.001", "events"), Seq.empty)
-    val files = store.read("events", spark).inputFiles
-    assert(files.length >= 4, files.length.toString)
-    // per-file min/max ts pairwise disjoint — the row-group-stat
-    // precondition that lets a pushed time predicate skip whole files
-    val ranges = files.toSeq.map { f =>
-      val r = spark.read.parquet(f)
-        .agg(min($"ts").cast("long"), max($"ts").cast("long")).head()
-      (r.getLong(0), r.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq((_, hi), (lo2, _)) => assert(hi <= lo2, ranges.toString)
-      case _ => ()
-    }
-    // and the time filter is pushed into the parquet scan
-    val q = store.read("events", spark)
-      .filter($"ts" >= lit("2024-01-10").cast("timestamp"))
-    q.collect()
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(ts), " +
-      "GreaterThanOrEqual(ts"), plan)
-  }
-
-  test("z-order store: 2-D box touches few tight tiles where 1-D " +
-    "clustering must read every x-stripe; results identical") {
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-zorder").toString
-    val grid = (for (x <- 0 until 128; y <- 0 until 128)
-      yield (x.toLong, y.toLong, x * 128L + y)).toDF("cx", "cy", "v")
-    val zs = new ZOrderStore(s"$tmp/z", "cx", "cy", rangeFiles = 64,
-      bits = 8)
-    val ls = new ClusteredParquetStore(s"$tmp/l", Seq("cx"),
-      rangeFiles = 64)
-    zs.write("grid", grid, Seq.empty)
-    ls.write("grid", grid, Seq.empty)
-    val box = ($"cx" >= 32 && $"cx" <= 47 && $"cy" >= 32 && $"cy" <= 47)
-    // same answer through both layouts
-    val zRes = zs.read("grid", spark).filter(box)
-      .orderBy($"cx", $"cy").collect().map(_.getLong(2)).toSeq
-    val lRes = ls.read("grid", spark).filter(box)
-      .orderBy($"cx", $"cy").collect().map(_.getLong(2)).toSeq
-    assert(zRes === lRes && zRes.length == 256)
-    // candidate files = those whose per-file (cx, cy) envelope
-    // intersects the box — what stat-based row-group skipping keeps
-    def candidates(files: Array[String]): Int = files.count { f =>
-      val r = spark.read.parquet(f)
-        .agg(min($"cx"), max($"cx"), min($"cy"), max($"cy")).head()
-      r.getLong(1) >= 32 && r.getLong(0) <= 47 &&
-        r.getLong(3) >= 32 && r.getLong(2) <= 47
-    }
-    val zc = candidates(zs.read("grid", spark).inputFiles)
-    val lc = candidates(ls.read("grid", spark).inputFiles)
-    // 64 files over a 128x128 grid: every file holds 256 rows. The
-    // 16x16 box is one aligned 256-cell z-block -> <=3 z-tiles; the
-    // x-stripes each span full cy, so ALL 8 stripes in the x range
-    // qualify
-    assert(zc <= 3, s"z-order candidates $zc")
-    assert(lc >= 8, s"x-stripe candidates $lc")
-    // and both box predicates are pushed into the parquet scan
-    // (read the scan node's metadata — the plan toString truncates)
-    val q = zs.read("grid", spark).filter(box)
-    q.collect()
-    val pushed = q.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metadata("PushedFilters")
-      }.get
-    Seq("GreaterThanOrEqual(cx,32)", "LessThanOrEqual(cx,47)",
-      "GreaterThanOrEqual(cy,32)", "LessThanOrEqual(cy,47)")
-      .foreach(p => assert(pushed.contains(p), pushed))
-  }
-
   test("x33's band index persists through Store and a later batch " +
     "probes the persisted table without reshuffling the historical side") {
     import graft.queries.TextOps
     val dir = "/root/testdata/sf0.01"
     val tmp = Files.createTempDirectory("graft-bandix").toString
-    // band table: partitioned by band, range-clustered on the band key
-    // (k-range row-group skipping); signature table clustered on doc_id
-    val bandStore = new ClusteredParquetStore(s"$tmp/bands", Seq("k"))
-    val sigStore = new ClusteredParquetStore(s"$tmp/sigs", Seq("doc_id"))
+    // band table partitioned by band; signature table unpartitioned
+    val bandStore = new ParquetStore(s"$tmp/bands")
+    val sigStore = new ParquetStore(s"$tmp/sigs")
     TextOps.persistDedupIndex(spark, dir, bandStore, sigStore)
     // a "later session": the probe reads ONLY the persisted artifacts
     // for the historical side and must reproduce x33 exactly
@@ -303,7 +98,7 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     import graft.queries.TextOps
     val dir = "/root/testdata/sf0.01"
     val tmp = Files.createTempDirectory("graft-substrix").toString
-    val store = new ClusteredParquetStore(s"$tmp/winhash", Seq("h"))
+    val store = new ParquetStore(s"$tmp/winhash")
     TextOps.persistSubstrIndex(spark, dir, store)
     // a "later session": the probe reads ONLY the persisted hash set
     // for the historical side and must reproduce x134 exactly
@@ -328,7 +123,7 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     import graft.queries.VectorOps
     val dir = "/root/testdata/sf0.01"
     val tmp = Files.createTempDirectory("graft-annbooks").toString
-    val store = new ClusteredParquetStore(s"$tmp/books", Seq("cid"))
+    val store = new ParquetStore(s"$tmp/books")
     VectorOps.persistAnnBooks(spark, dir, store)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "nid", "adc", "rn").collect()
@@ -406,21 +201,6 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
       eGeo.getMessage.contains("geometry"), eGeo.getMessage)
     VectorOps.persistAnnBooks(spark, dir, store,
       cells = 2 * graft.queries.VectorOps.DefaultCells, trainedAt = 1L)
-  }
-
-  test("bucketed stores with different roots and one entity name keep " +
-    "separate catalog tables") {
-    val tmp = Files.createTempDirectory("graft-bkt-roots").toString
-    val a = new BucketedStore(s"$tmp/a", buckets = 2)
-    val b = new BucketedStore(s"$tmp/b", buckets = 2)
-    a.write("ent", Seq((1L, "a")).toDF("k", "v"), Seq("k"))
-    b.write("ent", Seq((2L, "b")).toDF("k", "v"), Seq("k"))
-    // with the catalog table named by entity alone, b's saveAsTable
-    // repoints the shared table and orphans a's data
-    def got(s: BucketedStore) = s.read("ent", spark)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got(a) == Set((1L, "a")), "root a's entity was repointed")
-    assert(got(b) == Set((2L, "b")))
   }
 
   test("incremental ANN corpus: batches encoded against persisted books " +
@@ -1344,66 +1124,33 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("keyed point read scans only its own partition") {
-    val tmp = Files.createTempDirectory("graft-keyed-read").toString
-    val stores: Seq[(String, Store)] = Seq(
-      "parquet" -> new ParquetStore(s"$tmp/pq"),
-      "json" -> new JsonStore(s"$tmp/js"))
-    stores.foreach { case (name, store) =>
-      val df = (0L until 8L).map(k => (k, k * 10, s"v$k"))
-        .toDF("cx", "cy", "v")
-      store.write("seg", df, Seq("cx", "cy"))
-      val one = store.readKeyed("seg", Seq("cx" -> 3L, "cy" -> 30L), spark)
-      // column-identical to the filtered full read, rows identical
-      val full = store.read("seg", spark)
-        .filter($"cx" === 3L && $"cy" === 30L)
-      assert(one.columns.sorted.toSeq == full.columns.sorted.toSeq,
-        s"[$name] schema")
-      assert(one.select($"v").as[String].collect().toSet == Set("v3"),
-        s"[$name] rows")
-      // the O(1) listing: every input file is inside the key's own
-      // partition directory — 7 other partitions never listed/read
-      val files = one.inputFiles
-      assert(files.nonEmpty && files.forall(_.contains("cx=3")),
-        s"[$name] inputFiles: ${files.mkString(", ")}")
-      // caller key order must not matter (layout order is discovered,
-      // same as keyed delete)
-      val rev = store.readKeyed("seg", Seq("cy" -> 30L, "cx" -> 3L), spark)
-      assert(rev.select($"v").as[String].collect().toSet == Set("v3"),
-        s"[$name] reversed key order")
-      assert(rev.inputFiles.forall(_.contains("cx=3")), s"[$name] rev list")
-      // absent key: zero rows, same schema, no error — a GET miss
-      val miss = store.readKeyed("seg", Seq("cx" -> 99L, "cy" -> 0L), spark)
-      assert(miss.count() == 0, s"[$name] miss")
-      assert(miss.columns.sorted.toSeq == full.columns.sorted.toSeq,
-        s"[$name] miss schema")
-    }
-    // non-partitioned impls keep the contract via the default
-    // read+filter (rows identical, just without the listing economy)
-    val mem = new ConnectorStore(new InMemoryConnector)
-    mem.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
-      .toDF("cx", "cy", "v"), Seq("cx", "cy"))
-    assert(mem.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
-      .select($"v").as[String].collect().toSeq == Seq("b"))
-    // the bucketed layout gets its own listing economy: the default
-    // readKeyed's equality filters trigger Spark's BUCKET pruning —
-    // 1 of N bucket groups scanned. autoBucketedScan must be off for
-    // a filter-only plan (Spark's heuristic otherwise drops the
-    // bucketed scan, and with it the pruning) — the conf a serving
-    // deployment over bucketed entities sets (BucketedStore doc).
-    val prevAuto = spark.conf
-      .get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    try {
-      spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      val bkt = new BucketedStore(s"$tmp/bk", buckets = 8)
-      bkt.write("seg", (0L until 64L).map(k => (k, s"v$k"))
-        .toDF("k", "v"), Seq("k"))
-      val one = bkt.readKeyed("seg", Seq("k" -> 7L), spark)
-      assert(one.select($"v").as[String].collect().toSeq == Seq("v7"))
-      val plan = one.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"), plan)
-    } finally spark.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
+    val store = new ParquetStore(
+      Files.createTempDirectory("graft-keyread").toString)
+    val df = (0L until 8L).map(k => (k, k * 10, s"v$k"))
+      .toDF("cx", "cy", "v")
+    store.write("seg", df, Seq("cx", "cy"))
+    val one = store.readKeyed("seg", Seq("cx" -> 3L, "cy" -> 30L), spark)
+    // column-identical to the filtered full read, rows identical
+    val full = store.read("seg", spark)
+      .filter($"cx" === 3L && $"cy" === 30L)
+    assert(one.columns.sorted.toSeq == full.columns.sorted.toSeq, "schema")
+    assert(one.select($"v").as[String].collect().toSet == Set("v3"), "rows")
+    // the O(1) listing: every input file is inside the key's own
+    // partition directory — 7 other partitions never listed/read
+    val files = one.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains("cx=3")),
+      s"inputFiles: ${files.mkString(", ")}")
+    // caller key order must not matter (layout order is discovered,
+    // same as keyed delete)
+    val rev = store.readKeyed("seg", Seq("cy" -> 30L, "cx" -> 3L), spark)
+    assert(rev.select($"v").as[String].collect().toSet == Set("v3"),
+      "reversed key order")
+    assert(rev.inputFiles.forall(_.contains("cx=3")), "rev list")
+    // absent key: zero rows, same schema, no error — a GET miss
+    val miss = store.readKeyed("seg", Seq("cx" -> 99L, "cy" -> 0L), spark)
+    assert(miss.count() == 0, "miss")
+    assert(miss.columns.sorted.toSeq == full.columns.sorted.toSeq,
+      "miss schema")
   }
 
   // Store.writeKeyed: the single-partition keyed commit must be
@@ -1413,48 +1160,42 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
   test("writeKeyed lands one key partition with write()'s observable " +
     "state and leaves every other key untouched") {
     val tmp = Files.createTempDirectory("graft-writekeyed").toString
-    val stores: Seq[(String, Store)] = Seq(
-      "parquet" -> new ParquetStore(s"$tmp/pq"),
-      "json" -> new JsonStore(s"$tmp/js"))
-    stores.foreach { case (name, store) =>
-      // seed the entity with two keys via the generic write
-      store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
-        .toDF("cx", "cy", "v"), Seq("cx", "cy"))
-      // keyed overwrite of chip (1, 10) only
-      store.writeKeyed("seg", Seq((1L, 10L, "a2"), (1L, 10L, "a3"))
-        .toDF("cx", "cy", "v"), Seq("cx", "cy"),
-        Seq("cx" -> 1L, "cy" -> 10L))
-      val got = store.read("seg", spark)
-        .select($"cx".cast("long"), $"v").as[(Long, String)]
-        .collect().toSet
-      assert(got == Set((1L, "a2"), (1L, "a3"), (2L, "b")),
-        s"[$name] $got")
-      // keyed read sees exactly the rewritten partition, O(1)-listed
-      val one = store.readKeyed("seg",
-        Seq("cx" -> 1L, "cy" -> 10L), spark)
-      assert(one.select($"v").as[String].collect().toSet ==
-        Set("a2", "a3"), s"[$name] keyed rows")
-      assert(one.inputFiles.nonEmpty &&
-        one.inputFiles.forall(_.contains("cx=1")),
-        s"[$name] ${one.inputFiles.mkString(", ")}")
-      // caller key-value order must not matter (layout discovered)
-      store.writeKeyed("seg", Seq((2L, 20L, "b2")).toDF("cx", "cy", "v"),
-        Seq("cx", "cy"), Seq("cy" -> 20L, "cx" -> 2L))
-      assert(store.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
-        .select($"v").as[String].collect().toSet == Set("b2"),
-        s"[$name] reversed keyValues")
-      // delete parity: keyed delete drops the keyed-written partition
-      store.delete("seg", Seq("cx" -> 1L, "cy" -> 10L))
-      assert(store.read("seg", spark).select($"v").as[String]
-        .collect().toSet == Set("b2"), s"[$name] delete parity")
-      // idempotent replay: rewriting the same key twice holds one copy
-      (1 to 2).foreach { _ =>
-        store.writeKeyed("seg", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
-          Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
-      }
-      assert(store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
-        .count() == 1, s"[$name] replay")
+    val store = new ParquetStore(s"$tmp/pq")
+    // seed the entity with two keys via the generic write
+    store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
+      .toDF("cx", "cy", "v"), Seq("cx", "cy"))
+    // keyed overwrite of chip (1, 10) only
+    store.writeKeyed("seg", Seq((1L, 10L, "a2"), (1L, 10L, "a3"))
+      .toDF("cx", "cy", "v"), Seq("cx", "cy"),
+      Seq("cx" -> 1L, "cy" -> 10L))
+    val got = store.read("seg", spark)
+      .select($"cx".cast("long"), $"v").as[(Long, String)]
+      .collect().toSet
+    assert(got == Set((1L, "a2"), (1L, "a3"), (2L, "b")), got.toString)
+    // keyed read sees exactly the rewritten partition, O(1)-listed
+    val one = store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+    assert(one.select($"v").as[String].collect().toSet == Set("a2", "a3"),
+      "keyed rows")
+    assert(one.inputFiles.nonEmpty &&
+      one.inputFiles.forall(_.contains("cx=1")),
+      one.inputFiles.mkString(", "))
+    // caller key-value order must not matter (layout discovered)
+    store.writeKeyed("seg", Seq((2L, 20L, "b2")).toDF("cx", "cy", "v"),
+      Seq("cx", "cy"), Seq("cy" -> 20L, "cx" -> 2L))
+    assert(store.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
+      .select($"v").as[String].collect().toSet == Set("b2"),
+      "reversed keyValues")
+    // delete parity: keyed delete drops the keyed-written partition
+    store.delete("seg", Seq("cx" -> 1L, "cy" -> 10L))
+    assert(store.read("seg", spark).select($"v").as[String]
+      .collect().toSet == Set("b2"), "delete parity")
+    // idempotent replay: rewriting the same key twice holds one copy
+    (1 to 2).foreach { _ =>
+      store.writeKeyed("seg", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
+        Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
     }
+    assert(store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+      .count() == 1, "replay")
     // a FRESH entity lands in the caller's key order, matching write()
     val fresh = new ParquetStore(s"$tmp/fresh")
     fresh.writeKeyed("seg", Seq((3L, 30L, "c")).toDF("cx", "cy", "v"),
@@ -1465,6 +1206,61 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
       files.mkString(", "))
     assert(fresh.readKeyed("seg", Seq("cx" -> 3L, "cy" -> 30L), spark)
       .select($"v").as[String].collect().toSeq == Seq("c"))
+  }
+
+  // A driver that dies between writeKeyed's delete and its commit leaves
+  // the key directory holding only the committer's _temporary/ tree.
+  // That key must read as a GET miss (zero rows, the full read's
+  // columns), not fail schema inference, and no other key may change.
+  test("a keyed commit that crashed after its delete reads as a GET " +
+    "miss, not a schema-inference error") {
+    val root = Files.createTempDirectory("graft-crash-leftover")
+    val store = new ParquetStore(root.toString)
+    store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
+      .toDF("cx", "cy", "v"), Seq("cx", "cy"))
+    val key = root.resolve("seg/cx=1/cy=10")
+    Files.walk(key).sorted(java.util.Comparator.reverseOrder[
+      java.nio.file.Path]()).forEach(f => Files.delete(f))
+    Files.createDirectories(key.resolve("_temporary/0"))
+    val full = store.read("seg", spark)
+    val miss = store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+    assert(miss.count() == 0)
+    assert(miss.columns.sorted.toSeq == full.columns.sorted.toSeq,
+      miss.columns.mkString(", "))
+    assert(store.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
+      .select($"v").as[String].collect().toSeq == Seq("b"))
+    assert(full.select($"v").as[String].collect().toSeq == Seq("b"))
+  }
+
+  // Fault injection: writeKeyed deletes the key, then its write job
+  // fails. The failure surfaces, the key reads as a GET miss
+  // (delete-then-write is not atomic), no other key changes, and a
+  // retry of the request lands exactly one copy.
+  test("a keyed write that fails after its delete surfaces the error, " +
+    "leaves the key absent and others intact, and a retry lands once") {
+    val store = new ParquetStore(
+      Files.createTempDirectory("graft-write-fault").toString)
+    store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
+      .toDF("cx", "cy", "v"), Seq("cx", "cy"))
+    val boom = udf((v: String) =>
+      if (v.nonEmpty) throw new IllegalStateException("injected") else v)
+    val bad = Seq((1L, 10L, "a2")).toDF("cx", "cy", "v")
+      .withColumn("v", boom($"v"))
+    intercept[org.apache.spark.SparkException] {
+      store.writeKeyed("seg", bad, Seq("cx", "cy"),
+        Seq("cx" -> 1L, "cy" -> 10L))
+    }
+    val full = store.read("seg", spark)
+    val gone = store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+    assert(gone.count() == 0)
+    assert(gone.columns.sorted.toSeq == full.columns.sorted.toSeq,
+      gone.columns.mkString(", "))
+    assert(store.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
+      .select($"v").as[String].collect().toSeq == Seq("b"))
+    store.writeKeyed("seg", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
+      Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
+    assert(store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+      .select($"v").as[String].collect().toSeq == Seq("a2"))
   }
 
   test("keyed-read schema memo never pins partition-column types " +
