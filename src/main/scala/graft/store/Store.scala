@@ -13,10 +13,13 @@ import org.apache.spark.sql.types.StructType
   * (cx, cy) partition columns give the same key-addressed reads that the
   * reference's key scheme hand-implements. `write` replaces the keys its
   * frame carries by dynamic partition overwrite (S12); `writeKeyed`
-  * replaces one key by delete-then-write. Neither is atomic for a
-  * reader: between `writeKeyed`'s delete and its commit the key reads as
-  * a GET miss (zero rows), and a writer that dies in that window leaves
-  * the key absent until the request is re-run — the same recovery the
+  * stages one key's new rows under `entity/_staging/<id>`, which readers
+  * never list, and then swaps them in by deleting the key's directory
+  * and renaming the stage into its place. Readers see the old rows for
+  * the whole write job. The swap is not atomic: between its delete and
+  * its rename the key reads as a GET miss (zero rows), and a writer that
+  * dies there leaves the key absent, with its new rows under
+  * `_staging/`, until the request is re-run — the same recovery the
   * reference's delete-before-write relies on.
   *
   * At 100 TB: one partition per chip key ≈ the reference's object layout;
@@ -60,14 +63,15 @@ trait Store extends Serializable {
     *
     * Base implementation delegates to [[write]] (dynamic keyed
     * overwrite — identical observable state under the precondition).
-    * ParquetStore overrides it with a direct single-partition commit:
-    * delete the key's directory, then write it (see the trait doc for
-    * the window in between). A per-chip write then pays ONE task and
-    * one directory rename instead of a shuffle exchange plus the
-    * dynamic-overwrite staging walk — the difference between O(1) and
-    * O(cores + staging listing) per request when a tile dispatches
-    * thousands of them (guide §5: keep the driver out of the
-    * per-request path). */
+    * ParquetStore overrides it with a staged single-partition commit:
+    * one plain Spark job writes the key's file under `_staging/<id>`,
+    * then the driver deletes the key's directory and renames the stage
+    * into it (see the trait doc for the window in between). A per-chip
+    * write then pays ONE task and one directory rename instead of a
+    * shuffle exchange, the write command and its committer — the
+    * difference between O(1) and O(cores + staging listing) per request
+    * when a tile dispatches thousands of them (guide §5: keep the
+    * driver out of the per-request path). */
   def writeKeyed(entity: String, df: DataFrame, keys: Seq[String],
       keyValues: Seq[(String, Any)]): Unit =
     write(entity, df, keys)
@@ -79,15 +83,26 @@ trait Store extends Serializable {
   * reference's object-store delete at any scale — and a keyed read lists
   * only that directory.
   *
+  * Keyed writes stage under `root/entity/_staging/<id>` (see
+  * writeKeyed); a stage a crash leaves behind is never read.
+  *
   * The key-order memo, the file-schema memo and the write generation
   * that guards it (companion object) are JVM-global, keyed by root and
   * entity, and only this JVM's writes invalidate them. One writer per
   * store root is therefore assumed: a second driver rewriting the same
-  * root could leave this one replaying a stale schema or key order.
+  * root could leave this one replaying a stale schema or key order, and
+  * two writers of one key could interleave their swaps.
   */
 final class ParquetStore(root: String) extends Store {
   import ParquetStore.{generation, orderCache, schemaCache}
   import org.apache.spark.sql.functions.{col, lit}
+
+  // one Hadoop conf per store, the active session's: parsing the Hadoop
+  // default resources for a fresh conf costs more than the local
+  // filesystem call it serves
+  @transient private lazy val conf: Configuration =
+    org.apache.spark.sql.graftbridge.ParquetFiles
+      .hadoopConf(SparkSession.active)
 
   override def write(entity: String, df: DataFrame, keys: Seq[String]): Unit = {
     invalidate(entity)
@@ -164,15 +179,20 @@ final class ParquetStore(root: String) extends Store {
     keyTyped(df)
   }
 
-  /** Direct single-partition keyed overwrite ([[Store.writeKeyed]]'s
-    * contract): delete the key's directory, then land `df`'s rows
-    * (minus the key columns — they live in the path, exactly where
-    * partitionBy puts them) straight into it as ONE file. Against the
-    * generic dynamic-overwrite write() this removes, per request, the
-    * keys-hash exchange (a chip's rows all hash to one of
-    * shuffle.partitions anyway), the staging-directory commit walk, and
-    * the full-entity listing — the per-chip write becomes one task plus
-    * one directory rename. Key order honors an existing layout
+  /** Staged single-partition keyed overwrite ([[Store.writeKeyed]]'s
+    * contract). `df`'s rows (minus the key columns — they live in the
+    * path, exactly where partitionBy puts them) are staged as ONE
+    * parquet file under `entity/_staging/<id>/` by one plain Spark job
+    * (Spark's own parquet writer, no write command or committer:
+    * [[org.apache.spark.sql.graftbridge.ParquetFiles.write]]). Only
+    * after that job succeeds does the driver swap the stage in: delete
+    * the key's directory, rename `_staging/<id>` into its place. Partition
+    * discovery skips `_`-prefixed directories, so readers see the old
+    * rows for the whole write job; a failed job removes its stage and
+    * leaves the old rows. The window left is between the delete and
+    * the rename: a reader there sees a GET miss, and a crash there
+    * leaves the key absent with its new rows under `_staging/`. No rows
+    * leaves the key absent. Key order honors an existing layout
     * (orderedKeys); a fresh entity lands in the caller's `keys` order,
     * matching write(). */
   override def writeKeyed(entity: String, df: DataFrame,
@@ -182,16 +202,20 @@ final class ParquetStore(root: String) extends Store {
     invalidate(entity)
     val kv = keyValues.toMap
     val p = partPath(entity, keys.map(k => k -> kv(k)))
-    val fs = p.getFileSystem(new Configuration())
-    fs.delete(p, true) // delete-before-write (S12), idempotent
-    df.drop(keys: _*)
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(p.toString)
-    // an all-empty df may leave only commit markers; drop them so the
-    // key reads as ABSENT (the ordinary GET-miss path)
-    if (!holdsData(p)) fs.delete(p, true)
+    val stage =
+      new Path(s"$root/$entity/_staging/${java.util.UUID.randomUUID}")
+    val fs = p.getFileSystem(conf)
+    try {
+      val rows = org.apache.spark.sql.graftbridge.ParquetFiles
+        .write(df.drop(keys: _*).coalesce(1), stage)
+      // the swap: drop the old rows (S12, idempotent), rename the new in
+      fs.delete(p, true)
+      if (rows > 0) {
+        fs.mkdirs(p.getParent)
+        if (!fs.rename(stage, p))
+          throw new java.io.IOException(s"rename $stage -> $p failed")
+      }
+    } finally fs.delete(stage, true) // a no-op once renamed
     // post-write invalidate: a concurrent read that overlapped this
     // write must not leave a pre-write schema/order memo behind
     invalidate(entity)
@@ -200,7 +224,7 @@ final class ParquetStore(root: String) extends Store {
   override def delete(entity: String,
       keyValues: Seq[(String, Any)]): Unit = {
     val p = partPath(entity, keyValues)
-    p.getFileSystem(new Configuration()).delete(p, true)
+    p.getFileSystem(conf).delete(p, true)
     () // delete returns false when absent — idempotent by contract
   }
 
@@ -230,7 +254,7 @@ final class ParquetStore(root: String) extends Store {
   private def orderedKeys(entity: String,
       keyValues: Seq[(String, Any)]): Seq[(String, Any)] = {
     val base = new Path(s"$root/$entity")
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(conf)
     val kv = keyValues.toMap
     // find a COMPLETE depth-|keys| partition chain to learn the key
     // order — a single-path walk can dead-end in an empty parent dir a
@@ -290,7 +314,7 @@ final class ParquetStore(root: String) extends Store {
     * listing — the single filesystem call an `exists` test would cost.
     * Any listing failure other than absence propagates. */
   private def holdsData(dir: Path): Boolean = {
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(conf)
     try fs.listStatus(dir).exists { st =>
       val n = st.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")

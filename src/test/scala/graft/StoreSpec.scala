@@ -8,7 +8,8 @@ import graft.store.ParquetStore
 /** Keyed store contracts (S6/S12/S13) on ParquetStore, the one store:
   * dynamic partition overwrite replaces delete+insert per key, other
   * keys' partitions survive, keyed reads list only their own partition,
-  * and a keyed commit that dies after its delete reads as a GET miss.
+  * a keyed write whose job fails keeps the key's old rows, and a keyed
+  * commit that dies after its delete reads as a GET miss.
   */
 class StoreSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -1208,8 +1209,8 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
       .select($"v").as[String].collect().toSeq == Seq("c"))
   }
 
-  // A driver that dies between writeKeyed's delete and its commit leaves
-  // the key directory holding only the committer's _temporary/ tree.
+  // A driver that dies inside a committer-run write (the generic
+  // write path) leaves the key directory holding only a _temporary/ tree.
   // That key must read as a GET miss (zero rows, the full read's
   // columns), not fail schema inference, and no other key may change.
   test("a keyed commit that crashed after its delete reads as a GET " +
@@ -1232,14 +1233,14 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     assert(full.select($"v").as[String].collect().toSeq == Seq("b"))
   }
 
-  // Fault injection: writeKeyed deletes the key, then its write job
-  // fails. The failure surfaces, the key reads as a GET miss
-  // (delete-then-write is not atomic), no other key changes, and a
-  // retry of the request lands exactly one copy.
-  test("a keyed write that fails after its delete surfaces the error, " +
-    "leaves the key absent and others intact, and a retry lands once") {
-    val store = new ParquetStore(
-      Files.createTempDirectory("graft-write-fault").toString)
+  // Fault injection: writeKeyed's staging job fails. The job runs
+  // before the delete, so the failure surfaces, the key keeps exactly
+  // its old rows (a reader sees old rows or new rows), the stage is
+  // removed, no other key changes, and a retry lands exactly one copy.
+  test("a keyed write whose job fails surfaces the error, keeps the " +
+    "key's old rows and others intact, and a retry lands once") {
+    val root = Files.createTempDirectory("graft-write-fault")
+    val store = new ParquetStore(root.toString)
     store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
       .toDF("cx", "cy", "v"), Seq("cx", "cy"))
     val boom = udf((v: String) =>
@@ -1251,16 +1252,141 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
         Seq("cx" -> 1L, "cy" -> 10L))
     }
     val full = store.read("seg", spark)
-    val gone = store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
-    assert(gone.count() == 0)
-    assert(gone.columns.sorted.toSeq == full.columns.sorted.toSeq,
-      gone.columns.mkString(", "))
+    val old = store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+    assert(old.columns.sorted.toSeq == full.columns.sorted.toSeq,
+      old.columns.mkString(", "))
+    assert(old.select($"cx".cast("long"), $"cy".cast("long"), $"v")
+      .as[(Long, Long, String)].collect().toSeq == Seq((1L, 10L, "a")))
+    assert(Option(root.resolve("seg/_staging").toFile.list())
+      .forall(_.isEmpty), "the failed job's stage was left behind")
     assert(store.readKeyed("seg", Seq("cx" -> 2L, "cy" -> 20L), spark)
       .select($"v").as[String].collect().toSeq == Seq("b"))
     store.writeKeyed("seg", Seq((1L, 10L, "a2")).toDF("cx", "cy", "v"),
       Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
     assert(store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
       .select($"v").as[String].collect().toSeq == Seq("a2"))
+  }
+
+  // The staged file comes from Spark's own parquet writer, so it must
+  // be indistinguishable from a df.write.parquet copy: same file
+  // schema, Spark row metadata and codec, and the same rows and schema
+  // through readKeyed, for every column type the lifecycle sinks write.
+  test("writeKeyed stages one file that matches df.write.parquet's for " +
+    "every column type the lifecycle sinks write") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val tmp = Files.createTempDirectory("graft-keyed-parity")
+    val store = new ParquetStore(tmp.resolve("pq").toString)
+    val d = (s: String) => java.sql.Date.valueOf(s)
+    val df = Seq(
+      (1L, 10L, Option(7), 0.5, d("2001-07-01"),
+        Seq(d("2001-07-01"), d("2002-07-01")), Seq(1.5f, -2.5f),
+        Seq(0.25, 0.75), Seq(true, false), Array[Byte](1, 2, 3)),
+      (1L, 10L, None, -1.0, d("1985-01-02"), Seq.empty[java.sql.Date],
+        Seq.empty[Float], Seq(1.0), Seq.empty[Boolean], Array.empty[Byte]),
+      (1L, 10L, Option(-3), 1e300, d("2017-12-31"), null, Seq(0f),
+        null, null, null))
+      .toDF("cx", "cy", "i", "x", "day", "days", "f", "dd", "mask", "bin")
+    store.writeKeyed("ent", df, Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
+    val ref = tmp.resolve("ref")
+    df.coalesce(1).write.partitionBy("cx", "cy").parquet(ref.toString)
+    val want = spark.read.parquet(ref.toString)
+      .withColumn("cx", $"cx".cast("bigint"))
+      .withColumn("cy", $"cy".cast("bigint"))
+    val got = store.readKeyed("ent", Seq("cx" -> 1L, "cy" -> 10L), spark)
+    assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.orderBy($"x").collect().toSeq
+    assert(rows(got) == rows(want))
+    // the key directory holds exactly one data file and no commit tree
+    def listed(dir: java.nio.file.Path) = dir.toFile.list().toSeq
+    val key = tmp.resolve("pq/ent/cx=1/cy=10")
+    val data = listed(key).filterNot(n => n.startsWith(".") ||
+      n.startsWith("_"))
+    assert(data.size == 1 && data.head.endsWith(".parquet"),
+      listed(key).mkString(", "))
+    assert(!listed(key).exists(_.startsWith("_")),
+      listed(key).mkString(", "))
+    assert(listed(tmp.resolve("pq/ent/_staging")).isEmpty)
+    val refFile = listed(ref.resolve("cx=1/cy=10"))
+      .filter(_.endsWith(".parquet")).head
+    def footer(f: java.nio.file.Path) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString),
+        spark.sparkContext.hadoopConfiguration))
+      try r.getFooter finally r.close()
+    }
+    val (a, b) = (footer(key.resolve(data.head)),
+      footer(ref.resolve(s"cx=1/cy=10/$refFile")))
+    assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema,
+      s"${a.getFileMetaData.getSchema} vs ${b.getFileMetaData.getSchema}")
+    val meta = "org.apache.spark.sql.parquet.row.metadata"
+    assert(a.getFileMetaData.getKeyValueMetaData.get(meta) ==
+      b.getFileMetaData.getKeyValueMetaData.get(meta))
+    def codecs(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+      m.getBlocks.get(0).getColumns.toArray.toSeq.map(
+        _.asInstanceOf[org.apache.parquet.hadoop.metadata
+          .ColumnChunkMetaData].getCodec)
+    assert(codecs(a) == codecs(b))
+  }
+
+  // A driver that dies while its write job runs leaves a stage holding
+  // a partial file. Readers skip `_`-prefixed directories, so no read
+  // of any key may change, and later keyed writes still land.
+  test("a crashed stage holding a truncated file changes no read") {
+    val root = Files.createTempDirectory("graft-stage-leftover")
+    val store = new ParquetStore(root.toString)
+    store.write("seg", Seq((1L, 10L, "a"), (2L, 20L, "b"))
+      .toDF("cx", "cy", "v"), Seq("cx", "cy"))
+    def all = store.read("seg", spark)
+      .select($"cx".cast("long"), $"cy".cast("long"), $"v")
+      .as[(Long, Long, String)].collect().toSet
+    def one(cx: Long, cy: Long) =
+      store.readKeyed("seg", Seq("cx" -> cx, "cy" -> cy), spark)
+        .select($"v").as[String].collect().toSeq
+    val before = (all, one(1L, 10L), one(2L, 20L),
+      store.readKeyed("seg", Seq("cx" -> 9L, "cy" -> 9L), spark).count())
+    val key = root.resolve("seg/cx=1/cy=10")
+    val file = key.toFile.list().filter(_.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(key.resolve(file))
+    val stage = root.resolve("seg/_staging/crashed")
+    Files.createDirectories(stage)
+    Files.write(stage.resolve("part-00000-crashed-c000.snappy.parquet"),
+      bytes.take(bytes.length / 2))
+    assert((all, one(1L, 10L), one(2L, 20L),
+      store.readKeyed("seg", Seq("cx" -> 9L, "cy" -> 9L), spark).count())
+      == before)
+    store.writeKeyed("seg", Seq((2L, 20L, "b2")).toDF("cx", "cy", "v"),
+      Seq("cx", "cy"), Seq("cx" -> 2L, "cy" -> 20L))
+    assert(one(2L, 20L) == Seq("b2") && one(1L, 10L) == Seq("a"))
+  }
+
+  test("a warm keyed write of a local frame runs exactly one Spark job") {
+    val store = new ParquetStore(
+      Files.createTempDirectory("graft-keyed-pin").toString)
+    def put(v: String): Unit =
+      store.writeKeyed("seg", Seq((1L, 10L, v)).toDF("cx", "cy", "v"),
+        Seq("cx", "cy"), Seq("cx" -> 1L, "cy" -> 10L))
+    put("warm")
+    // count only this thread's jobs: tag them with a local property
+    val tag = "graft.test.keyedPin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setLocalProperty(tag, "1")
+      try put("hot")
+      finally spark.sparkContext.setLocalProperty(tag, null)
+      org.apache.spark.sql.graftbridge.ColumnBridge.flushListenerBus(spark)
+      assert(jobs.get() == 1, s"${jobs.get()} jobs for one keyed write")
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(store.readKeyed("seg", Seq("cx" -> 1L, "cy" -> 10L), spark)
+      .select($"v").as[String].collect().toSeq == Seq("hot"))
   }
 
   test("keyed-read schema memo never pins partition-column types " +
