@@ -5,11 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.StringToColumn
 
-/** Event-stream operators over the `events` table, run here in batch
-  * mode with exact DuckDB oracles. The same logic runs incrementally as
-  * Structured Streaming in `graft.streaming` (watermark + window, and
-  * flatMapGroupsWithState sessionization) — SURVEY §2.11's mapping of
-  * the reference's request/response surface onto a job-queue stream.
+/** Event-stream operators over the `events` table, run in batch mode
+  * with exact DuckDB oracles.
   *
   * Scale notes: e1 is a single shuffle on (window, event_type) with
   * partial aggregation; e2 is a single shuffle on user_id (the window
@@ -121,19 +118,14 @@ object EventOps {
     r
   }
 
-  /** x94's hourly series — ONE definition shared by the batch query
-    * and the streaming twin ([[graft.streaming.SketchStream
-    * .hourlyCounts]]): a plain per-hour count aggregation whose state,
-    * run on a stream, IS the hourly series — bounded by time
-    * cardinality (720 rows/month), no watermark needed. */
+  /** x94's hourly series: a plain per-hour count aggregation, bounded
+    * by time cardinality (720 rows/month). */
   private[graft] def hourlyCounts(events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     events.groupBy(date_trunc("hour", $"ts").as("h"))
       .agg(count(lit(1)).as("c"))
 
-  /** e10's hourly per-type series — shared with the streaming twin
-    * ([[graft.streaming.SketchStream.hourlyTypeCounts]]); state run on
-    * a stream is hours × types rows, no watermark. */
+  /** e10's hourly per-type series: hours × types rows. */
   private[graft] def hourlyTypeCounts(
       events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -154,9 +146,8 @@ object EventOps {
       .orderBy($"h", $"rn")
   }
 
-  /** x94's trailing-24h integer-exact z-test over an hourly series —
-    * the read-side half the streaming twin runs over its maintained
-    * series. z² > τ² rewritten as (24c − S)²·23 > τ²·24·(24Q − S²)
+  /** x94's trailing-24h integer-exact z-test over an hourly series.
+    * z² > τ² rewritten as (24c − S)²·23 > τ²·24·(24Q − S²)
     * with S = Σc, Q = Σc² over the trailing frame: no float
     * mean/stddev to disagree across engines. */
   private[graft] def burstVerdicts(hourly: org.apache.spark.sql.DataFrame)
@@ -430,7 +421,7 @@ object EventOps {
         .orderBy($"user_id")
     },
 
-    // ----- e1 tumbling-window aggregate (streaming twin: watermark+window)
+    // ----- e1 tumbling-window aggregate
     "e1_window_agg" -> Q(
       """SELECT date_trunc('hour', ts) AS win, event_type,
         |  CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS total
@@ -443,7 +434,6 @@ object EventOps {
     },
 
     // ----- e2 sessionization: 30-min-gap sessions via lag + running sum
-    // (streaming twin: flatMapGroupsWithState with event-time timeout)
     // ----- x103 session-corpus export: each user session (e2's 30-min
     // gap boundary, the SAME window construction) becomes one
     // "behavioral document" — the ordered event-type token sequence —
@@ -585,8 +575,7 @@ object EventOps {
     // window(ts, size, slide) generator expands the hops BEFORE the
     // aggregation exchange — map-side partial aggs still apply, so the
     // cost at 100 TB is (size/slide)x rows into the same one-shuffle
-    // plan as e1. Streaming twin: the same expression under a
-    // watermark.
+    // plan as e1.
     "e5_hopping" -> Q(
       """WITH h AS (SELECT event_type, value,
         |  unnest([time_bucket(INTERVAL 30 MINUTE, ts),
@@ -765,16 +754,13 @@ object EventOps {
         .orderBy($"event_type", $"hr")
     },
 
-    // ----- e8 event-time interval join: every (view, purchase) pair of
-    // the same user with the purchase inside (view, view+1h] — the
-    // batch twin of the watermarked stream-stream join
-    // (`streaming.EventStream.intervalJoin`). The condition carries the
-    // user_id equi-conjunct, so this plans as ONE hash exchange per
-    // side on user_id with the time band as a join residual — never a
+    // ----- e8 event-time interval join: every (view, purchase) pair of the
+    // same user with the purchase inside (view, view+1h]. The condition
+    // carries the user_id equi-conjunct, so this plans as ONE hash exchange
+    // per side on user_id with the time band as a join residual — never a
     // BNLJ (and the BandedRangeJoin rule correctly leaves it alone: it
     // rewrites only pure range conditions). Per-user pair fan-out is
-    // bounded by activity density, the same bound the streaming twin's
-    // watermark state carries.
+    // bounded by activity density.
     "e8_interval_join" -> Q(
       """SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
         |  CAST(date_diff('second', v.ts, p.ts) AS BIGINT) AS lag_s,
@@ -799,11 +785,8 @@ object EventOps {
 
     // ----- e9 abandonment: views with NO same-user purchase inside
     // (view, view+1h] — the LEFT OUTER face of e8, rolled up per user.
-    // Batch twin of `EventStream.intervalJoinOuter`, whose unmatched
-    // rows can only emit once the purchase-side watermark passes
-    // view+1h (the join's state-eviction horizon doubles as the
-    // completeness proof). Same single user_id exchange per side as
-    // e8; the anti semantics cost nothing extra.
+    // Same single user_id exchange per side as e8; the anti semantics
+    // cost nothing extra.
     "e9_abandonment" -> Q(
       """SELECT v.user_id,
         |  CAST(count(DISTINCT v.event_id) AS BIGINT) AS n_views,

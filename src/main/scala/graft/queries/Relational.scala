@@ -383,8 +383,7 @@ object Relational {
     // set), standing in for a day's upstream change feed. Scale shape:
     // one key shuffle per side (zero for the snapshot when it lives in
     // the bucketed store — the layout carries the partitioning) and
-    // the union'd inserts never join at all. This is the maintenance
-    // half of the ingest story: IngestStream appends, x35 corrects.
+    // the union'd inserts never join at all.
     "x35_cdc_merge" -> Q(
       """WITH ch AS (
         |  SELECT o_orderkey AS k,

@@ -46,18 +46,10 @@ object SelectOps {
     docs.select($"doc_id", explode(T.wsTokens(lower($"text"))).as("w"))
       .select($"doc_id", (T.md5Long($"w") % B).as("b"))
 
-  /** The DSIR model state: per-bucket token counts for the target
-    * slice (doc_id % 10 == 0) and the raw pool — B rows total. ONE
-    * definition shared by the batch query (x73) and the streaming twin
-    * ([[graft.streaming.SelectStream]]): as a streaming aggregation
-    * its state IS this B-row table (bounded regardless of stream
-    * length, no watermark), and each micro-batch folds in map-side —
-    * so a streamed model is bit-identical to a batch rebuild. */
-  private[graft] def dsirCounts(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = dsirCountsOf(bucketed(docs))
-
-  /** [[dsirCounts]] over an already-bucketed frame (lets x73 share one
-    * tokenize+hash pass between the model build and the probe). */
+  /** The DSIR model state over an already-bucketed frame: per-bucket
+    * token counts for the target slice (doc_id % 10 == 0) and the raw
+    * pool, B rows total (lets x73 share one tokenize+hash pass between
+    * the model build and the probe). */
   private[graft] def dsirCountsOf(bk: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     bk.groupBy($"b").agg(

@@ -48,11 +48,8 @@ object SketchOps {
     docs.select(explode(regexp_extract_all(lower($"text"),
       lit("[a-z]+"), lit(0))).as("w"))
 
-  /** The CMS counter build over a token frame — ONE definition shared by
-    * the batch query (x64) and the streaming twin
-    * ([[graft.streaming.SketchStream]]), so the two matrices cannot
-    * drift. Works unchanged on a streaming frame: the groupBy state IS
-    * the D×W matrix (bounded regardless of stream length). */
+  /** The CMS counter build over a token frame (x64): the groupBy
+    * result IS the D×W matrix. */
   private[graft] def cmsCounters(toks: org.apache.spark.sql.DataFrame) = {
     val bucket = T.md5Long(concat($"d".cast("string"), lit(":"), $"w")).%(W)
     toks
@@ -86,9 +83,7 @@ object SketchOps {
   /** The HLL register table of a token frame, per group: ≤ m rows per
     * group key, built as ONE declarative max-aggregation (partial agg
     * = HLL merge — register maxes combine cell-wise map-side, the
-    * token stream never shuffles). Shared by the batch queries
-    * (x90/x96), the incremental Store lifecycle, and the streaming
-    * twin. */
+    * token stream never shuffles). Shared by x90 and x96. */
   private[graft] def hllRegistersBy(toks: org.apache.spark.sql.DataFrame,
       keys: Seq[String]): org.apache.spark.sql.DataFrame = {
     val kc = keys.map(col)
@@ -132,52 +127,6 @@ object SketchOps {
       : org.apache.spark.sql.DataFrame =
     hllEstimateBy(registers, Seq.empty)
 
-  /** Incremental cardinality tracking — the x33/x35 pattern applied to
-    * the HLL sketch: each ingest batch lands its own ≤ m register
-    * rows under a `batch` partition (delete-before-write, replay
-    * idempotent); the live estimate max-merges registers across
-    * batches — associative and ORDER-FREE, so N batches merged equal
-    * the one-shot build bit for bit (StoreSpec pins it). History
-    * tokens are never rescanned: a day's append costs one pass over
-    * that day's rows and writes ≤ m rows. */
-  def appendHllRegisters(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame, batchId: Long,
-      store: graft.store.Store): Unit = {
-    // a replayed batch id at or below the compaction horizon would
-    // delete-before-write the folded partition — refuse loudly
-    // (the shared [[graft.store.Horizon]] guard)
-    graft.store.Horizon.requireAppendable(store, s, "hll", batchId)
-    val regs = hllRegisters(tokensOf(docs))
-    store.delete("hll_registers", Seq("batch" -> batchId))
-    store.write("hll_registers",
-      regs.select(lit(batchId).as("batch"), $"bucket", $"r"),
-      Seq("batch"))
-  }
-
-  /** Merged registers of every ingested batch → the live estimate;
-    * `asOfBatch` re-derives the estimate any PAST batch saw (the
-    * dense-side snapshot verb — a batch-directory prune over the
-    * register table, guarded against the compaction horizon). */
-  def hllDistinctStored(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store, asOfBatch: Long = Long.MaxValue)
-      : org.apache.spark.sql.DataFrame = {
-    graft.store.Horizon.requireServable(store, s, "hll", asOfBatch)
-    hllEstimate(graft.store.Snapshot
-      .cut(store.read("hll_registers", s), asOfBatch)
-      .groupBy($"bucket").agg(max($"r").as("r")))
-  }
-
-  /** Compact the register table: the stored read's max-merge,
-    * MATERIALIZED — N batch partitions fold to ≤ m rows under the
-    * newest folded batch, via the crash-safe [[graft.store.StagedFold]]
-    * (intent marker + roll-forward). Estimates are invariant because
-    * the register max is associative and order-free. */
-  def compactHllRegisters(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store): Unit =
-    compactSketchEntity(s, store, "hll", "hll_registers",
-      df => df.groupBy($"bucket").agg(max($"r").as("r")),
-      Seq("bucket", "r"))
-
   /** KMV (k-minimum-values) geometry: sketch = the K smallest 48-bit
     * content hashes per source. K = 128 → relative error ≈ 1/√(K−1) ≈
     * 8.9 %. Unlike the HLL (x90), KMV sketches close under BOTH union
@@ -198,15 +147,6 @@ object SketchOps {
     T.md5Long(concat_ws(" ", slice(T.wsTokens($"text"), 1, 8)))
   private def kmvKeySql: String =
     TS.md5Long(s"array_to_string((${TS.wsTokens("text")})[1:8], ' ')")
-
-  /** Per-source bottom-K sketch of distinct content-key hashes — ONE
-    * row_number window per source over the DISTINCT (source, hash)
-    * frame. Bottom-K is order-free and associative under merge
-    * (bottom-K of unions of bottom-Ks = bottom-K of the union), the
-    * same discipline as the HLL register max. */
-  private[graft] def kmvSketch(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    kmvSketchOf(docs.select($"source", kmvKeyCol.as("hv")))
 
   private[graft] def kmvSketchOf(keyed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -281,49 +221,8 @@ object SketchOps {
         coalesce($"n_inter_exact", lit(0L)).as("n_inter_exact"))
   }
 
-  /** Incremental KMV maintenance — the x90-HLL lifecycle applied to
-    * the bottom-K sketch: each ingest batch lands its own per-source
-    * bottom-K rows under a `batch` partition (delete-before-write,
-    * replay idempotent); the live sketch re-bottom-Ks the DISTINCT
-    * union across batches. Bottom-K is order-free and associative
-    * (bottom-K of unions of bottom-Ks = bottom-K of the union), so N
-    * batches merged equal the one-shot sketch bit for bit — history
-    * docs are never rescanned, a day's append costs one pass over
-    * that day's rows and writes ≤ K rows per source. */
-  def appendKmvSketch(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame, batchId: Long,
-      store: graft.store.Store): Unit = {
-    graft.store.Horizon.requireAppendable(store, s, "kmv", batchId)
-    val sk = kmvSketch(docs)
-    store.delete("kmv_sketch", Seq("batch" -> batchId))
-    store.write("kmv_sketch",
-      sk.select(lit(batchId).as("batch"), $"source", $"hv"),
-      Seq("batch"))
-  }
-
-  /** The live merged per-source sketch over every ingested batch;
-    * `asOfBatch` re-derives any past batch's sketch (see
-    * [[hllDistinctStored]]). */
-  def kmvSketchStored(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store, asOfBatch: Long = Long.MaxValue)
-      : org.apache.spark.sql.DataFrame = {
-    graft.store.Horizon.requireServable(store, s, "kmv", asOfBatch)
-    kmvSketchOf(graft.store.Snapshot
-      .cut(store.read("kmv_sketch", s), asOfBatch)
-      .select($"source", $"hv"))
-  }
-
-  /** Compact the sketch table: re-bottom-K the union (bottom-K of
-    * unions of bottom-Ks = bottom-K of the union), materialized under
-    * the newest folded batch — see [[compactHllRegisters]]. */
-  def compactKmvSketch(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store): Unit =
-    compactSketchEntity(s, store, "kmv", "kmv_sketch",
-      df => kmvSketchOf(df.select($"source", $"hv")),
-      Seq("source", "hv"))
-
   /** Dyadic quantile-sketch bin of a positive long column — the x115
-    * update rule, shared with the streaming twin. e = floor(log2 n)
+    * update rule. e = floor(log2 n)
     * taken EXACTLY as the bit length of n (`bin()` string length —
     * never floating log, whose ln(8)/ln(2) = 2.999... boundary would
     * split the engines), then one of 8 sub-octave slots via pure
@@ -397,74 +296,6 @@ object SketchOps {
       dir: String): org.apache.spark.sql.DataFrame =
     quantileReport(quantileHist(Tables.spread(s, dir, "documents")
       .select(size(T.wsTokens($"text")).cast("long").as("n"))))
-
-  /** Append one batch's quantile-sketch bins to the store — the
-    * incremental pattern of [[appendHllRegisters]]/[[appendKmvSketch]]
-    * applied to the quantile sketch: per-batch partition,
-    * delete-before-write so replays overwrite themselves. */
-  def appendQuantileHist(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame, batchId: Long,
-      store: graft.store.Store): Unit = {
-    graft.store.Horizon.requireAppendable(store, s, "quantile", batchId)
-    val h = quantileHist(docs.select(
-      size(T.wsTokens($"text")).cast("long").as("n")))
-    store.delete("quantile_hist", Seq("batch" -> batchId))
-    store.write("quantile_hist",
-      h.select(lit(batchId).as("batch"), $"qbin", $"c"),
-      Seq("batch"))
-  }
-
-  /** The live p50/p90/p99 over every ingested batch: bin counts ADD
-    * across batches (the sketch merge rule), then the ordinary read
-    * verb runs on the merged ≤ 8·48-row table. `asOfBatch` re-derives
-    * any past batch's report (see [[hllDistinctStored]]). */
-  def quantileReportStored(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store, asOfBatch: Long = Long.MaxValue)
-      : org.apache.spark.sql.DataFrame = {
-    graft.store.Horizon.requireServable(store, s, "quantile", asOfBatch)
-    quantileReport(graft.store.Snapshot
-      .cut(store.read("quantile_hist", s), asOfBatch)
-      .groupBy($"qbin").agg(sum($"c").cast("long").as("c")))
-  }
-
-  /** Compact the bin table: counts ADD across batches, materialized
-    * under the newest folded batch — see [[compactHllRegisters]]. */
-  def compactQuantileHist(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store): Unit =
-    compactSketchEntity(s, store, "quantile", "quantile_hist",
-      df => df.groupBy($"qbin").agg(sum($"c").cast("long").as("c")),
-      Seq("qbin", "c"))
-
-  /** The shared sketch-register fold: every sketch table is a
-    * batch-partitioned entity whose stored read is an associative,
-    * order-free merge — so compaction is exactly that merge,
-    * MATERIALIZED under the newest folded batch, run through the
-    * crash-safe [[graft.store.StagedFold]] (stage → intent marker →
-    * move, crashed moves rolled forward; the family horizon then
-    * makes below-horizon appends and as-of reads refuse loudly). */
-  private[graft] def compactSketchEntity(s: org.apache.spark.sql.SparkSession,
-      store: graft.store.Store, family: String, entity: String,
-      merge: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame,
-      valueCols: Seq[String]): Unit = {
-    val ents = Seq(graft.store.FoldEntity(entity, Seq("batch"),
-      df => df.withColumn("batch", $"batch".cast("long"))))
-    graft.store.StagedFold.rollForward(store, s, family, ents)
-    val cur =
-      try store.read(entity, s)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => return
-      }
-    // bounded collect: one row per ingested batch
-    val batches = cur.select($"batch".cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (batches.length <= 1) return // already compact
-    val into = batches.last
-    graft.store.StagedFold.run(store, s, family, Seq(
-      ents(0) -> merge(cur)
-        .select(lit(into).as("batch") +: valueCols.map(col): _*)),
-      horizon = into)
-  }
 
   val qs: Map[String, Q] = Map(
     // ----- x99 cross-source distinct-overlap matrix from KMV sketches:

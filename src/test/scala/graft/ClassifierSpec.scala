@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{BoostConfig, Classifier, GradientBoostedClassifier,
-  RandomForestSparkClassifier, SoftmaxClassifier}
+  SoftmaxClassifier}
 
 /** The pluggable-trainer contract (M2/M3/M5): both implementations must
   * train from the same (label, features) matrix, round-trip the model
@@ -50,11 +50,6 @@ class ClassifierSpec extends AnyFunSuite with SparkSpec {
 
   test("softmax classifier satisfies the trainer contract") {
     contract(new SoftmaxClassifier(), absentClassesZero = false)
-  }
-
-  test("random-forest classifier satisfies the trainer contract") {
-    spark // force session init so SparkSession.active resolves
-    contract(new RandomForestSparkClassifier(), absentClassesZero = true)
   }
 
   test("gradient-boosted classifier satisfies the trainer contract") {
@@ -115,16 +110,6 @@ class ClassifierSpec extends AnyFunSuite with SparkSpec {
     def bytes() = new GradientBoostedClassifier(BoostConfig(
       numRound = 12, maxDepth = 3, nThread = 4)).train(rows)
     assert(java.util.Arrays.equals(bytes(), bytes()))
-  }
-
-  test("random-forest pads absent classes instead of injecting rows (M4)") {
-    spark
-    val clf = new RandomForestSparkClassifier(numTrees = 10)
-    val rows = sample()
-    val model = clf.train(rows)
-    val p = clf.scoreBatch(model, Iterator(rows.head._2)).next()
-    assert(p.length == 9)
-    assert((3 until 9).forall(c => p(c) == 0f))
   }
 
   test("cross-encoder seam: model bytes round-trip, batched scores " +
