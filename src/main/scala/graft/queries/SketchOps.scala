@@ -297,6 +297,37 @@ object SketchOps {
     quantileReport(quantileHist(Tables.spread(s, dir, "documents")
       .select(size(T.wsTokens($"text")).cast("long").as("n"))))
 
+  /** The shared register fold: a batch-partitioned count table whose
+    * stored read is an associative, order-free merge (the quality-drift
+    * counts of [[TextOps.compactQualityCounts]]) compacts by exactly
+    * that merge, MATERIALIZED under the newest folded batch, run through the
+    * crash-safe [[graft.store.StagedFold]] (stage → intent marker →
+    * move, crashed moves rolled forward; the family horizon then
+    * makes below-horizon appends and as-of reads refuse loudly). */
+  private[graft] def compactSketchEntity(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, family: String, entity: String,
+      merge: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame,
+      valueCols: Seq[String]): Unit = {
+    val ents = Seq(graft.store.FoldEntity(entity, Seq("batch"),
+      df => df.withColumn("batch", $"batch".cast("long"))))
+    graft.store.StagedFold.rollForward(store, s, family, ents)
+    val cur =
+      try store.read(entity, s)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException => return
+      }
+    // bounded collect: one row per ingested batch
+    val batches = cur.select($"batch".cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    if (batches.length <= 1) return // already compact
+    val into = batches.last
+    graft.store.StagedFold.run(store, s, family, Seq(
+      ents(0) -> merge(cur)
+        .select(lit(into).as("batch") +: valueCols.map(col): _*)),
+      horizon = into)
+  }
+
   val qs: Map[String, Q] = Map(
     // ----- x99 cross-source distinct-overlap matrix from KMV sketches:
     // per source keep the K smallest distinct content hashes; per

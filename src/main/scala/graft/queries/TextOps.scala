@@ -81,7 +81,8 @@ object TextOps {
       dir: String, sig: Int): org.apache.spark.sql.DataFrame =
     signatureOf(Tables.spread(s, dir, "documents"), sig)
 
-  /** MinHash signatures of an arbitrary documents frame. */
+  /** MinHash signatures of an arbitrary documents frame — the
+    * batch-shaped entry the incremental cluster lifecycle feeds. */
   private def signatureOf(docs: org.apache.spark.sql.DataFrame,
       sig: Int): org.apache.spark.sql.DataFrame =
     docs
@@ -104,6 +105,65 @@ object TextOps {
           .map(r => col(s"h${b * rowsPerBand + r}")): _*).as("k"))
     }: _*)).as("bk"))
       .select($"doc_id", $"bk.b".as("b"), $"bk.k".as("k"))
+  }
+
+  /** x33's index lifecycle THROUGH the storage layer (the production
+    * shape x33 computes in-query from even doc_ids): persist the
+    * historical corpus's dedup artifacts once — the band-bucket table
+    * ([[bandRowsOf]]'s output) partitioned by band, and the signature
+    * table unpartitioned — so later ingest batches probe parquet, never
+    * the historical corpus. */
+  def persistDedupIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String, bandStore: graft.store.Store,
+      sigStore: graft.store.Store): Unit = {
+    val hist = signatureDf(s, dir, Sig).filter($"doc_id" % 2 === 0).cache()
+    bandStore.write("band_index", bandRowsOf(hist, Sig, Bands), Seq("b"))
+    sigStore.write("sig_index", hist, Seq.empty)
+    hist.unpersist()
+    ()
+  }
+
+  /** The later-batch probe against the PERSISTED index: the new
+    * (odd-doc_id) batch computes its signatures and band keys, is
+    * BROADCAST into the persisted band table (equi-join on (b, k) —
+    * the index scan never reshuffles), and candidate verification
+    * broadcasts the enriched candidate set into the persisted
+    * signature table the same way. The only exchange in the whole
+    * plan is the final candidate-sized rank window — the historical
+    * corpus is read pruned and shuffled never, which is the 100 TB
+    * incremental-ingest contract. Result-identical to x33 (pinned in
+    * StoreSpec). */
+  private[graft] def incrementalDedupPersisted(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      bandStore: graft.store.Store, sigStore: graft.store.Store)
+      : org.apache.spark.sql.DataFrame = {
+    // no cache: both uses (band keys, verification signatures) are
+    // broadcast sides over the BOUNDED new batch — recomputing its
+    // signatures twice within the one execution is cheaper than
+    // pinning blocks with no post-action seam to unpersist from
+    val newSig = signatureDf(s, dir, Sig)
+      .filter($"doc_id" % 2 === 1)
+    val newBands = bandRowsOf(newSig, Sig, Bands)
+      .select($"doc_id".as("new_id"), $"b".as("b2"), $"k".as("k2"))
+    val index = bandStore.read("band_index", s)
+    val cand = index.join(broadcast(newBands),
+        $"b" === $"b2" && $"k" === $"k2")
+      .select($"new_id", $"doc_id".as("old_id")).distinct()
+    val sigX = newSig.toDF("new_id" +: (0 until Sig).map(i => s"x$i"): _*)
+    val sigY = sigStore.read("sig_index", s)
+      .toDF("old_id" +: (0 until Sig).map(i => s"y$i"): _*)
+    val est = (0 until Sig)
+      .map(i => when(col(s"x$i") === col(s"y$i"), 1).otherwise(0))
+      .reduce(_ + _).cast("double") / Sig
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"new_id").orderBy($"est_sim".desc, $"old_id")
+    sigY.join(broadcast(cand.join(sigX, "new_id")), "old_id")
+      .filter(est >= 0.25)
+      .select($"new_id", $"old_id", round(est, 6).as("est_sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter($"rn" === 1)
+      .select($"new_id", $"old_id".as("dup_of"), $"est_sim")
+      .orderBy($"new_id")
   }
 
   /** x7 body, parameterized on signature size and band count: MinHash
@@ -260,7 +320,8 @@ object TextOps {
   /** The BM25 building blocks shared by x47, x50's sparse arm, and
     * x61's PRF rounds: (tf, df, dl, corpus stats) frames. */
   /** The BM25 lexical frame: (doc_id, tk) lower-cased whitespace
-    * tokens, shared by the retrieval family. */
+    * tokens. ONE definition shared by the batch retrieval family and
+    * the streaming index-maintenance twin. */
   private[graft] def tokenized(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs.select($"doc_id", T.wsTokens(lower($"text")).as("tk"))
@@ -268,7 +329,10 @@ object TextOps {
   /** Per-term document frequency over a tokenized frame. Defined as a
     * direct per-doc-distinct explode + term count (NOT via the tf
     * table), so the partial aggregation collapses to vocabulary size
-    * map-side with no (doc, term) exchange. */
+    * map-side with no (doc, term) exchange — and so the SAME expression
+    * runs as an incremental streaming aggregation
+    * ([[graft.streaming.SparseIndexStream]]), whose state is the
+    * vocabulary-sized df table itself. */
   private[graft] def termDf(tk: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     tk.select(explode(array_distinct($"tk")).as("term"))
@@ -312,6 +376,499 @@ object TextOps {
     .withColumn("ci",
       floor((($"idf" * (($"tf" * lit(2.2)) / ($"tf" + $"nrm"))))
         * lit(1000000.0) + lit(0.5)))
+
+  private[graft] val SparseBuckets = 64
+
+  /** Append one document batch to the PERSISTED sparse (BM25) index —
+    * the x33/x35/ANN/graph incremental pattern applied to sparse
+    * retrieval, completing the maintained-index matrix (band index,
+    * ANN books+corpus, k-NN graph, sketches, and now postings).
+    *
+    * Layout: `sparse_postings` (batch, bucket) with bucket =
+    * hash(term) mod [[SparseBuckets]] and the doc length DENORMALIZED
+    * onto every posting row (the production inverted-index trick: the
+    * scorer needs dl per candidate, and a separate corpus-sized dl
+    * table would force a corpus join per query); `sparse_docs` is the
+    * VERSION REGISTRY — one (batch, doc_id, dl) row per ingested doc,
+    * bucketed on hash(doc_id) so a day's registry write parallelizes
+    * like the postings write. The registry is what makes UPDATES
+    * sound: re-ingesting a changed document in a later batch leaves
+    * the old batch's postings physically in place, and the search
+    * resolves latest-batch-wins per doc against the registry — df and
+    * totals are DERIVED from the live set at query time (per-batch
+    * partials cannot express "this doc's older copy no longer
+    * counts", which is exactly how a partial-df design double-counts
+    * updated docs). Delete-before-write per batch partition, so
+    * replays are idempotent.
+    *
+    * The incremental economy: a day's append tokenizes only that
+    * day's documents; a query reads only its terms' BUCKET directories
+    * across batches plus the registry (≈1% the postings' size; one
+    * row per live doc after [[compactSparseIndex]]) — history is
+    * never re-tokenized, re-scanned corpus-wide, or reshuffled. */
+  def appendSparseIndex(s: org.apache.spark.sql.SparkSession,
+      batch: org.apache.spark.sql.DataFrame, batchId: Long,
+      store: graft.store.Store): Unit = {
+    // a replay of a batch id at or below the compaction horizon would
+    // run this function's delete-before-write against the CONSOLIDATED
+    // partition compaction folded the whole corpus into — silently
+    // destroying every other doc in it. Fail loudly instead; the
+    // horizon is persisted by [[compactSparseIndex]].
+    graft.store.Horizon.requireAppendable(store, s, "sparse", batchId)
+    // eager function with two writes over shared lineage: cache the
+    // tokenized frame and the tf table so the batch is tokenized and
+    // aggregated ONCE, not once per write (the incremental-economy
+    // claim is per-day work = one pass over that day), and unpersist
+    // before returning — this is not a lazy registry body.
+    // Exact duplicate rows within the batch collapse (retries/replays
+    // produce them); CONFLICTING versions of one doc_id within a
+    // single batch fail loudly below — version order is the BATCH id,
+    // so "latest" is undefined inside one batch and silently keeping
+    // both copies would double-count the doc's postings and df.
+    val docs = tokenized(batch.dropDuplicates("doc_id", "text")).cache()
+    // positions ride the SAME (doc, term) rollup the tf counts use —
+    // positional (phrase/proximity) search costs no extra pass or
+    // exchange at build time, exactly Lucene's postings-with-positions
+    // layout
+    val tf = docs
+      .select($"doc_id", size($"tk").cast("long").as("dl"),
+        posexplode($"tk").as(Seq("pos", "term")))
+      .groupBy($"doc_id", $"dl", $"term")
+      .agg(count(lit(1)).as("tf"),
+        sort_array(collect_list($"pos".cast("long"))).as("positions"))
+      .withColumn("bucket", pmod(xxhash64($"term"), lit(SparseBuckets)))
+      .cache()
+    try {
+      require(docs.groupBy($"doc_id").count()
+          .filter($"count" > 1).limit(1).count() == 0,
+        s"batch $batchId carries conflicting versions of a doc_id; " +
+          "within one batch 'latest' is undefined — resolve ordering " +
+          "upstream (e.g. by sequence number) before appending")
+      store.delete("sparse_postings", Seq("batch" -> batchId))
+      store.write("sparse_postings",
+        tf.select(lit(batchId).as("batch"), $"bucket", $"term",
+          $"doc_id", $"tf", $"dl", $"positions"),
+        Seq("batch", "bucket"))
+      store.delete("sparse_docs", Seq("batch" -> batchId))
+      store.write("sparse_docs",
+        docs.select(lit(batchId).as("batch"),
+          pmod(xxhash64($"doc_id"), lit(SparseBuckets)).as("dbucket"),
+          $"doc_id", size($"tk").cast("long").as("dl")),
+        Seq("batch", "dbucket"))
+      // the FORWARD index (Lucene's term-vectors analog): the same tf
+      // rollup, bucketed on hash(doc_id) instead of hash(term), so a
+      // doc's term list is a bucket-pruned read — the axis the
+      // inverted layout cannot serve (PRF feedback docs, snippets).
+      // Same cached frame, one more write: the incremental economy
+      // (per-day work = one pass over that day) holds.
+      store.delete("sparse_forward", Seq("batch" -> batchId))
+      store.write("sparse_forward",
+        tf.select(lit(batchId).as("batch"),
+          pmod(xxhash64($"doc_id"), lit(SparseBuckets)).as("dbucket"),
+          $"doc_id", $"term", $"tf", $"dl"),
+        Seq("batch", "dbucket"))
+    } finally { tf.unpersist(); docs.unpersist() }
+  }
+
+  /** Tombstone-delete documents from the persisted sparse index — the
+    * same metadata-row delete verb as the dense side's
+    * [[VectorOps.tombstoneAnnVectors]]: deletes land as rows in a
+    * `sparse_tombstones` entity partitioned by doc_id (re-deleting is
+    * a per-id dynamic-partition overwrite — idempotent), the search
+    * anti-joins them out at read time, and the postings are NEVER
+    * rewritten — at 100 TB a delete is a metadata row, folded
+    * physically by [[compactSparseIndex]] when the small-file
+    * maintenance job runs anyway.
+    *
+    * A tombstone is VERSION-SCOPED: it kills versions up to `upto`
+    * (default: the registry's max batch at call time — "delete as of
+    * now"), so a legitimate LATER re-ingest of the same doc_id
+    * becomes live again instead of being silently shadowed forever
+    * (and then physically destroyed by compaction).
+    *
+    * Re-tombstoning a doc keeps the MAX of the existing and the new
+    * `upto`: the per-doc dynamic-partition overwrite would otherwise
+    * let a later call with a smaller watermark (e.g. the default
+    * max-batch-now after an earlier explicitly-future delete) silently
+    * NARROW the first delete's scope — a delete, once issued, must
+    * never shrink. */
+  def tombstoneSparseDocs(s: org.apache.spark.sql.SparkSession,
+      ids: Seq[Long], store: graft.store.Store,
+      uptoBatch: Long = -1L): Unit = {
+    require(ids.nonEmpty, "tombstone call with no ids")
+    val upto = if (uptoBatch >= 0L) uptoBatch else {
+      val r = store.read("sparse_docs", s)
+        .agg(max($"batch".cast("long"))).first()
+      if (r.isNullAt(0)) -1L else r.getLong(0)
+    }
+    // dedup BOTH merge sides: duplicate ids in the call (or duplicate
+    // rows a prior such call left behind) would otherwise fan out in
+    // the join and grow a doc's tombstone partition geometrically —
+    // semantics would survive (liveOf's anti-join is multiplicity-
+    // insensitive) but the partition would bloat
+    val fresh = s.createDataFrame(ids.distinct.map(id => (id, upto)))
+      .toDF("doc_id", "upto")
+    val existing = try Some(store.read("sparse_tombstones", s)
+        .groupBy($"doc_id".cast("long").as("edoc"))
+        .agg(max($"upto".cast("long")).as("eupto")))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val merged = existing.fold(fresh)(ex =>
+      fresh.join(ex, fresh("doc_id") === ex("edoc"), "left")
+        .select(fresh("doc_id"),
+          greatest($"upto", coalesce($"eupto", lit(Long.MinValue)))
+            .as("upto")))
+    // materialize before the write: the merge READS the same per-doc
+    // partitions the dynamic overwrite replaces
+    store.write("sparse_tombstones", merged.localCheckpoint(true),
+      Seq("doc_id"))
+  }
+
+  /** The live-version registry from a typed registry frame: latest
+    * batch wins per doc_id; a doc whose live version falls at or
+    * before a tombstone's `upto` watermark is removed (a version
+    * ingested AFTER the watermark is a resurrection and stays live).
+    * One row per LIVE doc — (doc_id, batch, dl). Shared by the stored
+    * search (corpus totals) and compaction (the keep set).
+    *
+    * The tombstone read distinguishes entity-absent (AnalysisException
+    * — nothing was ever deleted) from a FAILING read (I/O errors
+    * propagate): swallowing every error here would silently serve
+    * deleted documents. */
+  private def liveOf(reg: org.apache.spark.sql.DataFrame,
+      s: org.apache.spark.sql.SparkSession, store: graft.store.Store)
+      : org.apache.spark.sql.DataFrame = {
+    val live0 = reg.groupBy($"doc_id")
+      .agg(max(struct($"batch", $"dl")).as("m"))
+      .select($"doc_id", $"m.batch".as("batch"), $"m.dl".as("dl"))
+    val tomb = try Some(store.read("sparse_tombstones", s)
+        .select($"doc_id".cast("long").as("tdoc"),
+          $"upto".cast("long").as("upto")))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    tomb.fold(live0)(t => live0.join(t,
+      live0("doc_id") === t("tdoc") && live0("batch") <= t("upto"),
+      "left_anti"))
+  }
+
+  /** Snapshot (as-of) cut of a version-registry frame: keep versions
+    * ingested at or before `asOfBatch` — the reproducibility verb (a
+    * release manifest or eval run can be re-derived against the exact
+    * index state a past batch saw). Tombstones deliberately still
+    * apply ON TOP of the cut (see [[liveOf]]'s caller): a deleted
+    * document must not resurface through a historical read — deletes
+    * are compliance actions, retroactive by design. Both the registry
+    * AND the postings read must take the same cut: a post-cut posting
+    * row is invisible to the registry, so the stale-key anti-join
+    * alone could never remove it. Snapshots reach back only to the
+    * compaction horizon — [[compactSparseIndex]] physically destroys
+    * superseded versions, so reads below it fail loudly
+    * ([[requireAboveHorizon]]) rather than serve compacted state
+    * under an old batch id. */
+  private def asOf(reg: org.apache.spark.sql.DataFrame,
+      asOfBatch: Long): org.apache.spark.sql.DataFrame =
+    if (asOfBatch == Long.MaxValue) reg
+    else reg.filter($"batch" <= asOfBatch)
+
+  /** Loud snapshot-horizon guard: [[compactSparseIndex]] physically
+    * destroys superseded versions (and relabels survivors to the
+    * newest folded batch), so a snapshot BELOW the oldest registry
+    * batch cannot be served truthfully — the index no longer holds
+    * that history. Failing beats silently returning the compacted
+    * (newer) state under an old batch id, or an empty result. One
+    * bounded action (a registry min), paid only by explicit as-of
+    * reads. */
+  private def requireAboveHorizon(
+      reg: org.apache.spark.sql.DataFrame, asOfBatch: Long): Unit =
+    if (asOfBatch != Long.MaxValue) {
+      val h = reg.agg(min($"batch".cast("long"))).first()
+      require(h.isNullAt(0) || asOfBatch >= h.getLong(0),
+        s"as-of batch $asOfBatch is below the snapshot horizon " +
+          s"${h.getLong(0)}: versions before it were physically " +
+          "folded by compaction (or never ingested) and cannot be " +
+          "served")
+    }
+
+  /** Keys of DEAD posting rows — (doc_id, batch) of superseded
+    * versions plus every version of a tombstoned doc. This is the
+    * frame the search and compaction anti-join against, and the
+    * reason version resolution scales: its size is the number of
+    * updates/deletes since the last compaction (tiny in the
+    * append-mostly common case, ZERO right after compaction), so the
+    * postings side joins against an AQE-broadcastable sliver and
+    * never reshuffles — an inner join with the LIVE registry instead
+    * would shuffle corpus-sized inputs on every query. */
+  private def staleSparseKeys(reg: org.apache.spark.sql.DataFrame,
+      live: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    reg.select($"doc_id", $"batch")
+      .join(live.select($"doc_id", $"batch"), Seq("doc_id", "batch"),
+        "left_anti")
+
+  /** Exact BM25 over the persisted index for a bounded query set
+    * (qid → term list): postings are read ONLY for the queried terms'
+    * buckets (directory-pruned within every batch partition), then
+    * resolved against the version registry — an anti-join against
+    * the [[staleSparseKeys]] sliver — so a doc
+    * re-ingested in a later batch scores exactly once, from its
+    * LATEST version, and tombstoned docs never score
+    * (StoreSpec pins stored search over an update history
+    * row-identical to a one-shot over the latest versions). df for
+    * the queried terms and the corpus totals are derived from the
+    * live set (a term's postings all live in its bucket, so the
+    * bucket-pruned read IS the term's full live posting list); the
+    * scoring expression is the SAME [[withCi]] the one-shot x47 uses.
+    * `excludeSelf` drops doc_id == qid rows (the registry query
+    * convention where queries ARE corpus docs).
+    *
+    * Cost model: the one corpus-proportional input is the REGISTRY
+    * pass behind totals/stale-keys — thin (3 columns/doc, ~1% of a
+    * postings scan), amortized across the whole query set of a call,
+    * and collapsed to one row per live doc by [[compactSparseIndex]];
+    * the postings side reads only the queried buckets and never
+    * reshuffles. */
+  def bm25SearchStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, queries: Seq[(Long, Seq[String])],
+      k: Int = 5, excludeSelf: Boolean = true,
+      asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    require(queries.nonEmpty, "stored BM25 search needs queries")
+    bm25RankStored(s, s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term"), store, k, excludeSelf, asOfBatch)
+  }
+
+  /** The frame-based core of [[bm25SearchStored]] — the (qid, term)
+    * side may be a COMPUTED relation (the PRF round-2 expansion), so
+    * it is pinned once (it feeds the bucket collect, the term
+    * semi-join, and the candidate join) and deduplicated. */
+  /** The registry/live/stale frame triple every stored read resolves
+    * versions against — one builder so a multi-stage stored verb
+    * (stored MaxSim: shortlist then forward read) constructs it ONCE
+    * and shares the frames across its stages instead of rebuilding
+    * the corpus-thin registry chain per stage. */
+  private def sparseLiveState(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, asOfBatch: Long)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) = {
+    val reg0 = store.read("sparse_docs", s)
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl")
+    requireAboveHorizon(reg0, asOfBatch)
+    val reg = asOf(reg0, asOfBatch)
+    val live = liveOf(reg, s, store)
+    (reg, live, staleSparseKeys(reg, live))
+  }
+
+  private def bm25RankStored(s: org.apache.spark.sql.SparkSession,
+      qt0: org.apache.spark.sql.DataFrame, store: graft.store.Store,
+      k: Int, excludeSelf: Boolean, asOfBatch: Long,
+      state: Option[(org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = None)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val qt = qt0.distinct()
+      .withColumn("bucket", pmod(xxhash64($"term"), lit(SparseBuckets)))
+      .localCheckpoint(true)
+    // bounded collect: ≤ |distinct query terms| bucket ids
+    val qb = qt.select($"bucket").distinct().collect().map(_.getLong(0))
+    val (_, live, stale) =
+      state.getOrElse(sparseLiveState(s, store, asOfBatch))
+    // corpus statistics over the LIVE set: exact under updates and
+    // deletes, where summed per-batch partials double-count — the
+    // registry scan is ~1% of a postings scan and collapses to one
+    // row per doc after compaction
+    val tot = live.agg(count(lit(1)).as("n_docs"),
+      sum($"dl").cast("double").as("sum_dl"))
+    // version resolution as an ANTI-join against the stale sliver:
+    // the bucket-pruned postings never reshuffle, and the join side
+    // is updates-sized, not corpus-sized (see staleSparseKeys)
+    val post = asOf(store.read("sparse_postings", s)
+        .filter($"bucket".isin(qb.toIndexedSeq.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"term", $"doc_id",
+          $"tf", $"dl"), asOfBatch)
+      .join(stale, Seq("doc_id", "batch"), "left_anti")
+    // all LIVE postings of the queried terms: candidate rows AND the
+    // terms' exact document frequencies come from this one frame
+    val tpost = post
+      .join(broadcast(qt.select($"term").distinct()), "term")
+    val dfq = tpost.groupBy($"term").agg(count(lit(1)).as("df"))
+    val cand = tpost.join(broadcast(qt.select($"qid", $"term")), "term")
+    val scored = withCi(
+      (if (excludeSelf) cand.filter($"doc_id" =!= $"qid") else cand)
+        .join(dfq, "term")
+        .crossJoin(broadcast(tot)))
+      .groupBy($"qid", $"doc_id").agg(sum($"ci").as("bm25"))
+    scored.withColumn("rn", row_number().over(Window
+        .partitionBy($"qid").orderBy($"bm25".desc, $"doc_id"))
+        .cast("long"))
+      .filter($"rn" <= k)
+      .orderBy($"qid", $"rn")
+  }
+
+  /** One-shot exact BM25 over an arbitrary documents frame with an
+    * explicit query set — the spec's independent twin for
+    * [[bm25SearchStored]]: same [[withCi]] arithmetic, frames built
+    * directly from the given docs (so "stored search over an update
+    * history" can be pinned row-identical to "one-shot over the
+    * latest versions"). */
+  private[graft] def bm25SearchOver(s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], k: Int = 5,
+      excludeSelf: Boolean = true): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tkd = tokenized(docs)
+    val tf = tkd
+      .select($"doc_id", size($"tk").cast("long").as("dl"),
+        explode($"tk").as("term"))
+      .groupBy($"doc_id", $"dl", $"term").agg(count(lit(1)).as("tf"))
+    val dfr = termDf(tkd)
+    val tot = corpusTotals(tkd)
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    val cand = tf.join(broadcast(qt), "term")
+    val scored = withCi(
+      (if (excludeSelf) cand.filter($"doc_id" =!= $"qid") else cand)
+        .join(dfr, "term")
+        .crossJoin(broadcast(tot)))
+      .groupBy($"qid", $"doc_id").agg(sum($"ci").as("bm25"))
+    scored.withColumn("rn", row_number().over(Window
+        .partitionBy($"qid").orderBy($"bm25".desc, $"doc_id"))
+        .cast("long"))
+      .filter($"rn" <= k)
+      .orderBy($"qid", $"rn")
+  }
+
+  /** Compact the persisted sparse index: fold every batch partition
+    * into ONE consolidated batch keeping each doc's LATEST version
+    * only, and fold tombstones physically — the
+    * [[VectorOps.compactAnnCorpus]] staging discipline applied to
+    * postings. After compaction the registry holds one row per live
+    * doc and a search's version-resolution join degenerates to a
+    * same-size equi-join; the batch-per-day small-file tax is gone.
+    * At no point does a write read the files it replaces (the
+    * consolidated copy lands in staging entities first, then source
+    * partitions drop, then staged rows move into place). Run as the
+    * index's offline maintenance job, not under a concurrent
+    * writer. */
+  def compactSparseIndex(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, intoBatch: Long = -1L): Unit = {
+    // crash recovery FIRST: a prior compaction that staged its
+    // consolidated copy and then died mid-move left the stage holding
+    // the only complete index — roll that move forward before reading
+    // main state (which may be partially deleted)
+    graft.store.StagedFold.rollForward(store, s, "sparse",
+      sparseFoldEntities, retireAfterFold(s, store))
+    val reg = store.read("sparse_docs", s)
+    // bounded collects: one row per ingested batch; tombstone presence
+    val batches = reg.select($"batch".cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    // Compaction physically destroys superseded versions, so it IS
+    // the as-of snapshot horizon: surviving rows must be relabeled to
+    // a batch AT OR ABOVE everything folded (default: the newest
+    // folded batch — "the live state as of the newest batch", which
+    // stays a TRUE statement). Folding DOWNWARD would present
+    // post-update state under a pre-update batch id and silently
+    // corrupt every later snapshot cut; the searches' horizon guard
+    // could no longer detect it.
+    val into =
+      if (intoBatch >= 0L) intoBatch else batches.lastOption.getOrElse(0L)
+    require(batches.isEmpty || into >= batches.last,
+      s"intoBatch $into is below the newest folded batch " +
+        s"${batches.last}: relabeling versions backwards would " +
+        "corrupt as-of snapshot reads")
+    // entity-absent only — a FAILING tombstone read must abort the
+    // compaction loudly (liveOf's discipline), not silently no-op as
+    // "already compact" or skip the retirement below
+    val hasTomb =
+      try store.read("sparse_tombstones", s).limit(1).count() > 0
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    if (batches.length <= 1 &&
+      batches.headOption.forall(_ == into) && !hasTomb)
+      return // already compact
+    val regT = reg
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl")
+    val live = liveOf(regT, s, store)
+    // the postings fold anti-joins the updates-sized stale sliver
+    // (never an inner join with the corpus-sized registry), so the
+    // only corpus-wide movement is the rewrite itself. The staged
+    // swap (stage writes → intent marker → move, crash rolled forward
+    // by the probe above) is the shared [[graft.store.StagedFold]]
+    // discipline; tombstone retirement re-runs after the move in both
+    // the normal and the recovery path.
+    // the forward index folds through the SAME move; a store written
+    // before the forward index existed simply has no such entity —
+    // its fold list shrinks (and StagedFold.move tolerates the
+    // missing stage on recovery)
+    val fwdStage =
+      try Some(sparseFoldEntities(2) ->
+        store.read("sparse_forward", s)
+          .select($"batch".cast("long").as("batch"),
+            $"dbucket".cast("long").as("dbucket"), $"doc_id",
+            $"term", $"tf", $"dl")
+          .join(staleSparseKeys(regT, live), Seq("doc_id", "batch"),
+            "left_anti")
+          .select(lit(into).as("batch"), $"dbucket", $"doc_id",
+            $"term", $"tf", $"dl"))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    graft.store.StagedFold.run(store, s, "sparse", Seq(
+      sparseFoldEntities(0) ->
+        store.read("sparse_postings", s)
+          .select($"batch".cast("long").as("batch"),
+            $"bucket".cast("long").as("bucket"), $"term", $"doc_id",
+            $"tf", $"dl", $"positions")
+          .join(staleSparseKeys(regT, live), Seq("doc_id", "batch"),
+            "left_anti")
+          .select(lit(into).as("batch"), $"bucket", $"term",
+            $"doc_id", $"tf", $"dl", $"positions"),
+      sparseFoldEntities(1) ->
+        live.select(lit(into).as("batch"),
+          pmod(xxhash64($"doc_id"), lit(SparseBuckets)).as("dbucket"),
+          $"doc_id", $"dl")) ++ fwdStage,
+      horizon = into, after = retireAfterFold(s, store))
+  }
+
+  /** The sparse index's folded entities, with the stage→main recasts
+    * (partition columns come back from directory inference with
+    * narrowed types). */
+  private def sparseFoldEntities: Seq[graft.store.FoldEntity] = Seq(
+    graft.store.FoldEntity("sparse_postings", Seq("batch", "bucket"),
+      df => df.withColumn("batch", $"batch".cast("long"))
+        .withColumn("bucket", $"bucket".cast("long"))),
+    graft.store.FoldEntity("sparse_docs", Seq("batch", "dbucket"),
+      df => df.withColumn("batch", $"batch".cast("long"))
+        .withColumn("dbucket", $"dbucket".cast("long"))),
+    graft.store.FoldEntity("sparse_forward", Seq("batch", "dbucket"),
+      df => df.withColumn("batch", $"batch".cast("long"))
+        .withColumn("dbucket", $"dbucket".cast("long"))))
+
+  /** Post-fold step shared by the normal and crash-recovery paths:
+    * retire the tombstones the fold physically applied (keeping
+    * forward-shadowing ones — see [[retireFoldedTombstones]]). */
+  private def retireAfterFold(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store): Long => Unit = { into =>
+    val hasTomb =
+      try store.read("sparse_tombstones", s).limit(1).count() > 0
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    if (hasTomb) retireFoldedTombstones(s, store, into)
+  }
+
+  /** Retire tombstones compaction has fully folded (upto ≤ the folded
+    * horizon); a tombstone whose explicit `upto` still reaches PAST
+    * the horizon keeps its forward-shadowing effect on batches yet to
+    * be ingested — dropping it (the old behavior) silently resurrected
+    * the doc on the next append below its watermark. */
+  private def retireFoldedTombstones(
+      s: org.apache.spark.sql.SparkSession, store: graft.store.Store,
+      into: Long): Unit = {
+    val keep = store.read("sparse_tombstones", s)
+      .select($"doc_id".cast("long").as("doc_id"),
+        $"upto".cast("long").as("upto"))
+      .filter($"upto" > into)
+      .localCheckpoint(true) // materialize before deleting its source
+    store.delete("sparse_tombstones", Seq.empty)
+    if (keep.limit(1).count() > 0)
+      store.write("sparse_tombstones", keep, Seq("doc_id"))
+  }
 
   /** The unranked (qid, doc_id, bm25) score relation — the x47 core,
     * shared by the rank query below and x111's exclusion-then-rank.
@@ -369,7 +926,9 @@ object TextOps {
 
   /** The integerized LMDirichlet contribution + (qid, doc) rollup +
     * rank, over a candidate frame carrying (qid, doc_id, tf, ctf, dl,
-    * c_len) — x119's scorer. */
+    * c_len) — ONE scorer for the three x119 entry points so the
+    * arithmetic cannot drift between the corpus scan, the one-shot
+    * twin, and the stored search. */
   private def lmRank(cand: org.apache.spark.sql.DataFrame, k: Int)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -383,6 +942,76 @@ object TextOps {
         .orderBy($"ql".desc, $"doc_id")).cast("long"))
       .filter($"rn" <= k)
       .orderBy($"qid", $"rn")
+  }
+
+  /** One-shot LMDirichlet retrieval over an arbitrary documents frame
+    * with an explicit query set — the spec's independent twin for
+    * [[lmDirichletStored]]. Collection statistics (ctf, |C|) come
+    * from the given frame, exactly as the stored path derives them
+    * from the live registry. */
+  private[graft] def lmDirichletOver(
+      s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], k: Int = 5,
+      excludeSelf: Boolean = true): org.apache.spark.sql.DataFrame = {
+    require(queries.nonEmpty, "LM retrieval needs queries")
+    val tkd = tokenized(docs)
+    val tf = tkd.select($"doc_id", explode($"tk").as("term"))
+      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
+    val dl = tkd.select($"doc_id", size($"tk").cast("long").as("dl"))
+    val ctf = tf.groupBy($"term").agg(sum($"tf").as("ctf"))
+    val cl = dl.agg(sum($"dl").cast("double").as("c_len"))
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    val cand = tf.join(broadcast(qt), "term")
+    lmRank((if (excludeSelf) cand.filter($"doc_id" =!= $"qid") else cand)
+      .join(ctf, "term")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(cl)), k)
+  }
+
+  /** LMDirichlet retrieval over the PERSISTED sparse index — the
+    * stored twin of x119, sharing [[bm25SearchStored]]'s exact plumb:
+    * postings read ONLY for the queried terms' buckets, versions
+    * resolved against the [[staleSparseKeys]] sliver, the same as-of
+    * cut on registry AND postings. Collection statistics are LIVE
+    * statistics: |C| = Σ dl over the live registry (the one thin
+    * corpus-proportional pass, shared shape with BM25's totals), and
+    * a queried term's ctf = the sum of its live postings' stored tf
+    * partials — a term's postings all live in its bucket, so the
+    * bucket-pruned read IS the term's full live posting list and ctf
+    * needs no extra scan. */
+  def lmDirichletStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, queries: Seq[(Long, Seq[String])],
+      k: Int = 5, excludeSelf: Boolean = true,
+      asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    require(queries.nonEmpty, "stored LM retrieval needs queries")
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+      .withColumn("bucket", pmod(xxhash64($"term"), lit(SparseBuckets)))
+    // bounded collect: ≤ |distinct query terms| bucket ids
+    val qb = qt.select($"bucket").distinct().collect().map(_.getLong(0))
+    val reg0 = store.read("sparse_docs", s)
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl")
+    requireAboveHorizon(reg0, asOfBatch)
+    val reg = asOf(reg0, asOfBatch)
+    val live = liveOf(reg, s, store)
+    val cl = live.agg(sum($"dl").cast("double").as("c_len"))
+    val tpost = asOf(store.read("sparse_postings", s)
+        .filter($"bucket".isin(qb.toIndexedSeq.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"term", $"doc_id",
+          $"tf", $"dl"), asOfBatch)
+      .join(staleSparseKeys(reg, live), Seq("doc_id", "batch"),
+        "left_anti")
+      .join(broadcast(qt.select($"term").distinct()), "term")
+    val ctf = tpost.groupBy($"term").agg(sum($"tf").as("ctf"))
+    val cand = tpost.join(broadcast(qt.select($"qid", $"term")), "term")
+    lmRank((if (excludeSelf) cand.filter($"doc_id" =!= $"qid") else cand)
+      .join(ctf, "term")
+      .crossJoin(broadcast(cl)), k)
   }
 
   /** x118 body: late-interaction (ColBERT MaxSim) reranking — the
@@ -442,12 +1071,14 @@ object TextOps {
     maxSimRank(shortlist, qterms, dterms, k, dims)
   }
 
-  /** x118's MaxSim core: the embedding derivation and the
-    * max/sum/rank rollup. `shortlist` is (qid, doc_id) candidate pairs;
-    * `qt` is (qid, term) query slots; `dterms` is the shortlist docs'
-    * DISTINCT (doc_id, term) relation (MaxSim over occurrences equals
-    * MaxSim over distinct terms — the identity that makes the scorer
-    * relational). */
+  /** The MaxSim core shared by the three x118 entry points (corpus
+    * scan, [[lateInteractionOver]], [[lateInteractionStored]]) — ONE
+    * definition of the embedding derivation and the max/sum/rank
+    * rollup so the arithmetic cannot drift between them. `shortlist`
+    * is (qid, doc_id) candidate pairs; `qt` is (qid, term) query
+    * slots; `dterms` is the shortlist docs' DISTINCT (doc_id, term)
+    * relation (MaxSim over occurrences equals MaxSim over distinct
+    * terms — the identity that makes the scorer relational). */
   private def maxSimRank(shortlist: org.apache.spark.sql.DataFrame,
       qt: org.apache.spark.sql.DataFrame,
       dterms: org.apache.spark.sql.DataFrame, k: Int, dims: Int)
@@ -476,6 +1107,81 @@ object TextOps {
         .orderBy($"li".desc, $"doc_id")).cast("long"))
       .filter($"rn" <= k)
       .orderBy($"qid", $"rn")
+  }
+
+  /** One-shot late-interaction reranking over an arbitrary documents
+    * frame with an explicit query set — the spec's independent twin
+    * for [[lateInteractionStored]]: BM25 shortlist via
+    * [[bm25SearchOver]], shortlist-doc terms from the given frame,
+    * the same [[maxSimRank]] core. */
+  private[graft] def lateInteractionOver(
+      s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], k: Int = 5, shortK: Int = 20,
+      dims: Int = 8): org.apache.spark.sql.DataFrame = {
+    require(queries.nonEmpty, "late-interaction needs queries")
+    val shortlist = bm25SearchOver(s, docs, queries, shortK)
+      .select($"qid", $"doc_id")
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    val docsNeeded = shortlist.select($"doc_id").distinct()
+    val dterms = tokenized(docs)
+      .select($"doc_id", explode($"tk").as("term")).distinct()
+      .join(broadcast(docsNeeded), Seq("doc_id"))
+    maxSimRank(shortlist, qt, dterms, k, dims)
+  }
+
+  /** Late-interaction (ColBERT MaxSim) reranking over the PERSISTED
+    * sparse index — x118's stored twin, the last retrieval scorer to
+    * gain a served-from-the-index path (BM25, phrase, proximity,
+    * LM Dirichlet, and PRF already have theirs). The shortlist is
+    * [[bm25RankStored]] (bucket-pruned postings, live statistics);
+    * the shortlist docs' term lists come from the FORWARD index
+    * (`sparse_forward`, bucketed on hash(doc_id) — MaxSim needs
+    * exactly the (doc, term) rows of ≤ queries×shortK docs, so the
+    * dbucket-pruned read touches a bounded sliver of the index, never
+    * the corpus), version-resolved against the [[staleSparseKeys]]
+    * sliver and cut at the same as-of as every stored read. A doc
+    * re-ingested with new text reranks on its LATEST terms only;
+    * tombstoned docs neither shortlist nor rerank; snapshots
+    * reproduce any past reranking down to the compaction horizon.
+    *
+    * Bounded collect: the shortlist ids' dbucket ids (≤ q×shortK). */
+  def lateInteractionStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, queries: Seq[(Long, Seq[String])],
+      k: Int = 5, shortK: Int = 20, dims: Int = 8,
+      asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    require(queries.nonEmpty, "stored late-interaction needs queries")
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    // ONE registry/live/stale construction shared by the shortlist
+    // and the forward read (the two stages still execute as two
+    // actions — the shortlist checkpoint is what bounds the dbucket
+    // collect — but they share frames, not rebuilt chains)
+    val state = sparseLiveState(s, store, asOfBatch)
+    // pinned: the shortlist feeds the dbucket collect, the docsNeeded
+    // broadcast, and the MaxSim pair join (the eager horizon check
+    // ran inside sparseLiveState)
+    val shortlist = bm25RankStored(s, qt, store, shortK,
+        excludeSelf = true, asOfBatch, Some(state))
+      .select($"qid", $"doc_id")
+      .localCheckpoint(true)
+    // bounded collect: the shortlist docs' dbucket ids (≤ q×shortK)
+    val dbs = shortlist
+      .select(pmod(xxhash64($"doc_id"), lit(SparseBuckets)).as("db"))
+      .distinct().collect().map(_.getLong(0)).toIndexedSeq
+    val docsNeeded = shortlist.select($"doc_id").distinct()
+    val dterms = asOf(store.read("sparse_forward", s)
+        .filter($"dbucket".isin(dbs.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"doc_id",
+          $"term"), asOfBatch)
+      .join(state._3, Seq("doc_id", "batch"), "left_anti")
+      .join(broadcast(docsNeeded), Seq("doc_id"))
+      .select($"doc_id", $"term")
+    maxSimRank(shortlist, qt, dterms, k, dims)
   }
 
   /** x113 body: exact positional phrase search — Lucene PhraseQuery
@@ -512,11 +1218,13 @@ object TextOps {
     phraseOccurrences(pos, qp, plen, k)
   }
 
-  /** x113's positional-intersection core: conjunctive candidate prune
-    * on the distinct (doc, term) relation, then anchor-grouped
-    * intersection. `pos` is (doc_id, pos, term) token positions; `qp` is
-    * (qid, idx, term) phrase slots — both position bases cancel in the (pos
-    * − idx) anchor. */
+  /** The positional-intersection core shared by the three phrase
+    * entry points (x113's corpus scan, [[phraseSearchOver]],
+    * [[phraseSearchStored]]): conjunctive candidate prune on the
+    * distinct (doc, term) relation, then anchor-grouped intersection.
+    * `pos` is (doc_id, pos, term) token positions; `qp` is
+    * (qid, idx, term) phrase slots — both position bases cancel in
+    * the (pos − idx) anchor. */
   private def phraseOccurrences(pos: org.apache.spark.sql.DataFrame,
       qp: org.apache.spark.sql.DataFrame, plen: Int, k: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -576,7 +1284,9 @@ object TextOps {
     proximityWindows(pos, qp, plen, k)
   }
 
-  /** x117's min-cover sweep: conjunctive candidate prune, then the
+  /** The min-cover sweep shared by the three proximity entry points
+    * (x117's corpus scan, [[proximityRankOver]],
+    * [[proximityRankStored]]): conjunctive candidate prune, then the
     * one-pass smallest-window sweep over each candidate's query-term
     * positions. `pos` is (doc_id, pos, term); `qp` is (qid, term,
     * idx) with idx a 1-based slot id, ≤ `maxSlots` everywhere. */
@@ -611,6 +1321,144 @@ object TextOps {
         .orderBy($"win".asc, $"doc_id")).cast("long"))
       .filter($"rn" <= k)
       .orderBy($"qid", $"rn")
+  }
+
+  /** The (qid, term, idx) slot frame of an unordered term-set query
+    * list: distinct terms, slotted by lexicographic rank — the SAME
+    * deterministic slot convention x117 derives from document
+    * prefixes, shared by the stored and one-shot proximity paths. */
+  private def proximityFrame(s: org.apache.spark.sql.SparkSession,
+      queries: Seq[(Long, Seq[String])])
+      : (org.apache.spark.sql.DataFrame, Int) = {
+    require(queries.nonEmpty, "proximity ranking needs queries")
+    require(queries.forall(_._2.nonEmpty),
+      "every proximity query needs at least one term")
+    val rows = queries.flatMap { case (q, ts) =>
+      ts.distinct.sorted.zipWithIndex.map { case (t, i) =>
+        (q, t, i + 1) }
+    }
+    (s.createDataFrame(rows).toDF("qid", "term", "idx"),
+      queries.map(_._2.distinct.length).max)
+  }
+
+  /** One-shot proximity ranking over an arbitrary documents frame
+    * with an explicit query set — the spec's independent twin for
+    * [[proximityRankStored]]. */
+  private[graft] def proximityRankOver(
+      s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], k: Int = 10)
+      : org.apache.spark.sql.DataFrame = {
+    val (qp, maxSlots) = proximityFrame(s, queries)
+    val pos = tokenized(docs).select($"doc_id",
+      posexplode($"tk").as(Seq("pos", "term")))
+    proximityWindows(pos, qp, maxSlots, k)
+  }
+
+  /** Proximity ranking over the PERSISTED sparse index — the second
+    * stored consumer of the postings' position arrays (after
+    * [[phraseSearchStored]]): reads ONLY the query terms' bucket
+    * directories, resolves versions against the [[staleSparseKeys]]
+    * sliver and takes the same as-of cut as every stored search, then
+    * explodes the pruned postings' positions into the shared
+    * [[proximityWindows]] sweep. A doc re-ingested with moved text
+    * ranks at its LATEST term positions only; tombstoned docs never
+    * rank; snapshots reproduce any past ranking down to the
+    * compaction horizon. */
+  def proximityRankStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, queries: Seq[(Long, Seq[String])],
+      k: Int = 10, asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    val (qp0, maxSlots) = proximityFrame(s, queries)
+    val qp = qp0.withColumn("bucket",
+      pmod(xxhash64($"term"), lit(SparseBuckets)))
+    // bounded collect: ≤ |distinct query terms| bucket ids
+    val qb = qp.select($"bucket").distinct().collect().map(_.getLong(0))
+    val reg0 = store.read("sparse_docs", s)
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl")
+    requireAboveHorizon(reg0, asOfBatch)
+    val reg = asOf(reg0, asOfBatch)
+    val live = liveOf(reg, s, store)
+    val post = asOf(store.read("sparse_postings", s)
+        .filter($"bucket".isin(qb.toIndexedSeq.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"term", $"doc_id",
+          $"positions"), asOfBatch)
+      .join(staleSparseKeys(reg, live), Seq("doc_id", "batch"),
+        "left_anti")
+      .join(broadcast(qp.select($"term").distinct()), "term")
+    val pos = post.select($"doc_id", $"term",
+      explode($"positions").as("pos"))
+    proximityWindows(pos, qp.select($"qid", $"term", $"idx"),
+      maxSlots, k)
+  }
+
+  /** One-shot phrase search over an arbitrary documents frame with an
+    * explicit phrase set — the spec's independent twin for
+    * [[phraseSearchStored]] (same core, frames built directly from
+    * the given docs). Every phrase must have the same length `plen`
+    * (the anchor-completeness test is per-slot-count). */
+  /** The (qid, idx, term) slot frame of an ordered phrase set — ONE
+    * construction (and one length validation) shared by the stored
+    * and one-shot phrase paths so slot semantics cannot drift. */
+  private def phraseFrame(s: org.apache.spark.sql.SparkSession,
+      phrases: Seq[(Long, Seq[String])], plen: Int)
+      : org.apache.spark.sql.DataFrame = {
+    require(phrases.nonEmpty, "phrase search needs phrases")
+    require(phrases.forall(_._2.length == plen),
+      s"every phrase must have length $plen")
+    s.createDataFrame(phrases.flatMap { case (q, ts) =>
+      ts.zipWithIndex.map { case (t, i) => (q, i, t) }
+    }).toDF("qid", "idx", "term")
+  }
+
+  private[graft] def phraseSearchOver(
+      s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      phrases: Seq[(Long, Seq[String])], plen: Int, k: Int = 10)
+      : org.apache.spark.sql.DataFrame = {
+    val pos = tokenized(docs).select($"doc_id",
+      posexplode($"tk").as(Seq("pos", "term")))
+    phraseOccurrences(pos, phraseFrame(s, phrases, plen), plen, k)
+  }
+
+  /** Exact phrase search over the PERSISTED sparse index: the
+    * positions stored alongside each posting row (Lucene's
+    * postings-with-positions layout, written by [[appendSparseIndex]]
+    * at zero extra passes) answer slop-0 phrase queries without
+    * touching the documents themselves. Reads ONLY the phrase terms'
+    * bucket directories, resolves versions against the
+    * [[staleSparseKeys]] sliver exactly like [[bm25SearchStored]] —
+    * so a doc re-ingested with moved text matches at its LATEST
+    * positions only and tombstoned docs never match — then explodes
+    * the pruned postings' position arrays into the shared
+    * [[phraseOccurrences]] core. The corpus never shuffles: the
+    * exploded frame is (queried-term occurrences) sized, the same
+    * bound as the one-shot path's post-prune stage. */
+  def phraseSearchStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, phrases: Seq[(Long, Seq[String])],
+      k: Int = 10, asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    require(phrases.nonEmpty, "stored phrase search needs phrases")
+    val plen = phrases.head._2.length
+    val qp = phraseFrame(s, phrases, plen)
+      .withColumn("bucket", pmod(xxhash64($"term"), lit(SparseBuckets)))
+    // bounded collect: ≤ |distinct phrase terms| bucket ids
+    val qb = qp.select($"bucket").distinct().collect().map(_.getLong(0))
+    val reg0 = store.read("sparse_docs", s)
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl")
+    requireAboveHorizon(reg0, asOfBatch)
+    val reg = asOf(reg0, asOfBatch)
+    val live = liveOf(reg, s, store)
+    val post = asOf(store.read("sparse_postings", s)
+        .filter($"bucket".isin(qb.toIndexedSeq.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"term", $"doc_id",
+          $"positions"), asOfBatch)
+      .join(staleSparseKeys(reg, live), Seq("doc_id", "batch"),
+        "left_anti")
+      .join(broadcast(qp.select($"term").distinct()), "term")
+    val pos = post.select($"doc_id", $"term",
+      explode($"positions").as("pos"))
+    phraseOccurrences(pos, qp.select($"qid", $"idx", $"term"), plen, k)
   }
 
   /** x61 body: RM3-style pseudo-relevance feedback. Round 1 is x47's
@@ -652,6 +1500,124 @@ object TextOps {
       .filter($"rn" <= k)
       .select($"qid", $"doc_id", $"bm25".as("bm25_prf"), $"rn")
       .orderBy($"qid", $"rn")
+  }
+
+  /** One-shot PRF over an arbitrary documents frame with an explicit
+    * query set — the spec's independent twin for [[prfExpandStored]]
+    * (x61's arithmetic, frames built directly from the given docs). */
+  private[graft] def prfExpandOver(s: org.apache.spark.sql.SparkSession,
+      docs: org.apache.spark.sql.DataFrame,
+      queries: Seq[(Long, Seq[String])], fbK: Int = 3, expK: Int = 2,
+      k: Int = 5): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val tkd = tokenized(docs)
+    val tf = tkd
+      .select($"doc_id", size($"tk").cast("long").as("dl"),
+        explode($"tk").as("term"))
+      .groupBy($"doc_id", $"dl", $"term").agg(count(lit(1)).as("tf"))
+    val dfr = termDf(tkd)
+    val st = corpusTotals(tkd)
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    def scores(q: org.apache.spark.sql.DataFrame) =
+      withCi(tf.join(broadcast(q.distinct()), "term")
+        .filter($"doc_id" =!= $"qid")
+        .join(dfr, "term").crossJoin(broadcast(st)))
+        .groupBy($"qid", $"doc_id").agg(sum($"ci").as("bm25"))
+    val fb = scores(qt)
+      .withColumn("rn", row_number().over(Window.partitionBy($"qid")
+        .orderBy($"bm25".desc, $"doc_id")))
+      .filter($"rn" <= fbK).select($"qid", $"doc_id")
+    val cand = tf.join(fb, "doc_id")
+      .join(qt.select($"qid".as("q0"), $"term".as("t0")),
+        $"qid" === $"q0" && $"term" === $"t0", "left_anti")
+    val ew = withCi(cand.join(dfr, "term").crossJoin(broadcast(st)))
+      .groupBy($"qid", $"term").agg(sum($"ci").as("w"))
+    val exp = ew.withColumn("rn", row_number().over(
+        Window.partitionBy($"qid").orderBy($"w".desc, $"term")))
+      .filter($"rn" <= expK).select($"qid", $"term")
+    scores(qt.unionByName(exp))
+      .withColumn("rn", row_number().over(Window.partitionBy($"qid")
+        .orderBy($"bm25".desc, $"doc_id")).cast("long"))
+      .filter($"rn" <= k)
+      .orderBy($"qid", $"rn")
+  }
+
+  /** RM3-style pseudo-relevance feedback over the PERSISTED sparse
+    * index — x61's stored twin, completing the served-from-the-index
+    * retrieval stack (BM25, phrase, proximity, LM Dirichlet, PRF).
+    * Round 1 is [[bm25SearchStored]] at k = fbK; the feedback docs'
+    * term lists come from the FORWARD index (`sparse_forward` —
+    * Lucene's term-vectors analog, written by [[appendSparseIndex]]
+    * from the same tf rollup and bucketed on hash(doc_id)), read
+    * dbucket-pruned for exactly the ≤ queries×fbK feedback ids and
+    * version-resolved against the same stale sliver as every stored
+    * read; expansion-term weights use the LIVE df of the candidate
+    * terms (their buckets' pruned posting lists) and live corpus
+    * totals; round 2 re-scores through the same stored core with the
+    * expanded term frame. As-of cuts apply to every read, so a past
+    * PRF run re-derives exactly.
+    *
+    * Bounded collects: the feedback (qid, doc_id) pairs (≤ q×fbK),
+    * their dbucket ids, and the candidate terms' bucket ids (≤ the
+    * bucket count). */
+  def prfExpandStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, queries: Seq[(Long, Seq[String])],
+      fbK: Int = 3, expK: Int = 2, k: Int = 5,
+      asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(queries.nonEmpty, "stored PRF needs queries")
+    val qt = s.createDataFrame(
+        queries.flatMap { case (q, ts) => ts.distinct.map(t => (q, t)) })
+      .toDF("qid", "term")
+    val fb = bm25RankStored(s, qt, store, fbK, excludeSelf = true,
+        asOfBatch)
+      .select($"qid", $"doc_id")
+      .localCheckpoint(true)
+    // bounded collects: feedback ids and their dbuckets
+    val fbIds = fb.select($"doc_id").distinct()
+      .select($"doc_id",
+        pmod(xxhash64($"doc_id"), lit(SparseBuckets)).as("db"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val dbs = fbIds.map(_._2).distinct.toIndexedSeq
+    val reg = asOf(store.read("sparse_docs", s)
+      .select($"batch".cast("long").as("batch"), $"doc_id", $"dl"),
+      asOfBatch)
+    val live = liveOf(reg, s, store)
+    val stale = staleSparseKeys(reg, live)
+    val fwd = asOf(store.read("sparse_forward", s)
+        .filter($"dbucket".isin(dbs.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"doc_id",
+          $"term", $"tf", $"dl"), asOfBatch)
+      .join(stale, Seq("doc_id", "batch"), "left_anti")
+      .join(broadcast(fb), "doc_id")
+    // candidate expansion terms: every feedback-doc term that is NOT
+    // already a term of that query
+    val cand = fwd.join(qt.select($"qid".as("q0"), $"term".as("t0")),
+        $"qid" === $"q0" && $"term" === $"t0", "left_anti")
+      .localCheckpoint(true)
+    // bounded collect: the candidate terms' bucket ids (≤ 64)
+    val cb = cand
+      .select(pmod(xxhash64($"term"), lit(SparseBuckets)).as("b"))
+      .distinct().collect().map(_.getLong(0)).toIndexedSeq
+    val dfq = asOf(store.read("sparse_postings", s)
+        .filter($"bucket".isin(cb.map(Long.box): _*))
+        .select($"batch".cast("long").as("batch"), $"term",
+          $"doc_id"), asOfBatch)
+      .join(stale, Seq("doc_id", "batch"), "left_anti")
+      .join(broadcast(cand.select($"term").distinct()), "term")
+      .groupBy($"term").agg(count(lit(1)).as("df"))
+    val tot = live.agg(count(lit(1)).as("n_docs"),
+      sum($"dl").cast("double").as("sum_dl"))
+    val ew = withCi(cand.join(dfq, "term").crossJoin(broadcast(tot)))
+      .groupBy($"qid", $"term").agg(sum($"ci").as("w"))
+    val exp = ew.withColumn("rn", row_number().over(
+        Window.partitionBy($"qid").orderBy($"w".desc, $"term")))
+      .filter($"rn" <= expK).select($"qid", $"term")
+    bm25RankStored(s, qt.unionByName(exp), store, k,
+      excludeSelf = true, asOfBatch)
   }
 
   /** The x54 temperature-mixture share frame — (source, n_docs,
@@ -730,6 +1696,109 @@ object TextOps {
     * literal in BOTH engines (the m4 fixed-weights discipline). */
   private[graft] val CeWeights = Array(500000L, 3000L, 1L, -100L)
 
+  /** Persist the cross-encoder model artifact as a `ce_model` entity —
+    * the retrieval stack's third stage gets the same stored lifecycle
+    * as its first two (sparse index, ANN books): the model bytes are
+    * a keyed row, replays overwrite themselves, and a serving session
+    * loads the artifact instead of carrying weights in code (M5's
+    * model-(de)serialization discipline; the bytes ARE the
+    * [[graft.ml.CrossEncoder]] contract, so a real ONNX/TF blob drops
+    * into the same row). */
+  def persistCeModel(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, weights: Array[Long] = CeWeights,
+      modelId: Long = 0L, trainedAt: Long = 0L): Unit = {
+    // VERSIONED under (model_id, trained_at): a retrain lands a new
+    // version and leaves prior ones readable (loadCeModel's as-of),
+    // while replaying the same version overwrites only itself —
+    // yesterday's rerank stays reproducible after today's retrain
+    val bytes = graft.ml.CrossEncoder.model(weights)
+    // Same-version re-persist is the sanctioned crash-recovery replay
+    // — but only the SAME weights are a replay. New weights under an
+    // existing version stamp would silently redefine what every past
+    // consumer of that version scored with (the trainStoredEmbeddings
+    // / persistAnnBooks same-version geometry rule; here the whole
+    // artifact is the geometry, and it is one row, so the guard
+    // compares it outright). Bounded: one keyed point read.
+    val existing =
+      try store.readKeyed("ce_model",
+          Seq("model_id" -> modelId, "trained_at" -> trainedAt), s)
+        .select($"model").collect()
+      catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          Array.empty[org.apache.spark.sql.Row]
+      }
+    existing.headOption.foreach(r => require(
+      java.util.Arrays.equals(r.getAs[Array[Byte]](0), bytes),
+      s"ce_model $modelId already holds different weights at version " +
+        s"$trainedAt — new weights are a retrain, not a replay; land " +
+        "them under a new trained_at"))
+    store.delete("ce_model",
+      Seq("model_id" -> modelId, "trained_at" -> trainedAt))
+    store.write("ce_model",
+      s.createDataFrame(Seq((modelId, trainedAt, bytes)))
+        .toDF("model_id", "trained_at", "model"),
+      Seq("model_id", "trained_at"))
+  }
+
+  /** Load one persisted cross-encoder artifact — a keyed point read
+    * (the store's O(1) GET) of the model's partition, serving the
+    * newest version at or below `asOfTrainedAt` (latest by default);
+    * refuses loudly when no version exists at or below the cut. */
+  def loadCeModel(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, modelId: Long = 0L,
+      asOfTrainedAt: Long = Long.MaxValue): Array[Byte] = {
+    // bounded: one row per retained version of ONE model id
+    val rows = store.readKeyed("ce_model",
+        Seq("model_id" -> modelId), s)
+      .select($"trained_at".cast("long").as("t"), $"model")
+      .filter($"t" <= asOfTrainedAt)
+      .orderBy($"t".desc).limit(1).collect()
+    require(rows.length == 1,
+      s"ce_model $modelId: no version at or below $asOfTrainedAt")
+    rows.head.getAs[Array[Byte]](1)
+  }
+
+  /** Retention for the versioned cross-encoder artifact: drop every
+    * version of `modelId` strictly below `keepFrom` — except the
+    * newest, which a vacuum never deletes. As-of loads below the cut
+    * then refuse with the standard no-version message. Returns the
+    * number of versions dropped; partition-level deletes only. */
+  def vacuumCeModelVersions(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, keepFrom: Long,
+      modelId: Long = 0L): Int =
+    // ONE retention core for every versioned artifact — the
+    // never-newest rule and crash-window ordering live in one place
+    VectorOps.vacuumVersions(s, store, Seq("ce_model"), keepFrom,
+      key = Seq("model_id" -> modelId))
+
+  /** x110 against a PERSISTED model: load the `ce_model` artifact
+    * (optionally a PAST version via `asOfTrainedAt`) and rerank with
+    * it — a serving session's path (StoreSpec pins it row-identical
+    * to the literal-weights registry body, and a post-retrain as-of
+    * rerank identical to the pre-retrain one). */
+  def rerankCrossStored(s: org.apache.spark.sql.SparkSession,
+      dir: String, store: graft.store.Store, modelId: Long = 0L,
+      shortlist: Int = 20, k: Int = 5,
+      asOfTrainedAt: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame =
+    rerankCrossWith(s, dir,
+      loadCeModel(s, store, modelId, asOfTrainedAt), shortlist, k)
+
+  /** Cross-encoder version drift: per query, the top-k reranked sets
+    * under two persisted model versions, as set sizes + overlap +
+    * exact-integer Jaccard ppm — the roll-forward decision artifact,
+    * sharing [[VectorOps.neighborSetDrift]] with the embedding and
+    * ANN-book families (one drift verb per versioned artifact). */
+  def rerankVersionDrift(s: org.apache.spark.sql.SparkSession,
+      dir: String, store: graft.store.Store, verA: Long, verB: Long,
+      modelId: Long = 0L, shortlist: Int = 20, k: Int = 5)
+      : org.apache.spark.sql.DataFrame = {
+    def side(ver: Long) = rerankCrossStored(s, dir, store, modelId,
+      shortlist, k, asOfTrainedAt = ver)
+      .select($"qid", $"doc_id".as("nid"))
+    VectorOps.neighborSetDrift(side(verA), side(verB))
+  }
+
   /** x110 body: BM25 top-20 shortlist per query, reranked by the
     * batched [[graft.ml.CrossEncoder]] pair scorer (broadcast model
     * bytes, mapPartitions batches — the M3 inference seam). The model
@@ -741,7 +1810,8 @@ object TextOps {
     rerankCrossWith(s, dir, graft.ml.CrossEncoder.model(CeWeights),
       shortlist, k)
 
-  /** [[rerankCross]] over caller-supplied model bytes. */
+  /** [[rerankCross]] over caller-supplied model bytes — shared by the
+    * literal-weights registry body and [[rerankCrossStored]]. */
   private def rerankCrossWith(s: org.apache.spark.sql.SparkSession,
       dir: String, modelBytes: Array[Byte], shortlist: Int, k: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -1047,7 +2117,9 @@ object TextOps {
   }
 
   /** The per-doc integerized quality frame behind x108/x126, over a
-    * caller-supplied documents frame (doc_id, source, text). */
+    * caller-supplied documents frame (doc_id, source, text) — the
+    * streaming drift twin feeds its micro-batches through the same
+    * definition, so live and batch quality cannot drift. */
   private[graft] def qualityOf(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs
@@ -1067,7 +2139,11 @@ object TextOps {
 
   /** x126's sufficient statistics: per (source, decile bucket),
     * reference-half (even doc_ids) and candidate-half (odd) counts.
-    * ≤ |sources|×10 rows however large the corpus. */
+    * This IS the drift monitor's whole state — ≤ |sources|×10 rows
+    * however much corpus has passed, counts add per micro-batch like
+    * any sketch merge rule, so the streaming twin maintains it in
+    * Complete mode with no watermark and no growth (the CMS/HLL twin
+    * discipline applied to data drift). */
   private[graft] def qualityBucketCounts(
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
@@ -1078,7 +2154,8 @@ object TextOps {
       .agg(sum(when($"is_ref", 1L).otherwise(0L)).as("r"),
         sum(when($"is_ref", 0L).otherwise(1L)).as("c"))
 
-  /** x126's report over a (source, bucket, r, c) count table: add-1
+  /** x126's report over a (source, bucket, r, c) count table — the
+    * read side the streaming twin shares with the batch body: add-1
     * smoothing over the full 10-bucket scaffold, exact-integer TV
     * distance in ppm (128-bit cross-products, the x67 rule), and PSI
     * with per-bucket micro-integerized contributions (x119's ln
@@ -1098,9 +2175,9 @@ object TextOps {
     // bounded collect (the report is per-source by contract, so the
     // source list is enumerable at any corpus size): a scaffold
     // derived from g's own lineage is a self-join, and the analyzer
-    // cannot deduplicate some leaves (an in-memory sink table raised
-    // INTERNAL_ERROR conflicting-references); a fresh local relation
-    // sidesteps the whole class.
+    // cannot deduplicate some leaves (the streaming twin's in-memory
+    // sink table raised INTERNAL_ERROR conflicting-references); a
+    // fresh local relation sidesteps the whole class.
     val spark = g.sparkSession
     val srcs = g.select($"source").distinct().collect().map(_.get(0))
     val sb = spark.createDataFrame(
@@ -1135,6 +2212,55 @@ object TextOps {
         sum($"psi6b").cast("long").as("psi6"))
       .orderBy($"source")
   }
+
+  /** As-of drift verdict over the monitor's PERSISTED count table:
+    * the counts are batch-partitioned, so "the drift report as of batch
+    * B" is the same |sources|×10-row read over the `batch <= B`
+    * partition cut (a directory prune, no history replay). Guarded by
+    * the family's maintenance horizon: history below a fold was
+    * physically consolidated and refuses rather than silently serving
+    * the folded (newer) state under an old batch id. Default serves
+    * the latest state — the standing drift report between monitor
+    * ticks. */
+  def psiDriftAsOf(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store,
+      asOfBatch: Long = graft.store.Snapshot.Latest)
+      : org.apache.spark.sql.DataFrame = {
+    graft.store.Horizon.requireServable(store, s, "qualitydrift",
+      asOfBatch)
+    val counts = graft.store.Snapshot.cut(
+        store.read("quality_bucket_counts", s), asOfBatch)
+      .select($"source", $"bucket".cast("long").as("bucket"),
+        $"r".cast("long").as("r"), $"c".cast("long").as("c"))
+      .groupBy($"source", $"bucket")
+      .agg(sum($"r").as("r"), sum($"c").as("c"))
+    psiDriftOver(counts)
+  }
+
+  /** Retention/compaction for the data-drift monitor's count table:
+    * the monitor lands one `quality_bucket_counts` partition per
+    * micro-batch, and its cumulative read scans every landed
+    * partition — bounded state (counts add), but unbounded PARTITION
+    * COUNT: at a million micro-batches the per-batch verdict read
+    * lists a million directories. This folds all landed batches into
+    * one consolidated partition under the newest batch id through the
+    * crash-safe [[graft.store.StagedFold]] (the shared fold of
+    * [[SketchOps.compactSketchEntity]]): counts are a merge-by-sum
+    * sketch, so the fold is the |sources|×10-row rollup. The family
+    * horizon advances with the fold; the monitor's append guard then
+    * refuses a replayed batch at/below it loudly (a delete-before-write
+    * replay would destroy every other row folded with it) — run
+    * compaction as the family's offline maintenance job, never under
+    * the live monitor, like every StagedFold compaction. Verdict rows
+    * (`quality_drift`) are the per-batch PRODUCT, not state — they
+    * are never folded. */
+  def compactQualityCounts(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store): Unit =
+    SketchOps.compactSketchEntity(s, store, "qualitydrift",
+      "quality_bucket_counts",
+      df => df.groupBy($"source", $"bucket")
+        .agg(sum($"r").as("r"), sum($"c").as("c")),
+      Seq("source", "bucket", "r", "c"))
 
   /** x93 body: canonical-by-QUALITY resolution of near-dup clusters —
     * the production dedup selection rule. x19 gives the transitive
@@ -2846,6 +3972,9 @@ object TextOps {
          |  CAST(sum(psi6b) AS BIGINT) AS psi6
          |FROM d GROUP BY source ORDER BY source""".stripMargin) {
       (s, dir) =>
+      // ONE count core + ONE read core, shared verbatim with the
+      // drift monitor ([[graft.streaming.DriftMonitor]]) — live and
+      // batch drift cannot diverge
       psiDriftOver(qualityBucketCounts(
         Tables.spread(s, dir, "documents")))
     },
@@ -3932,8 +5061,8 @@ object TextOps {
         length(translate($"st".getField("best"), " ", "")).cast("long") *
         lit(1000000L))
       .withColumn("dnnum", $"dl" * lit(1000000L))
-      // greatest() guards empty-token docs (the registry path filters
-      // size >= n, where chars > 0 always)
+      // greatest() guards empty-token docs in the streaming reuse
+      // (registry path filters size >= n, where chars > 0 always)
       .withColumn("top2_ppm", expr("t2num div greatest(chars, 1)"))
       .withColumn("dupn_ppm", expr("dnnum div greatest(chars, 1)"))
       .withColumn("rep_keep", $"top2_ppm" < RepTop2MaxPpm &&
@@ -4100,7 +5229,8 @@ object TextOps {
   /** The (doc_id, n_tokens, start, h) sliding-window frame shared by
     * the whole-corpus audit (x129), the trim (x131), and the
     * incremental probe (x134) — ONE definition so the window hash can
-    * never drift between them. */
+    * never drift between the batch, incremental, and persisted
+    * surfaces. */
   private[graft] def substrWinOf(docs: org.apache.spark.sql.DataFrame,
       w: Int): org.apache.spark.sql.DataFrame = docs
     .select($"doc_id", T.wsTokens($"text").as("tk"))
@@ -4286,7 +5416,8 @@ object TextOps {
     * 8-byte hash with the BATCH as the small side; batch self-dup is
     * the x129 map-side-combinable count over one day's windows; the
     * audit window sorts each batch doc's own dup starts. The
-    * historical corpus neither rescans nor reshuffles. */
+    * historical corpus neither rescans nor reshuffles — the
+    * incremental-ingest contract every maintained index here obeys. */
   private[graft] def incrementalSubstr(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val w = SubstrW

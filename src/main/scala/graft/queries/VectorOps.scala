@@ -172,7 +172,9 @@ object VectorOps {
     * MAX dot — x34's historical surface); `trained = true` encodes by
     * MIN L2 (classical PQ — matches the training assignment), reusing
     * the same DotMatrix pass: ||sv||² is row-constant, so argmin of
-    * (||c||² - 2·dot) is the L2 argmin. */
+    * (||c||² - 2·dot) is the L2 argmin. Factored out of [[pqSetup]]
+    * so [[appendAnnCorpus]] can encode NEW batches against persisted
+    * books without touching history. */
   private[graft] def encodeCodes(df: org.apache.spark.sql.DataFrame,
       subCent: Array[Array[Array[Double]]], trained: Boolean)
       : org.apache.spark.sql.DataFrame =
@@ -3443,7 +3445,8 @@ object VectorOps {
     // qcells was the cache's last eager use: training (2 Lloyd's
     // rounds + the seed collect) amortized it; the returned search
     // recomputes the residual projection in ONE pass rather than
-    // pinning corpus-sized blocks for the JVM lifetime
+    // pinning corpus-sized blocks for the JVM lifetime (the
+    // production path is annIvfPqFromStore, which re-encodes nothing)
     res.unpersist()
     require(qids.forall(qcells.contains),
       s"residual IVF-PQ query set needs vec_ids ${qids.mkString(",")}")
@@ -3540,7 +3543,10 @@ object VectorOps {
     annIvfPqWith(s, dir, kmeansBook(s, dir, coarseCells),
       pqBooksTrained(s, dir), k)
 
-  /** The x43 SEARCH alone, over externally-supplied books. */
+  /** The x43 SEARCH alone, over externally-supplied books — the
+    * train-once / search-forever seam ([[persistAnnBooks]] writes the
+    * books through a Store; [[annIvfPqFromStore]] feeds them back in
+    * here). */
   private def annIvfPqWith(s: org.apache.spark.sql.SparkSession,
       dir: String, coarse: Array[Array[Double]],
       books: Array[Array[Array[Double]]], k: Int)
@@ -3662,6 +3668,313 @@ object VectorOps {
       dir: String, k: Int): org.apache.spark.sql.DataFrame = {
     val (coded, qids, lut) = pqSetup(normalizedEmbeddings(s, dir))
     pqRank(coded, qids, lut, k = k).orderBy($"qid", $"rn")
+  }
+
+  // ---- trained-book lifecycle through the storage layer -------------
+  // The x33-index pattern applied to MODEL ARTIFACTS: train once,
+  // persist the (bounded) books as relations, and let every later
+  // search session read them back instead of re-training. Parquet
+  // doubles round-trip exactly, so a search over persisted books is
+  // bit-identical to one over freshly-trained books (StoreSpec).
+
+  /** The newest persisted book version, None when no books exist. */
+  private def latestBookVersion(store: graft.store.Store,
+      s: org.apache.spark.sql.SparkSession): Option[Long] =
+    try {
+      // bounded: one row
+      val r = store.read("ann_coarse_book", s)
+        .agg(max($"trained_at".cast("long"))).first()
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    } catch {
+      case _: org.apache.spark.sql.AnalysisException => None
+    }
+
+  /** Train and persist the x43 artifacts: the coarse book
+    * (`ann_coarse_book`: trained_at, cid, cv) and the per-subspace PQ
+    * codebooks (`ann_pq_books`: trained_at, s, cid, cv) — VERSIONED
+    * under (trained_at) partitions. A retrain lands a NEW version and
+    * leaves prior ones readable ([[loadAnnBooks]]' as-of), so a past
+    * search stays reproducible after today's retrain; re-persisting
+    * the CURRENT version overwrites only itself (idempotent replay).
+    *
+    * Coherence guard: the PQ-coded `ann_corpus` and the cell-addressed
+    * `knn_vectors` are encoded against the book version that ingested
+    * them and carry no raw vectors to re-encode — retraining (a new
+    * trained_at) underneath them would silently desync every stored
+    * search, so it refuses loudly; rebuild into a fresh store (or
+    * tear the dependents down) first. [[rebalanceKnnCells]]' in-place
+    * book mutation is NOT a retrain: it rewrites the current
+    * version's partition and advances the knn maintenance horizon. */
+  def persistAnnBooks(s: org.apache.spark.sql.SparkSession,
+      dir: String, store: graft.store.Store,
+      cells: Int = DefaultCells, trainedAt: Long = 0L): Unit = {
+    // entity-absent means "no dependents"; a FAILING read must
+    // propagate — swallowing it here would let a transient I/O error
+    // wave a destructive retrain through (the liveOf discipline)
+    def populated(e: String) =
+      try store.read(e, s).limit(1).count() > 0
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    def requireNoDependents(what: String): Unit =
+      require(!populated("ann_corpus") && !populated("knn_vectors"),
+        s"ANN book $what would desync the PQ-coded ann_corpus / " +
+          "cell-addressed knn_vectors encoded against the current " +
+          "book — rebuild into a fresh store or tear the dependents " +
+          "down first")
+    latestBookVersion(store, s).foreach { cur =>
+      if (trainedAt != cur) {
+        require(trainedAt > cur,
+          s"ANN book versions must advance: got $trainedAt over $cur")
+        requireNoDependents(s"retrain (version $trainedAt over $cur)")
+      } else {
+        // SAME-version re-persist is the sanctioned crash-recovery
+        // replay — but only content-identical geometry is a replay.
+        // The coarse cell count IS the geometry knob (SubM/CodeK are
+        // constants), so a same-version persist that would CHANGE it
+        // under encoded dependents is a retrain wearing replay's
+        // version stamp (persistAnnBooksScaled's exact hazard).
+        val curCells = store.read("ann_coarse_book", s)
+          .filter($"trained_at".cast("long") === cur).count()
+        if (curCells != cells.toLong)
+          requireNoDependents(
+            s"same-version geometry change ($curCells -> $cells cells)")
+      }
+    }
+    implicit val enc = org.apache.spark.sql.Encoders.product[SubCentRow]
+    val coarse = kmeansBook(s, dir, cells)
+    store.write("ann_coarse_book",
+      s.createDataset(coarse.toIndexedSeq.zipWithIndex.map {
+          case (cv, c) => SubCentRow(0, c.toLong, cv.toSeq, 0.0)
+        })
+        .toDF("ks", "cid", "cv", "n2")
+        .select(lit(trainedAt).as("trained_at"), $"cid", $"cv"),
+      Seq("trained_at"))
+    val books = pqBooksTrained(s, dir)
+    store.write("ann_pq_books",
+      s.createDataset(for {
+          (b, ss) <- books.toIndexedSeq.zipWithIndex
+          (cv, c) <- b.toIndexedSeq.zipWithIndex
+        } yield SubCentRow(ss, c.toLong, cv.toSeq, 0.0))
+        .toDF("s", "cid", "cv", "n2")
+        .select(lit(trainedAt).as("trained_at"), $"s", $"cid", $"cv"),
+      Seq("trained_at"))
+  }
+
+  /** [[persistAnnBooks]] with corpus-scaled coarse geometry — the
+    * production book-training seam. The persisted book then carries
+    * the scaled cell count into every downstream incremental path
+    * ([[appendAnnCorpus]], [[appendKnnGraph]], [[annIvfPqFromStore]])
+    * automatically: they read geometry from the book, not a knob. */
+  def persistAnnBooksScaled(s: org.apache.spark.sql.SparkSession,
+      dir: String, store: graft.store.Store,
+      trainedAt: Long = 0L): Unit = {
+    val (c, _) = scaledGeometry(s, dir)
+    persistAnnBooks(s, dir, store, c, trainedAt)
+  }
+
+  /** Load the persisted [[persistAnnBooks]] artifacts back into driver
+    * arrays (bounded collects — 16×64 + 128×8 doubles; parquet doubles
+    * round-trip exactly). Serves the newest version at or below
+    * `asOfTrainedAt` (latest by default) — both entities are written
+    * together, so one version pick covers both; refuses loudly when
+    * no version exists at or below the cut. */
+  private[graft] def loadAnnBooks(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, asOfTrainedAt: Long = Long.MaxValue)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val cb = store.read("ann_coarse_book", s)
+      .select($"trained_at".cast("long").as("t"), $"cid", $"cv")
+      .filter($"t" <= asOfTrainedAt)
+    // bounded: one row — the served version
+    val vr = cb.agg(max($"t")).first()
+    require(!vr.isNullAt(0),
+      s"no ANN book version at or below $asOfTrainedAt — " +
+        "persistAnnBooks first")
+    val ver = vr.getLong(0)
+    val coarse = cb.filter($"t" === ver)
+      .select($"cid", $"cv").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1).map(_._2)
+    val pq = store.read("ann_pq_books", s)
+      .filter($"trained_at".cast("long") === ver)
+      .select($"s", $"cid", $"cv").collect()
+      .map(r => (r.getInt(0), r.getLong(1).toInt) ->
+        r.getSeq[Double](2).toArray).toMap
+    // a TORN version (a crash between persistAnnBooks' two writes, or
+    // a vacuum caught mid-version) fails here with the cause, not a
+    // NoSuchElement deep in the LUT build
+    require(pq.size == SubM * CodeK,
+      s"ann_pq_books version $ver is torn (${pq.size} of " +
+        s"${SubM * CodeK} codebook rows) — re-run persistAnnBooks " +
+        s"for version $ver to repair it in place (a vacuum cannot " +
+        "help: it never deletes the newest version)")
+    val books = Array.tabulate(SubM)(ss =>
+      Array.tabulate(CodeK)(c => pq((ss, c))))
+    (coarse, books)
+  }
+
+  /** A "later session's" x43: load the persisted books (optionally a
+    * PAST version via `asOfTrainedAt`) and search; no training jobs
+    * run. */
+  private[graft] def annIvfPqFromStore(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      store: graft.store.Store, k: Int = 3,
+      asOfTrainedAt: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    val (coarse, books) = loadAnnBooks(s, store, asOfTrainedAt)
+    annIvfPqWith(s, dir, coarse, books, k)
+  }
+
+  // ---- incremental ANN corpus through the persisted books ------------
+  // The x33/x35 incremental-ingest pattern applied to the ANN CORPUS:
+  // history is persisted as its (vec_id, cell, c0..c7) codes — 9 longs
+  // per vector, not the 64-double vector — and every new batch encodes
+  // against the PERSISTED books and lands in its own `batch` partition
+  // (dynamic overwrite = idempotent batch re-ingest, the reference's
+  // delete-before-write economy). Search reads codes straight off
+  // parquet: history is never re-encoded, never re-scanned as raw
+  // vectors, and never shuffled — at 100 TB the corpus-side work for a
+  // day's ingest is ONE codegen projection over the day's batch.
+
+  /** Encode one raw batch of (vec_id, v) rows (ENGINE-normalized, the
+    * [[normalizedEmbeddings]] frame) against the persisted books and
+    * append it to the `ann_corpus` table under its own batch
+    * partition. Cell assignment and the 8 codes ride the same codegen
+    * projections the one-shot x43 uses ([[assignCells]] +
+    * [[encodeCodes]]), so a multi-batch corpus is row-identical to a
+    * one-shot encode of the union (StoreSpec pins bit-identity).
+    *
+    * Layout: partitioned (batch, cell) — a day's ingest writes
+    * cells-many tasks in parallel (partitioning by batch alone would
+    * funnel the whole day through ONE writer task), searches prune to
+    * probed cells at the DIRECTORY level, and delete-before-write
+    * drops a re-ingested batch's stale cells (dynamic overwrite alone
+    * would leave a vanished cell's old rows behind — S12's exact
+    * rationale). */
+  def appendAnnCorpus(s: org.apache.spark.sql.SparkSession,
+      batch: org.apache.spark.sql.DataFrame, batchId: Long,
+      store: graft.store.Store): Unit = {
+    // a replay of a batch id at or below the compaction horizon would
+    // run the delete-before-write below against the partition the
+    // whole folded corpus lives in — refuse loudly (the sparse index's
+    // exact guard, [[graft.store.Horizon]])
+    graft.store.Horizon.requireAppendable(store, s, "ann", batchId)
+    val (coarse, books) = loadAnnBooks(s, store)
+    val coded = encodeCodes(assignCells(batch, coarse), books,
+        trained = true)
+      .select(lit(batchId).as("batch") +: $"cell" +: $"vec_id" +:
+        (0 until SubM).map(ss => col(s"c$ss")): _*)
+    store.delete("ann_corpus", Seq("batch" -> batchId))
+    store.write("ann_corpus", coded, Seq("batch", "cell"))
+  }
+
+  /** Compact the persisted ANN corpus: fold every `batch` partition
+    * into ONE consolidated history batch. Daily ingest through
+    * [[appendAnnCorpus]] accumulates a partition (and ≥1 file) per
+    * batch, so after N days every search opens N× the files for the
+    * same rows — the classic small-file tax, and the thing that
+    * actually degrades a 100 TB corpus over a year of ingest.
+    * Compaction rewrites all codes into `intoBatch` (one file per cell
+    * via the store's repartition-on-keys write) and drops the source
+    * batches.
+    *
+    * Staging discipline: the consolidated copy lands in a STAGING
+    * entity first, then the source partitions are dropped, then the
+    * staged rows are moved into place — at no point does a write read
+    * the files it is replacing (writing batch=`intoBatch` directly
+    * would lazily scan that same partition mid-overwrite). Search
+    * results are invariant under compaction because `batch` is purely
+    * the ingest idempotency unit — the search never consults it
+    * (StoreSpec pins bit-identity). Run as the corpus's offline
+    * maintenance job, not under a concurrent writer. */
+  def compactAnnCorpus(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, intoBatch: Long = 0L): Unit = {
+    // crash recovery first — a prior fold that died mid-move left the
+    // stage holding the only complete corpus (shared StagedFold
+    // discipline; see [[graft.store.StagedFold]])
+    graft.store.StagedFold.rollForward(store, s, "ann",
+      annFoldEntities)
+    // entity-absent = nothing ever ingested → the maintenance verb
+    // no-ops, matching compactSketchEntity (the shared StagedFold
+    // family's contract); real I/O errors propagate
+    val cur =
+      try store.read("ann_corpus", s)
+      catch {
+        case _: org.apache.spark.sql.AnalysisException => return
+      }
+    // bounded collect: one row per ingested batch
+    val batches = cur.select($"batch".cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    if (batches.length <= 1 && batches.headOption.forall(_ == intoBatch))
+      return // already compact
+    // the horizon is the newest FOLDED batch (not intoBatch, which may
+    // relabel downward — legal here because search never consults
+    // batch): appends must land above it, and as-of reads below it
+    // refuse — per-batch history no longer exists
+    graft.store.StagedFold.run(store, s, "ann", Seq(
+      annFoldEntities(0) ->
+        cur.withColumn("batch", lit(intoBatch))
+          .withColumn("cell", $"cell".cast("long"))),
+      horizon = math.max(batches.last, intoBatch))
+  }
+
+  /** The ANN corpus's folded entity, with the stage→main recast. */
+  private def annFoldEntities: Seq[graft.store.FoldEntity] = Seq(
+    graft.store.FoldEntity("ann_corpus", Seq("batch", "cell"),
+      df => df.withColumn("batch", $"batch".cast("long"))
+        .withColumn("cell", $"cell".cast("long"))))
+
+  /** The x43 search over the PERSISTED corpus codes: books load from
+    * the store, query vectors come from a vec_id-pruned mini-scan (the
+    * bounded 8-query set), LUTs are driver arithmetic, and the corpus
+    * side is a parquet scan of codes — zero DotMatrix work over
+    * history, the only exchange the per-query rank window. */
+  private[graft] def annIvfPqSearchStored(
+      s: org.apache.spark.sql.SparkSession, dir: String,
+      store: graft.store.Store, k: Int = 3,
+      asOfBatch: Long = Long.MaxValue)
+      : org.apache.spark.sql.DataFrame = {
+    // snapshot (as-of) read — the sparse index's reproducibility verb
+    // on the dense side: the cut is a batch-directory prune (costs
+    // nothing extra), guarded against the compaction horizon (folded
+    // history cannot be served under an old batch id). Tombstones
+    // deliberately still apply ON TOP of the cut below: deletes are
+    // compliance actions, retroactive by design.
+    graft.store.Horizon.requireServable(store, s, "ann", asOfBatch)
+    val (_, books) = loadAnnBooks(s, store)
+    // cell comes back as a PARTITION column (directory-pruned for the
+    // probed cells; inferred int) — re-widen to the engine's long
+    val raw = graft.store.Snapshot.cut(store.read("ann_corpus", s),
+        asOfBatch)
+      .withColumn("cell", $"cell".cast("long"))
+    // honor tombstones when the delete lifecycle has run. ONLY
+    // entity-absent (AnalysisException) means "nothing was ever
+    // deleted"; a FAILING read propagates — swallowing it would
+    // silently serve deleted vectors
+    val tomb = try Some(store.read("ann_tombstones", s)
+        .select($"vec_id".cast("long").as("vec_id")))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val coded = tomb.fold(raw)(t => raw.join(t, Seq("vec_id"), "left_anti"))
+    val qids = (0 until PqQueries).map(_.toLong).toArray
+    val qv = normalizedEmbeddings(s, dir)
+      .filter($"vec_id" < PqQueries)
+      .select($"vec_id", $"v").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    require(qids.forall(qv.contains),
+      s"stored-corpus search needs query vec_ids ${qids.mkString(",")}" +
+        s"; found only ${qv.keySet.toSeq.sorted}")
+    val lut: Array[Array[Array[Long]]] = qids.map { q =>
+      Array.tabulate(SubM)(ss =>
+        books(ss).map(c => i4(rawDot(subOf(qv(q), ss), c) * 10000)))
+    }
+    val qcells = coded
+      .filter($"vec_id".isin(qids.toIndexedSeq.map(Long.box): _*))
+      .select($"vec_id", $"cell").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    require(qids.forall(qcells.contains),
+      s"stored-corpus search needs vec_ids ${qids.mkString(",")} " +
+        s"ingested; found only ${qcells.keySet.toSeq.sorted}")
+    pqRank(coded, qids, lut, k = k,
+      qcellsArr = Some(qids.map(q => Array(qcells(q)))))
+      .orderBy($"qid", $"rn")
   }
 
   // ---------------------------------------------------------------
@@ -3918,7 +4231,8 @@ object VectorOps {
   }
 
   /** Run a multi-consumer lazy body EAGERLY with a bounded cache
-    * lifetime — a try/finally release discipline for DataFrame-RETURNING
+    * lifetime — the try/finally release discipline of the write-side
+    * verbs (appendSparseIndex et al.) for DataFrame-RETURNING
     * production wrappers. `body` receives a `pin` hook in place of
     * its in-body `.cache()` calls; the result is materialized to a
     * local checkpoint (severing its lineage from the pinned frames)
@@ -3972,9 +4286,11 @@ object VectorOps {
     annIvfTrained(s, dir, cells = c, k = k)
   }
 
-  /** The x86 core: in-cell top-k edges over an assigned (vec_id, v,
-    * cell) frame, keeping the src cell in the output. The rank runs
-    * through the TopKPerKey operator: the candidate frame here is the
+  /** The x86 core shared by the registry query and the incremental
+    * lifecycle: in-cell top-k edges over an assigned (vec_id, v, cell)
+    * frame. Keeps the src cell in the output so the incremental path
+    * can partition the persisted graph by it. The rank runs through
+    * the TopKPerKey operator: the candidate frame here is the
     * LARGEST rank input in the engine (every in-cell pair — O(Σ
     * cell²) rows), and the partial heap reduces it to ≤ srcs·k rows
     * per map partition before the exchange, instead of shuffling the
@@ -3994,7 +4310,8 @@ object VectorOps {
   /** x114 body: greedy beam search over the x86 k-NN graph — the
     * SERVING verb of the graph-ANN family (HNSW layer-0 / NSG search
     * restated as bounded batch rounds). Until now the engine built and
-    * refined the graph (x86 build and x87 NN-descent) but answered queries
+    * maintained the graph (x86 build, x87 NN-descent refinement,
+    * GraphIngest streaming, the rebalance verb) but answered queries
     * only through the IVF/PQ/LSH indexes. Every query's beam starts at
     * vector 0, then [[GraphHops]] rounds of expand-through-edges →
     * dedup → score → keep the [[GraphBeam]] best (cos desc, id
@@ -4115,11 +4432,14 @@ object VectorOps {
       .orderBy($"qid", $"wid", $"step"), ed)
   }
 
-  /** x116's uniform-walk step recursion. `starts` is (qid, wid,
-    * step=0, node); `ed` the ranked edge relation (src, dst, rn, deg). */
+  /** The uniform-walk step recursion shared by x116's corpus scan and
+    * the persisted walk corpus ([[appendWalkCorpus]]) — ONE seed
+    * formula and step rule, so the incremental corpus is bit-identical
+    * to a one-shot walk by construction. `starts` is (qid, wid, step=0,
+    * node); `ed` the ranked edge relation (src, dst, rn, deg). */
   private def walkSteps(starts: org.apache.spark.sql.DataFrame,
       ed: org.apache.spark.sql.DataFrame, steps: Int,
-      inspect: org.apache.spark.sql.DataFrame => Unit)
+      inspect: org.apache.spark.sql.DataFrame => Unit = _ => ())
       : org.apache.spark.sql.DataFrame = {
     var cur = starts
     var out = starts
@@ -4612,6 +4932,709 @@ object VectorOps {
       .orderBy($"qid", $"rn")
   }
 
+  /** Train the spectral embeddings over the MAINTAINED walk corpus
+    * and persist them — the train-once / serve-forever seam
+    * ([[persistAnnBooks]]' pattern) for the embedding pipeline's last
+    * stage. The vectors are stamped with the walk watermark they were
+    * trained at, so serving can detect a corpus that moved underneath
+    * them. Factorization is global (every pair count shifts every
+    * PMI), so the incremental verb IS retrain-over-the-maintained-
+    * corpus: the expensive incremental work — graph re-edge and walk
+    * invalidation — already happened in [[appendKnnGraph]]/
+    * [[appendWalkCorpus]]; training reads the pair-sized relation,
+    * never the raw corpus. */
+  def trainStoredEmbeddings(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, window: Int = 2,
+      iters: Int = EmbedIters, dims: Int = 2): Unit = {
+    val mark = graft.store.Horizon.get(store, s, "walks").getOrElse(
+      throw new IllegalArgumentException(
+        "no maintained walk corpus to train on — run appendWalkCorpus"))
+    // Same-version re-train is the sanctioned crash-recovery replay
+    // (the trainer is deterministic, so the overwrite rewrites
+    // identical rows) — but only same-GEOMETRY training is a replay.
+    // The dim count is the artifact's geometry knob (window/iters are
+    // defaulted constants, like SubM/CodeK for the books), so a
+    // same-watermark train that would CHANGE it is a retrain wearing
+    // replay's version stamp: it would silently destroy the stored
+    // model while every consumer of that version keeps its answers.
+    // persistAnnBooks' same-version geometry rule, applied here.
+    val existingDims =
+      try {
+        // bounded: one row, partition-pruned to this watermark's version
+        val r = store.read("node_embeddings", s)
+          .filter($"trained_at".cast("long") === mark)
+          .agg(max($"dim".cast("long"))).first()
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException => None
+      }
+    existingDims.foreach(d => require(d == dims.toLong,
+      s"node_embeddings already holds a $d-dim model at walk " +
+        s"watermark $mark — training $dims dims at the same watermark " +
+        "is a geometry change wearing replay's version stamp; advance " +
+        "the corpus (appendWalkCorpus) so the new width lands as a " +
+        "new version"))
+    val wide = trainNodeEmbeddings(s,
+      skipGramPairsOver(walkCorpusStored(s, store), window), iters,
+      dims)
+    // melted to (trained_at, node, dim, w): schema-stable across any
+    // d, so versions trained at different widths coexist under one
+    // entity. VERSIONED under (trained_at) partitions — a retrain
+    // lands a NEW version and leaves prior ones readable
+    // ([[embedNeighborsStored]]'s as-of), while re-training at an
+    // unchanged watermark overwrites only its own partition
+    // (idempotent replay). Yesterday's model-dependent answers stay
+    // reproducible after today's retrain — the same discipline the
+    // index families' as-of reads earned, applied to the artifact.
+    val emb = wide.select(lit(mark).as("trained_at"), $"node",
+        explode(array((1 to dims).map(j =>
+          struct(lit(j.toLong).as("dim"), col(s"w$j").as("w"))): _*))
+          .as("dw"))
+      .select($"trained_at", $"node", $"dw.dim".as("dim"),
+        $"dw.w".as("w"))
+      .localCheckpoint(true)
+    // an empty model must refuse, not land: a corpus too small or
+    // too disconnected for any positive SPPMI entry trains zero
+    // nodes, and writing that would leave a schemaless (or silently
+    // unservable) version under this watermark — the torn-artifact
+    // hazard the ANN books' loud tear check exists for
+    require(!emb.isEmpty,
+      s"embedding training at walk watermark $mark produced no " +
+        "nodes (no positive SPPMI co-occurrence in the walk " +
+        "corpus) — the corpus is too small or too disconnected to " +
+        "train; ingest more before training")
+    store.write("node_embeddings", emb, Seq("trained_at"))
+  }
+
+  /** Retention for the versioned embedding artifact: drop every
+    * `node_embeddings` version strictly below `keepFrom` — EXCEPT the
+    * newest one, which is never dropped (a vacuum must not delete the
+    * serving model; pass the lifecycle's teardown verbs for that).
+    * As-of reads below the retention cut then refuse with the
+    * standard no-version message. Returns the number of versions
+    * dropped. Partition-level deletes only — no data is read. */
+  def vacuumEmbeddingVersions(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, keepFrom: Long): Int =
+    vacuumVersions(s, store, Seq("node_embeddings"), keepFrom)
+
+  /** Retention for the versioned ANN books: both entities drop the
+    * same version set (they are written together), newest retained. */
+  def vacuumAnnBookVersions(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, keepFrom: Long): Int =
+    vacuumVersions(s, store,
+      Seq("ann_coarse_book", "ann_pq_books"), keepFrom)
+
+  /** Shared retention core: versions come from the FIRST entity (the
+    * families write their entities under one version set), every
+    * listed entity drops the same partitions. `key` scopes the whole
+    * operation to one keyed artifact (the ce_model per-model case):
+    * version listing reads only that key's partitions and deletes
+    * carry the key prefix. */
+  private[graft] def vacuumVersions(
+      s: org.apache.spark.sql.SparkSession, store: graft.store.Store,
+      entities: Seq[String], keepFrom: Long,
+      key: Seq[(String, Any)] = Seq.empty): Int = {
+    // bounded collect: one row per retained version
+    val vers =
+      try {
+        val base =
+          if (key.isEmpty) store.read(entities.head, s)
+          else store.readKeyed(entities.head, key, s)
+        base.select($"trained_at".cast("long")).distinct()
+          .collect().map(_.getLong(0)).sorted
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          return 0 // nothing ever trained — retention no-ops
+      }
+    if (vers.isEmpty) return 0
+    val drop = vers.filter(v => v < keepFrom && v != vers.last)
+    drop.foreach { v =>
+      // crash-window ordering: the version list above comes from the
+      // FIRST entity, so it must be deleted LAST — a crash mid-loop
+      // then leaves the version still listed and the next vacuum
+      // rolls the partial delete forward; head-first would orphan the
+      // other entities' partitions invisibly forever
+      entities.reverse.foreach(e =>
+        store.delete(e, key :+ ("trained_at" -> (v: Any))))
+    }
+    drop.length
+  }
+
+  /** Serve embedding-space neighbors from the PERSISTED vectors —
+    * x123's shape over the stored artifact. Serves the LATEST model
+    * version by default, with a loud staleness guard: vectors trained
+    * at an older walk watermark than the corpus' current one are
+    * refused rather than silently served (the compaction-horizon
+    * discipline, applied to model freshness — a stale embedding table
+    * is wrong answers, not slow ones). `allowStale` opts into serving
+    * anyway (the production pattern: retrain lags ingest by design).
+    *
+    * `asOfTrainedAt` serves a PAST model version: the newest version
+    * trained at or below the cut, with the k-NN graph read cut at the
+    * SAME watermark — so a post-retrain as-of read reproduces the
+    * pre-retrain answers exactly, in_graph flags included (StoreSpec
+    * pins it). An as-of read is historical by design, so the
+    * freshness guard does not apply to it; it still refuses loudly
+    * when no version exists at or below the cut, or when graph
+    * maintenance (rebalance) has destroyed the history under it.
+    *
+    * `queryNodes` selects which nodes' neighborhoods to serve
+    * (default: x123's 0..7 probe set) — the query side stays a
+    * broadcast however many are asked. */
+  def embedNeighborsStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, k: Int = 5,
+      allowStale: Boolean = false,
+      asOfTrainedAt: Long = Long.MaxValue,
+      queryNodes: Seq[Long] = 0L until 8L)
+      : org.apache.spark.sql.DataFrame = {
+    require(queryNodes.nonEmpty, "stored embed serving needs queries")
+    val latest = asOfTrainedAt == Long.MaxValue
+    val all = store.read("node_embeddings", s)
+      .select($"trained_at".cast("long").as("trained_at"),
+        $"node", $"dim".cast("long").as("dim"), $"w")
+    // bounded: one row — the served version is the newest at/below
+    // the cut
+    val vr = all.filter($"trained_at" <= asOfTrainedAt)
+      .agg(max($"trained_at")).first()
+    require(!vr.isNullAt(0),
+      s"no stored embedding version at or below $asOfTrainedAt — " +
+        "train first (trainStoredEmbeddings)")
+    val ver = vr.getLong(0)
+    if (latest && !allowStale) {
+      val cur = graft.store.Horizon.get(store, s, "walks")
+      // a MISSING walks watermark while trained vectors exist means
+      // the corpus was torn down since training (cell rebalance) —
+      // the vectors are unanchored, not merely behind
+      require(cur.nonEmpty,
+        "stored embeddings exist but the walk corpus they were " +
+          "trained on was torn down (cell rebalance) — rebuild the " +
+          "corpus and retrain, or pass allowStale=true")
+      require(ver >= cur.getOrElse(Long.MinValue),
+        s"stored embeddings were trained at walk watermark $ver " +
+          s"but the corpus has advanced to " +
+          s"${cur.getOrElse(Long.MinValue)} — retrain " +
+          "(trainStoredEmbeddings) or pass allowStale=true")
+    }
+    // partition-pruned to the one served version
+    val e = all.filter($"trained_at" === ver)
+      .select($"node", $"dim", $"w")
+    val q = e.filter($"node"
+        .isin(queryNodes.distinct.map(Long.box): _*))
+      .select($"node".as("qid"), $"dim", $"w".as("qw"))
+    val edges = knnGraphStored(s, store,
+        asOfBatch = if (latest) Long.MaxValue else ver)
+      .select($"src".as("qid"), $"dst".as("nid"), lit(1L).as("g"))
+    // per-dim pair join + rollup: d-agnostic integer dot (the melted
+    // layout's price is pair-sized × d exchange rows — still
+    // query-set-bounded, never corpus-shaped)
+    e.join(broadcast(q), "dim")
+      .filter($"node" =!= $"qid")
+      .groupBy($"qid", $"node").agg(sum($"qw" * $"w").as("dot"))
+      .select($"qid", $"node".as("nid"), $"dot")
+      .join(edges, Seq("qid", "nid"), "left")
+      .withColumn("in_graph", coalesce($"g", lit(0L)))
+      .withColumn("rn", row_number().over(Window.partitionBy($"qid")
+        .orderBy($"dot".desc, $"nid")).cast("long"))
+      .filter($"rn" <= k)
+      .select($"qid", $"nid", $"dot", $"rn", $"in_graph")
+      .orderBy($"qid", $"rn")
+  }
+
+  /** Drift report between two PERSISTED embedding model versions —
+    * the roll-forward decision artifact the versioned lifecycle
+    * exists to enable (x101's index-drift idiom applied to the
+    * trained model): per query node, the top-k neighbor sets under
+    * version A and version B ([[embedNeighborsStored]]'s as-of reads,
+    * each with the graph cut at its own training watermark), reported
+    * as set sizes, overlap, and Jaccard in parts-per-million (exact
+    * integer — no float drift in the report itself). Every frame is
+    * queries×k-sized; the underlying reads are the partition-pruned
+    * stored serves, so the report costs two serves plus tiny joins at
+    * any corpus size. Refusals (missing version, history destroyed
+    * under the cut) propagate loudly from the as-of reads. */
+  def embedVersionDrift(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, verA: Long, verB: Long, k: Int = 5,
+      queryNodes: Seq[Long] = 0L until 8L)
+      : org.apache.spark.sql.DataFrame = {
+    // no allowStale: an explicit as-of read already skips the
+    // freshness guard by design (latest = false), so passing it
+    // would be a dead argument implying a bypass that never happens.
+    def side(ver: Long) = embedNeighborsStored(s, store, k,
+      asOfTrainedAt = ver, queryNodes = queryNodes)
+      .select($"qid", $"nid")
+    neighborSetDrift(side(verA), side(verB))
+  }
+
+  /** ANN-book version drift: the same report over two as-of IVF-PQ
+    * searches ([[annIvfPqFromStore]]) — what the quantizer retrain
+    * changed, per query, before the old version is vacuumed. */
+  def annVersionDrift(s: org.apache.spark.sql.SparkSession,
+      dir: String, store: graft.store.Store, verA: Long, verB: Long,
+      k: Int = 3): org.apache.spark.sql.DataFrame = {
+    def side(ver: Long) = annIvfPqFromStore(s, dir, store, k,
+      asOfTrainedAt = ver).select($"qid", $"nid")
+    neighborSetDrift(side(verA), side(verB))
+  }
+
+  /** The set-drift core every versioned family's drift verb shares:
+    * two (qid, nid) serves in, per-qid set sizes + overlap +
+    * exact-integer Jaccard ppm out. Both sides pin before the joins
+    * (each feeds a size rollup and the overlap join), so the serve
+    * chains run once; all frames are queries×k-sized. */
+  private[graft] def neighborSetDrift(
+      a0: org.apache.spark.sql.DataFrame,
+      b0: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val a = a0.localCheckpoint(true)
+    val b = b0.localCheckpoint(true)
+    val na = a.groupBy($"qid").agg(count(lit(1)).as("n_a"))
+    val nb = b.groupBy($"qid").agg(count(lit(1)).as("n_b"))
+    val ov = a.join(b, Seq("qid", "nid"))
+      .groupBy($"qid").agg(count(lit(1)).as("overlap"))
+    na.join(nb, Seq("qid"), "full")
+      .join(ov, Seq("qid"), "left")
+      .select($"qid",
+        coalesce($"n_a", lit(0L)).as("n_a"),
+        coalesce($"n_b", lit(0L)).as("n_b"),
+        coalesce($"overlap", lit(0L)).as("overlap"))
+      .withColumn("jaccard6",
+        when($"n_a" + $"n_b" - $"overlap" === 0L, lit(1000000L))
+          .otherwise(expr(
+            "(overlap * 1000000) div (n_a + n_b - overlap)")))
+      .orderBy($"qid")
+  }
+
+  /** Incremental k-NN graph maintenance — the x33/x35 incremental
+    * pattern applied to the x86 graph. The corpus lives in the store
+    * as `knn_vectors` (partitioned (batch, cell)); the graph as
+    * `knn_graph` (partitioned cell). A new batch is assigned against
+    * the PERSISTED coarse book ([[persistAnnBooks]] — the quantizer is
+    * fixed for the corpus lifetime, exactly like the ANN books),
+    * landed under its own batch partition (delete-before-write, so
+    * replays are idempotent), and then ONLY the cells the batch
+    * touched are re-edged: members of untouched cells — and their
+    * graph partitions — are never read, recomputed, or rewritten.
+    * That is the incremental economy at 100 TB: per-day work scales
+    * with the touched-cell population, not the corpus, and the whole
+    * history never reshuffles. Correctness is trivially the one-shot
+    * graph's because in-cell edges depend only on their cell's
+    * members (StoreSpec pins two-batch ≡ one-shot bit-identity).
+    *
+    * Bounded collect: the touched-cell id set (≤ the cell count). */
+  def appendKnnGraph(s: org.apache.spark.sql.SparkSession,
+      batch: org.apache.spark.sql.DataFrame, batchId: Long,
+      store: graft.store.Store, k: Int = KnnGraphK): Unit = {
+    // a replay of a pre-rebalance batch would re-assign its vectors by
+    // nearest-centroid over the EXTENDED book — not the 2-means
+    // labeling rebalance actually gave them — silently shifting cell
+    // membership and breaking the two-batch ≡ one-shot invariant;
+    // rebalance advances the "knn" horizon so such replays refuse
+    graft.store.Horizon.requireAppendable(store, s, "knn", batchId)
+    val (coarse, _) = loadAnnBooks(s, store)
+    val asg = assignCells(batch, coarse)
+      .select($"vec_id", $"v", $"cell").cache()
+    store.delete("knn_vectors", Seq("batch" -> batchId))
+    store.write("knn_vectors",
+      asg.select(lit(batchId).as("batch"), $"cell", $"vec_id", $"v"),
+      Seq("batch", "cell"))
+    val touched = asg.select($"cell").distinct()
+      .collect().map(_.getLong(0)).toIndexedSeq
+    asg.unpersist()
+    if (touched.isEmpty) return
+    // partition pruning on cell= keeps untouched cells off disk reads
+    val members = store.read("knn_vectors", s)
+      .filter($"cell".isin(touched: _*))
+      .select($"vec_id", $"v", $"cell".cast("long").as("cell")).cache()
+    val edges = knnEdges(members, k)
+      .select($"cell", $"src", $"dst", $"cos", $"rn")
+    touched.foreach(c => store.delete("knn_graph", Seq("cell" -> c)))
+    store.write("knn_graph", edges, Seq("cell"))
+    members.unpersist()
+  }
+
+  /** The maintained graph, in the registry query's shape — with the
+    * dense-side as-of (snapshot) verb: because in-cell edges depend
+    * only on their cell's members, the graph as of `asOfBatch` is the
+    * STORED partitions of every cell no batch above the cut touched,
+    * plus a re-edge of the touched cells from their `batch <= asOf`
+    * members. Both sides partition-prune: the snapshot's cost scales
+    * with the history ingested SINCE the cut, not the corpus — at
+    * 100 TB an as-of read a day back re-edges one day's touched
+    * cells. Maintenance is not versioned: [[rebalanceKnnCells]]
+    * relabels cells in place and advances the "knn" horizon, so
+    * snapshots below it refuse loudly, and snapshots at/above it
+    * address ingest history on top of the current cell structure. */
+  def knnGraphStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, asOfBatch: Long = Long.MaxValue,
+      k: Int = KnnGraphK): org.apache.spark.sql.DataFrame = {
+    val g = store.read("knn_graph", s)
+    if (asOfBatch == Long.MaxValue)
+      g.select($"src", $"dst", $"cos", $"rn").orderBy($"src", $"rn")
+    else {
+      graft.store.Horizon.requireServable(store, s, "knn", asOfBatch)
+      val vecs = store.read("knn_vectors", s)
+        .select($"batch".cast("long").as("batch"),
+          $"cell".cast("long").as("cell"), $"vec_id", $"v")
+      // bounded collect: cells touched since the cut (≤ cell count)
+      val touched = vecs.filter($"batch" > asOfBatch)
+        .select($"cell").distinct().collect().map(_.getLong(0))
+        .toIndexedSeq
+      if (touched.isEmpty)
+        g.select($"src", $"dst", $"cos", $"rn").orderBy($"src", $"rn")
+      else {
+        val kept = g
+          .filter(!$"cell".cast("long")
+            .isin(touched.map(Long.box): _*))
+          .select($"src", $"dst", $"cos", $"rn")
+        val reEdged = knnEdges(
+          vecs.filter($"batch" <= asOfBatch &&
+            $"cell".isin(touched.map(Long.box): _*)), k)
+          .select($"src", $"dst", $"cos", $"rn")
+        kept.union(reEdged).orderBy($"src", $"rn")
+      }
+    }
+  }
+
+  /** The stored graph as a ranked walk-edge relation (src, dst, rn,
+    * deg) — the persisted twin of the in-memory frame x116 walks
+    * over. */
+  private[graft] def storedWalkEdges(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store): org.apache.spark.sql.DataFrame = {
+    val ed = store.read("knn_graph", s)
+      .select($"src", $"dst", $"rn".cast("long").as("rn"))
+    ed.join(ed.groupBy($"src").agg(max($"rn").as("deg")), "src")
+  }
+
+  /** One-shot walk corpus over the CURRENT stored graph — the
+    * independent twin [[appendWalkCorpus]] is pinned against
+    * (StoreSpec: incremental ≡ one-shot, bit for bit). */
+  private[graft] def walkCorpusOneShot(
+      s: org.apache.spark.sql.SparkSession, store: graft.store.Store,
+      walks: Int = WalksPerNode, steps: Int = WalkSteps)
+      : org.apache.spark.sql.DataFrame = {
+    val starts = store.read("knn_vectors", s)
+      .filter($"vec_id" < 8).select($"vec_id".as("qid")).distinct()
+      .select($"qid",
+        explode(sequence(lit(0L), lit(walks - 1L))).as("wid"))
+      .select($"qid", $"wid", lit(0L).as("step"), $"qid".as("node"))
+    walkSteps(starts, storedWalkEdges(s, store), steps)
+      .orderBy($"qid", $"wid", $"step")
+  }
+
+  /** Incremental walk-corpus maintenance — the streamed-twin verb
+    * that completes the embedding pipeline's incremental story
+    * (graph ingest maintains `knn_graph`; THIS maintains the walk
+    * corpus trained embeddings consume). Walks are deterministic
+    * given the graph (seeded-hash steps), and a walk consults ONLY
+    * the edge lists of the nodes it visits — in-cell top-k relations
+    * that change exactly when the node's cell is touched. So after a
+    * graph batch lands, the ONLY walks that can differ from a fresh
+    * one-shot are those visiting a touched cell (plus walks of start
+    * nodes the batch introduced): everything else is kept byte-for-
+    * byte, and only the wcell partitions owning an invalidated walk
+    * rewrite (StoreSpec pins untouched partitions' mtimes and the
+    * incremental ≡ one-shot identity).
+    *
+    * Per-batch cost: one thin cell-projection of the corpus rows, the
+    * invalidated-walk sliver, and a re-walk of O(invalid · steps)
+    * frontier rows — never walk-corpus-shaped. Layout: partitioned by
+    * `wcell` (the start node's cell) so both the rewrite and a
+    * per-neighborhood read prune at the directory level. Call after
+    * each [[appendKnnGraph]] batch. NOT valid across
+    * [[rebalanceKnnCells]] (cells relabel in place — the stored
+    * per-step cells go stale); rebuild the corpus after a rebalance
+    * by deleting the entity. Bounded collects: touched cells,
+    * affected wcell ids (≤ the cell count). */
+  def appendWalkCorpus(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, batchId: Long,
+      walks: Int = WalksPerNode, steps: Int = WalkSteps): Unit = {
+    val edges = storedWalkEdges(s, store)
+    val vecs = store.read("knn_vectors", s)
+      .select($"batch".cast("long").as("batch"),
+        $"cell".cast("long").as("cell"), $"vec_id")
+    val cellOf = vecs.select($"vec_id".as("node"), $"cell")
+    val starts = vecs.filter($"vec_id" < 8)
+      .select($"vec_id".as("qid"), $"cell".as("qcell")).distinct()
+    def walkedFrom(ids: org.apache.spark.sql.DataFrame)
+        : org.apache.spark.sql.DataFrame =
+      walkSteps(ids.select($"qid", $"wid", lit(0L).as("step"),
+          $"qid".as("node")), edges, steps)
+        .join(cellOf, "node")
+        .join(starts, "qid")
+        .select($"qcell".as("wcell"), $"qid", $"wid", $"step",
+          $"node", $"cell")
+    val existing =
+      try Some(store.read("walk_corpus", s)
+        .select($"wcell".cast("long").as("wcell"), $"qid", $"wid",
+          $"step", $"node", $"cell".cast("long").as("cell")))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    // processed-through watermark (the "walks" horizon): invalidation
+    // covers every graph batch ABOVE it — a caller that skipped a
+    // maintenance pass (crashed between appendKnnGraph and this call,
+    // or batched several graph ingests before one re-walk) cannot
+    // leave the corpus silently stale — PLUS the named batch itself,
+    // so a replay of an already-processed batch with corrected
+    // content still re-walks its cells
+    val mark = graft.store.Horizon.get(store, s, "walks")
+      .getOrElse(Long.MinValue)
+    val maxBatch = vecs.agg(max($"batch")).first()
+    existing match {
+      case None =>
+        val all = starts.select($"qid",
+          explode(sequence(lit(0L), lit(walks - 1L))).as("wid"))
+        store.delete("walk_corpus", Seq.empty)
+        store.write("walk_corpus", walkedFrom(all), Seq("wcell"))
+      case Some(c) =>
+        // bounded collect: cells of every unprocessed batch + the
+        // named batch (replay coverage)
+        val touched = vecs
+          .filter($"batch" > mark || $"batch" === batchId)
+          .select($"cell").distinct().collect().map(_.getLong(0))
+          .toIndexedSeq
+        if (touched.isEmpty) return
+        // the invalidated-walk sliver: any step in a touched cell,
+        // plus start nodes those batches introduced to the corpus
+        val invalid = c
+          .filter($"cell".isin(touched.map(Long.box): _*))
+          .select($"qid", $"wid").distinct()
+        val newStarts = vecs
+          .filter(($"batch" > mark || $"batch" === batchId) &&
+            $"vec_id" < 8)
+          .select($"vec_id".as("qid")).distinct()
+          .join(c.select($"qid").distinct(), Seq("qid"), "left_anti")
+          .select($"qid",
+            explode(sequence(lit(0L), lit(walks - 1L))).as("wid"))
+        val redo = invalid.unionByName(newStarts).distinct()
+          .localCheckpoint(true)
+        if (redo.limit(1).count() > 0) {
+          // only partitions owning an invalidated walk rewrite
+          val affected = c.join(redo, Seq("qid", "wid"))
+            .select($"wcell")
+            .unionByName(starts
+              .join(redo.select($"qid").distinct(), "qid")
+              .select($"qcell".as("wcell")))
+            .distinct().collect().map(_.getLong(0)).toIndexedSeq
+          // surviving walks of rewritten partitions MATERIALIZE
+          // before their source partitions drop
+          val keep = c
+            .filter($"wcell".isin(affected.map(Long.box): _*))
+            .join(redo, Seq("qid", "wid"), "left_anti")
+            .localCheckpoint(true)
+          val walked = walkedFrom(redo).localCheckpoint(true)
+          affected.foreach(wc =>
+            store.delete("walk_corpus", Seq("wcell" -> wc)))
+          store.write("walk_corpus", keep.unionByName(walked),
+            Seq("wcell"))
+        }
+    }
+    // advance the watermark to everything now reflected in the corpus
+    if (!maxBatch.isNullAt(0))
+      graft.store.Horizon.set(store, s, "walks", maxBatch.getLong(0))
+  }
+
+  /** The maintained walk corpus, in x116's shape. */
+  def walkCorpusStored(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store): org.apache.spark.sql.DataFrame =
+    store.read("walk_corpus", s)
+      .select($"qid", $"wid", $"step", $"node")
+      .orderBy($"qid", $"wid", $"step")
+
+  /** Rebalance the persisted k-NN corpus: split every cell whose
+    * member count exceeds `cap` into TWO cells via a deterministic
+    * in-cell 2-means (seed 0 = the min-id member, seed 1 = the member
+    * farthest from it — the Gonzalez max-min convention of
+    * [[farthestPointSeeds]] — then two Lloyd rounds over exact integer
+    * sufficient statistics), extend the persisted coarse book with the
+    * new centroids, and rewrite + re-edge ONLY the touched cells.
+    *
+    * This is the fourth index-lifecycle verb (append =
+    * [[appendKnnGraph]], compact = [[compactAnnCorpus]], delete =
+    * [[tombstoneAnnVectors]], REBALANCE = this): a skewed ingest
+    * stream concentrates vectors in a few hot cells, and in-cell work
+    * is quadratic in cell population — one cell holding 1% of a 1e9
+    * corpus costs (1e7)² pair work where balanced cells cost (3e4)².
+    * Splitting hot cells restores the √n economy without retraining
+    * or re-encoding the other 99% of the index: per split, the work
+    * is a few scans of THAT cell's partition; untouched cells' files
+    * are never opened (StoreSpec pins their mtimes unchanged).
+    *
+    * One pass halves the hot cells; callers iterate until it returns
+    * 0 for a hard cap (each round's work shrinks geometrically). A
+    * DEGENERATE cell (all members identical — the 2-means cannot
+    * separate anything) is detected before any write: it does not
+    * split, does not grow the book, and is not rewritten, and it does
+    * not count toward the return value — so an iterating caller
+    * terminates immediately instead of mutating the persisted index
+    * once per round. Bounded collects only: hot-cell ids, touched
+    * (batch, cell) pairs, and the book. Returns the number of cells
+    * ACTUALLY split. */
+  def rebalanceKnnCells(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, cap: Int,
+      k: Int = KnnGraphK): Int = {
+    require(cap > 1, s"rebalance cap must exceed 1, got $cap")
+    // refuse when the same store also holds a PQ-coded ann_corpus:
+    // its codes are cell-addressed against the CURRENT book and carry
+    // no raw vectors to reassign, so growing the shared coarse book
+    // would silently desync every search over it. Corpus rebalance
+    // needs the raw-vector entity; fail loudly instead of corrupting.
+    // Detection probes for ROWS (limit-1 count), not for whether
+    // read() throws — a lazy Store impl, or one returning an empty
+    // frame for unknown entities, must not invert the guard.
+    val hasCodedCorpus =
+      try store.read("ann_corpus", s).limit(1).count() > 0
+      catch { case scala.util.control.NonFatal(_) => false }
+    require(!hasCodedCorpus,
+      "rebalanceKnnCells would desync the PQ-coded ann_corpus in this " +
+        "store (codes are cell-addressed and carry no raw vectors); " +
+        "rebalance stores holding only the raw-vector k-NN lifecycle")
+    val vecs = store.read("knn_vectors", s)
+      .select($"batch".cast("long").as("batch"),
+        $"cell".cast("long").as("cell"), $"vec_id", $"v")
+    val hot = vecs.groupBy($"cell").agg(count(lit(1)).as("n"))
+      .filter($"n" > cap)
+      .select($"cell").collect().map(_.getLong(0)).sorted
+    if (hot.isEmpty) return 0
+    // cell maintenance mutates the CURRENT book version in place —
+    // it is not a retrain (the version stamp is preserved; the knn
+    // horizon advance below is what declares history destroyed)
+    val bookVer = latestBookVersion(store, s).getOrElse(
+      throw new IllegalArgumentException(
+        "no persisted ANN book to rebalance against"))
+    val book = scala.collection.mutable.ArrayBuffer(
+      store.read("ann_coarse_book", s)
+        .filter($"trained_at".cast("long") === bookVer)
+        .select($"cid", $"cv").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+        .sortBy(_._1).map(_._2).toIndexedSeq: _*)
+    var moved = List.empty[org.apache.spark.sql.DataFrame]
+    var newCells = List.empty[Long]
+    var splitCells = List.empty[Long]
+    var splits = 0
+    hot.foreach { c =>
+      // every step below scans ONLY cell c's partitions (directory-
+      // pruned); the cache serves the eager seed/round/count jobs
+      val members = vecs.filter($"cell" === c)
+        .select($"batch", $"vec_id", $"v").cache()
+      try {
+        val s0 = members.agg(min(struct($"vec_id", $"v")).as("m"))
+          .select($"m.v").head().getSeq[Double](0).toArray
+        val far = members.agg(min(struct(
+            round(dot($"v", lit(s0)), 4).as("cos"),
+            $"vec_id".as("vid"), $"v".as("sv"))).as("m"))
+          .select($"m.sv").head().getSeq[Double](0).toArray
+        val iv = members.withColumn("ivd", intComps($"v"))
+        val pair = (1 to 2).foldLeft(Array(s0, far))((cc, _) =>
+          kmeansRound(iv, cc))
+        // a DEGENERATE cell (identical members: both centroids tie,
+        // everyone re-assigns to ONE side) must not count as a split,
+        // grow the book, or rewrite anything — it cannot divide, and
+        // a caller loop must see 0 so it stops instead of mutating
+        // the persisted index once per round until its round cap.
+        // BOTH sides must be nonempty: an all-on-side-1 assignment is
+        // just as degenerate as all-on-side-0 — counting it as a
+        // split would relocate the whole oversized population into
+        // the new cell and rewrite the same rows every round
+        val asg = assignCells(members, pair)
+        val bothSides = asg.select($"cell").distinct().limit(2)
+          .count() == 2
+        if (bothSides) {
+          val nc = book.length.toLong
+          book(c.toInt) = pair(0) // cids are 0..n-1 by construction
+          book += pair(1)
+          newCells ::= nc
+          splitCells ::= c
+          splits += 1
+          moved ::= asg
+            .select($"batch",
+              when($"cell" === 0L, lit(c)).otherwise(lit(nc)).as("cell"),
+              $"vec_id", $"v")
+        }
+      } finally members.unpersist()
+    }
+    if (splits == 0) return 0
+    // the reassigned rows must MATERIALIZE before their source
+    // partitions are dropped — the frames above lazily read them.
+    // Only ACTUALLY-SPLIT cells rewrite; degenerates stay untouched.
+    val newVecs = moved.reduce(_ unionByName _).localCheckpoint(true)
+    val touched = vecs.filter($"cell".isin(splitCells: _*))
+      .select($"batch", $"cell").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    touched.foreach { case (b, c) =>
+      store.delete("knn_vectors", Seq("batch" -> b, "cell" -> c)) }
+    store.write("knn_vectors", newVecs, Seq("batch", "cell"))
+    implicit val enc = org.apache.spark.sql.Encoders.product[CentRow]
+    store.write("ann_coarse_book",
+      s.createDataset(book.toIndexedSeq.zipWithIndex.map {
+        case (cv, i) => CentRow(i.toLong, cv.toSeq) })
+        .toDF("cid", "cv")
+        .select(lit(bookVer).as("trained_at"), $"cid", $"cv"),
+      Seq("trained_at"))
+    // re-edge split + new cells from the rewritten store; untouched
+    // cells' graph partitions are never read or rewritten
+    val affected = (splitCells ++ newCells).distinct
+    val members2 = store.read("knn_vectors", s)
+      .filter($"cell".isin(affected: _*))
+      .select($"vec_id", $"v", $"cell".cast("long").as("cell")).cache()
+    // `k` must match the k the graph was BUILT with (appendKnnGraph's
+    // caller knob) — re-edging split cells at a different k would
+    // leave the stored graph mixed-degree across cells
+    val edges = knnEdges(members2, k)
+      .select($"cell", $"src", $"dst", $"cos", $"rn")
+    affected.foreach(c => store.delete("knn_graph", Seq("cell" -> c)))
+    store.write("knn_graph", edges, Seq("cell"))
+    members2.unpersist()
+    // rebalance relabels cells IN PLACE — the historical membership
+    // below this point no longer exists, so it advances the "knn"
+    // maintenance horizon: as-of reads below it refuse loudly
+    // ([[knnGraphStored]]) and pre-rebalance batch replays refuse
+    // ([[appendKnnGraph]]) instead of re-assigning against the grown
+    // book and silently shifting membership
+    val maxBatch = store.read("knn_vectors", s)
+      .agg(max($"batch".cast("long"))).first()
+    if (!maxBatch.isNullAt(0))
+      graft.store.Horizon.set(store, s, "knn", maxBatch.getLong(0))
+    // the maintained walk corpus stores each step's CELL for its
+    // invalidation logic — relabeled cells make every stored row
+    // unsound, and nothing in the watermark can express that (batch
+    // ids did not move). The verb that invalidates the artifact
+    // removes it: the corpus and its watermark tear down, forcing the
+    // next appendWalkCorpus to rebuild from scratch (and
+    // embedNeighborsStored to refuse its now-unanchored vectors).
+    val hasWalks =
+      try store.read("walk_corpus", s).limit(1).count() > 0
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
+    if (hasWalks) {
+      store.delete("walk_corpus", Seq.empty)
+      graft.store.Horizon.clear(store, "walks")
+    }
+    splits
+  }
+
+  /** Iterate [[rebalanceKnnCells]] to a HARD cap: one pass halves the
+    * hot cells, so reaching the cap is geometric in rounds; a round
+    * that splits nothing ends the loop (a degenerate cell of > cap
+    * identical vectors cannot split — loud failure beats spinning).
+    * Returns total splits. */
+  def rebalanceKnnCellsToCap(s: org.apache.spark.sql.SparkSession,
+      store: graft.store.Store, cap: Int, k: Int = KnnGraphK,
+      maxRounds: Int = 32): Int = {
+    var total = 0
+    var round = 0
+    var moved = -1
+    while (moved != 0 && round < maxRounds) {
+      moved = rebalanceKnnCells(s, store, cap, k)
+      total += moved
+      round += 1
+    }
+    val worst = store.read("knn_vectors", s)
+      .groupBy($"cell").count()
+      .agg(max($"count")).first().getLong(0)
+    require(worst <= cap,
+      s"rebalance stalled: a cell still holds $worst > $cap members " +
+        "(identical-vector degenerate cell?)")
+    total
+  }
+
   /** x91 body: filtered (metadata-constrained) ANN — the search shape
     * every production vector store grew (Qdrant/Milvus/pgvector
     * filtered search): each query's candidates must ALSO satisfy a
@@ -4732,6 +5755,26 @@ object VectorOps {
       .select($"label", $"n", $"correct",
         expr("correct * 1000000 div n").as("acc_ppm"))
       .orderBy($"label")
+  }
+
+  /** Tombstone-delete vectors from the persisted ANN corpus — the
+    * third lifecycle verb (append = [[appendAnnCorpus]], compact =
+    * [[compactAnnCorpus]], delete = this). Deletes land as ≤-id-count
+    * rows in an `ann_tombstones` entity partitioned by vec_id (so
+    * re-deleting is a per-id dynamic-partition overwrite — idempotent,
+    * and earlier tombstones survive); the stored search anti-joins
+    * them out at read time. The corpus codes are NEVER rewritten —
+    * at 100 TB a delete is a metadata row, and [[compactAnnCorpus]]
+    * is the natural place to fold tombstones physically when the
+    * small-file maintenance job runs anyway. */
+  def tombstoneAnnVectors(s: org.apache.spark.sql.SparkSession,
+      ids: Seq[Long], store: graft.store.Store): Unit = {
+    require(ids.nonEmpty, "tombstone call with no ids")
+    // the `dead` marker exists because a parquet write cannot
+    // partition by every column; the id is the partition key
+    store.write("ann_tombstones",
+      s.createDataFrame(ids.map(id => (id, 1))).toDF("vec_id", "dead"),
+      Seq("vec_id"))
   }
 
   /** x87 body: one NN-descent refinement round (Dong et al. 2011) over

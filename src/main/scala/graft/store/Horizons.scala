@@ -84,8 +84,8 @@ object Horizon {
 }
 
 /** The store-level snapshot verb shared by every batch-partitioned
-  * index family (sparse postings, ANN codes, k-NN vectors, sketch
-  * registers): an as-of read is the SAME plan as the live read over
+  * index family (sparse postings, ANN codes, k-NN vectors, drift
+  * counts): an as-of read is the SAME plan as the live read over
   * the `batch <= asOf` cut of each batch-partitioned entity — the cut
   * is a partition-directory prune, so a snapshot costs no more than
   * the live read over the same history. `Long.MaxValue` (the default
@@ -109,7 +109,7 @@ case class FoldEntity(name: String, keys: Seq[String],
     recast: DataFrame => DataFrame = identity)
 
 /** Crash-safe staged swap shared by every compaction job (sparse
-  * index, ANN corpus, sketch registers).
+  * index, ANN corpus, drift counts).
   *
   * The discipline: the consolidated copy lands in `<name>_stage`
   * entities first; a one-row `<family>_compact_intent` marker is

@@ -14,8 +14,8 @@ import graft.store.Store
   * batch's own `<family>_version_drift` partition — so a model
   * roll-forward mid-stream produces its before/after neighbor-set
   * report automatically, with no operator running the batch verb by
-  * hand. The x101 batch/stream-twin discipline (the streaming sketch
-  * twins) applied to the versioned-model families.
+  * hand. The x101 batch/stream-twin discipline applied to the
+  * versioned-model families.
   *
   * Idempotency: both the stamp and the drift rows are delete-before-
   * write on the `batch` partition, so a replayed micro-batch rewrites

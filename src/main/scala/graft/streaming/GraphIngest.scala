@@ -8,16 +8,14 @@ import graft.store.Store
 
 /** Streaming k-NN-graph ingest — the incremental graph lifecycle
   * ([[graft.queries.VectorOps.appendKnnGraph]]) driven by Structured
-  * Streaming, completing the streaming twins for every persisted ANN
-  * artifact (corpus codes = [[AnnIngest]], band index / sketches =
-  * their streams, graph = this): each micro-batch of raw (vec_id,
-  * embedding) rows is normalized, assigned against the PERSISTED
-  * coarse book, landed under its own `batch` partition
-  * (delete-before-write — replays overwrite themselves, exactly-once
-  * through retries), and ONLY the cells the batch touched are
-  * re-edged. Untouched cells' members and graph partitions are never
-  * read or rewritten, so a day's graph maintenance scales with the
-  * touched-cell population, not the corpus.
+  * Streaming, the graph twin of [[AnnIngest]]'s corpus-code stream:
+  * each micro-batch of raw (vec_id, embedding) rows is normalized,
+  * assigned against the PERSISTED coarse book, landed under its own
+  * `batch` partition (delete-before-write — replays overwrite
+  * themselves, exactly-once through retries), and ONLY the cells the
+  * batch touched are re-edged. Untouched cells' members and graph
+  * partitions are never read or rewritten, so a day's graph maintenance
+  * scales with the touched-cell population, not the corpus.
   *
   * Correctness rides the batch path's proof (in-cell edges depend
   * only on their cell's members; StoreSpec pins two-batch ≡ one-shot

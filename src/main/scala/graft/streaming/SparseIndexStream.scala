@@ -14,7 +14,7 @@ import org.apache.spark.sql.DataFrame
   * (`TextOps.termDf` / `TextOps.corpusTotals`, the same frames x47's
   * `bm25Parts` consumes), so a streamed table is bit-identical to a
   * batch rebuild over the same documents — the batch/stream twin
-  * discipline of the e-series / SketchStream, applied to the index.
+  * discipline of [[DriftMonitor]], applied to the index.
   *
   * Streaming shape: both are pure streaming aggregations with no
   * watermark to manage — state is the VOCABULARY-sized df table (the

@@ -898,13 +898,22 @@ class ScaleGuardsSpec extends AnyFunSuite with SparkSpec {
     assert(nb.forall(t => t._5 == 0L || t._5 == 1L))
   }
 
-  test("eager graph contraction leaves no pinned cache blocks behind") {
+  test("eager iterative bodies (graph contraction, incremental graph " +
+    "append) leave no pinned cache blocks behind") {
     import spark.implicits._
     spark.sharedState.cacheManager.clearCache()
     // star contraction over a 2000-edge chain forest
     val pairs = spark.range(2000)
       .select(($"id" * 2).as("a"), ($"id" * 2 + 2).as("b"))
     assert(graft.ops.Components.contract(pairs).count() > 0)
+    // incremental k-NN graph append through a store
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-hygiene").toString
+    val store = new graft.store.ParquetStore(root)
+    VectorOps.persistAnnBooks(spark, dir, store)
+    val batch = VectorOps.normalizedEmbeddings(spark, dir)
+      .filter($"vec_id" < 64)
+    VectorOps.appendKnnGraph(spark, batch, 0L, store)
     assert(spark.sharedState.cacheManager.isEmpty,
       "eager iterative body left cached blocks pinned")
   }
