@@ -1,500 +1,230 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import BenchPins.{Stages, f2, f3}
+import Harness.Canaries
+
+/** The registry bench: the t1/t2 tile lifecycle, the registry sweep, the
+  * warm re-timing of the heavy set and the pins, in that order. Prints
+  * one compact JSON headline line and writes the full record to a
+  * sidecar (`SPARK_GRAFT_DETAILS`, default `BENCH_DETAILS_<cpus>c.json`).
+  */
 object Bench {
+
+  /** Lifecycle grid sizes; the [[BenchPins]] bars are calibrated at these
+    * two. Per-chip jobs are independent partitions, so 4x the chips
+    * should cost ~4x the work on a fixed-core box, not a super-linear
+    * shuffle blowup. */
+  val T1Chips = 25
+  val T2Chips = 100
+
+  /** Second pass over the heaviest text/vector queries: warm timings
+    * separate one-time JIT/codegen warm-up (which lands on whichever
+    * heavy query runs first in the cold sweep) from plan cost (the r4
+    * x19/x21 "regressions" were exactly this attribution noise). Every
+    * query whose cold sweep exceeded ~1-1.5 s at sf0.1. */
+  val WarmSet = Seq("x19_components", "x21_bigrams", "x14_tfidf",
+    "x6_ngram_jaccard", "x7_minhash_lsh", "x10_embed_neardup",
+    "x26_contamination", "x28_winnow", "x11_ann_lsh",
+    "x30_span_dedup", "x31_decontam_bloom", "x33_incremental_dedup",
+    "x27_filter_report", "x20_dedup_resolve", "x29_ann_nprobe",
+    "x34_ann_pq", "x37_ann_ivfpq", "x38_ann_ivfpq_nprobe",
+    "x39_kmeans_train", "x40_ann_ivf_trained", "x41_pq_train",
+    "x42_ann_pq_trained", "x43_ann_ivfpq_trained",
+    "x44_ann_ivfpq_residual", "x45_ann_ivfpq_residual_probe",
+    "x46_kmeans_train_seeded", "x47_bm25", "x50_rrf_fusion",
+    "x51_ann_ivf_sq8", "x52_ann_pq_refine", "x53_mmr_diversify",
+    "x55_corpus_prep", "m2_train_score",
+    "x56_ann_recall_report", "x60_winnow_overlap", "x61_prf_expansion",
+    "x62_bpe_train", "x63_bpe_encode", "x64_cms_counts",
+    "x66_graph_pagerank", "x67_pmi_cooccur", "x69_retrieval_ndcg",
+    "x70_ppjoin", "x71_density_prune", "x72_mink_prob",
+    "x73_dsir_weights", "x74_nb_classifier", "x75_bm25_wand",
+    "x76_embed_topdir", "x77_abtt_search", "x78_label_prop",
+    "x81_simhash_dedup",
+    "x49_semantic_dedup", "x86_knn_graph", "x87_nn_descent",
+    "x97_cc_contract", "x98_triangles", "x100_containment",
+    "x101_ann_drift", "x107_release_manifest",
+    "x109_tokenizer_fertility", "x110_rerank_cross",
+    "x111_hard_negatives",
+    "x112_edit_neardup",
+    // multi-round hop bodies pay checkpoint job overhead cold; the warm
+    // number is the honest plan cost
+    "x113_phrase_search", "x114_graph_search", "x116_graph_walks",
+    "x117_proximity_rank",
+    "x118_late_interaction",
+    "x119_lm_dirichlet",
+    "x120_skipgram_pairs",
+    "x121_node2vec_walks",
+    "x122_embed_train", "x123_embed_neighbors",
+    // the d=4 trainer over the fixture pair relation (pure ladder
+    // scheduler cost) and its serve-shaped consumer
+    "x124_embed_train_d4", "x127_embed_serve_d4")
+
+  /** Machine-checked query pins, name -> bar in seconds. x124's bar
+    * derives from its anchored scheduler-job budget: ScaleGuardsSpec's
+    * 3·(d+1)·iters + 40 = 160 jobs at a ~40 ms clean per-job budget
+    * ≈ 6.4 s, rounded to 6.5 (its wall is pure scheduler latency: 130
+    * stages, 3.3 s stage-sum). */
+  val PinnedQueries: Seq[(String, Double)] = Seq(
+    "x107_release_manifest" -> 3.5,
+    "x124_embed_train_d4" -> 6.5)
+
+  /** The lifecycle stage block: per grid, the per-stage minima and the
+    * raw runs, each value rendered by `fmt`. */
+  def stagesJson(grids: Seq[(String, Stages, Seq[Stages])],
+      fmt: Double => String): String = {
+    def one(t: Stages): String =
+      s"""{"segment":${fmt(t._2)},"tile":${fmt(t._3)},""" +
+        s""""prediction":${fmt(t._4)}}"""
+    grids.map { case (k, min, runs) =>
+      s""""$k":${one(min).dropRight(1)},""" +
+        s""""runs":[${runs.map(one).mkString(",")}]}"""
+    }.mkString("{", ",", "}")
+  }
+
+  /** The compact stdout line, the record of the run: the per-query dict
+    * rides inline at 2 decimals, because readers of the line do not
+    * open the sidecar, and at full precision the 188-entry line outgrew
+    * a ~12 KB capture window. */
+  def headline(results: Seq[(String, Double)], stages: String,
+      canary: String, canary2: String, contended: Boolean, pins: String,
+      details: String, sf: String): String =
+    s"""{"metric":"total","value":${f3(results.map(_._2).sum)},""" +
+      s""""unit":"sec","queries":${Harness.dict(results, f2)},""" +
+      s""""stages":$stages,"canary":$canary,"canary2":$canary2,""" +
+      s""""contended":$contended,"pins":$pins,"details":"$details",""" +
+      s""""sf":"$sf"}"""
+
+  /** The full-precision record, with the warm dict. */
+  def sidecar(results: Seq[(String, Double)], warm: Seq[(String, Double)],
+      stages: String, canary: String, canary2: String, contended: Boolean,
+      pins: String, sf: String): String =
+    s"""{"metric":"total","value":${results.map(_._2).sum},"unit":"sec",""" +
+      s""""queries":${Harness.dict(results, _.toString)},""" +
+      s""""warm":${Harness.dict(warm, _.toString)},"stages":$stages,""" +
+      s""""canary":$canary,"canary2":$canary2,""" +
+      s""""contended":$contended,"pins":$pins,"sf":"$sf"}"""
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: touch each table once so codegen/parquet-reader/JIT
-    // startup cost isn't attributed to whichever query runs first
-    Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    // ...and exercise the physical machinery (shuffle exchange, hash
-    // join/agg, sort, window codegen) once on the 25-row dims so the
-    // first timed query doesn't pay one-time JIT/codegen-cache cost
-    try {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      Tables(spark, sfDir, "nation")
-        .join(Tables(spark, sfDir, "region"),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name")).agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(lit(1)).orderBy(col("n").desc, col("r_name"))))
-        .orderBy(col("rk")).count()
-    } catch { case _: Throwable => () }
-    // ...and the text/hash stage shapes (regex split, md5/conv shingle
-    // hashing, the df-cap window, the pair self-join, term tf/df aggs)
-    // on a ~1k-doc subset — identical generated classes to the real
-    // x6/x14/x19/x21 stages, so the heavy text queries don't pay the
-    // janino + C2 warmup inside whichever of them runs first
-    try {
-      queries.TextOps.warmup(spark, sfDir)
-    } catch { case _: Throwable => () }
-    // ...and the MinHash / SimHash codegen expressions (x7/x8)
-    try {
-      import org.apache.spark.sql.functions._
-      import graft.functions.{TextExprs => T}
-      Tables(spark, sfDir, "documents").limit(64)
-        .select(col("doc_id"), T.wsTokens(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 3)
-        .select(col("doc_id"),
-          graft.functions.MinHashSig(
-            T.shingleHashes(T.shingles(col("tk"), 3)), 16).as("sig"),
-          T.simhash(col("tk"), 16).as("simhash"),
-          T.md5Long(concat_ws(" ", col("tk"))).as("m")).count()
-    } catch { case _: Throwable => () }
-    // ...and the vector codegen expressions (DotProduct fold, DotMatrix
-    // loop, transform-normalize) the embedding queries lean on
-    try {
-      import org.apache.spark.sql.functions._
-      val m = Array.tabulate(4)(j => Array.tabulate(64)(i => (j + i) / 64.0))
-      Tables(spark, sfDir, "embeddings").limit(64)
-        .select(col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", sqrt(graft.functions.DotProduct(col("v"), col("v"))))
-        .withColumn("u", transform(col("v"), x => x / col("nrm")))
-        .select(graft.functions.DotMatrix(col("u"), m).as("pd")).count()
-    } catch { case _: Throwable => () }
-    // Local-iteration switch: SPARK_GRAFT_LIFECYCLE_ONLY=1 skips the
-    // registry + warm sweeps so t1/t2 can be measured in isolation
-    // (unset for the driver's full run).
-    val lifecycleOnly =
-      sys.env.get("SPARK_GRAFT_LIFECYCLE_ONLY").contains("1")
-    // Contention canary: ONE fixed ~0.1-0.3 s reference query
-    // (lineitem rollup — plans identical every call) re-timed at every
-    // phase boundary. The engine cannot change between samples, so a
-    // large spread measures the BOX (driver-VM contention), not the
-    // code — the r8 record carried a fake 5.4x lifecycle regression
-    // (92.3 s recorded vs 15.9 s reproduced) precisely because the
-    // numbers had no health bit. spread = max/min across samples;
-    // > 3x stamps "contended": true into the emitted JSON so a
-    // round's numbers carry their own weather report.
-    // Each sample is the MIN of two back-to-back runs: the canary must
-    // measure SUSTAINED contention (what corrupts a whole phase), not
-    // one-off scheduling jitter — a single run's own spread on an idle
-    // box approaches the 3x threshold.
-    val canarySamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // Second, HEAVIER canary (round-10 lesson): the 0.2 s rollup
-    // under-weights memory-bandwidth contention — identical binaries
-    // swing 1.3-1.5x on 30-stage pipelines while the light canary
-    // holds flat. This one is a ~2 s multi-exchange pipeline (join +
-    // two shuffled aggregations + a shuffled top-k over lineitem ×
-    // orders), so its spread sees the same resource the heavy queries
-    // contend on. Both spreads stamp the record; the top-level
-    // "contended" bit is their OR.
-    val canary2Samples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def canary(): Unit = {
-      try {
-        import org.apache.spark.sql.functions._
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          Tables(spark, sfDir, "lineitem")
-            .groupBy(col("l_returnflag"), col("l_linestatus"))
-            .agg(sum(col("l_quantity")).as("sq"),
-              avg(col("l_extendedprice")).as("ap"),
-              count(lit(1)).as("n"))
-            .count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        canarySamples += math.min(once(), once())
-      } catch { case _: Throwable => () }
-      try {
-        canary2Samples += math.min(canary2Once(), canary2Once())
-      } catch { case _: Throwable => () }
-    }
-    def canary2Once(): Double = {
-      import org.apache.spark.sql.functions._
-      val t0 = System.nanoTime()
-      val li = Tables(spark, sfDir, "lineitem")
-      // 8x scan volume (~2 s at sf0.1): the canary must SATURATE
-      // memory bandwidth the way the 30-stage pipelines do, not
-      // tickle it — at 3x it timed ~0.7 s and still under-weighted
-      // the pressure band the heavy queries swing in
-      val rev = Iterator.fill(8)(li).reduce(_ union _)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("rev"),
-          count(lit(1)).as("nl"),
-          sum(col("l_quantity")).as("qty"))
-      rev.join(Tables(spark, sfDir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("rev")).as("crev"), sum(col("nl")).as("cn"),
-          max(col("qty")).as("mq"))
-        .orderBy(col("crev").desc, col("o_custkey"))
-        .limit(100)
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // the heavy canary's OWN shape warms untimed first: its baseline
-    // sample otherwise pays janino/JIT for the join+agg+topK classes
-    // and stamps a fake ~3x spread into an idle-box record (measured:
-    // first sample 1.18 s vs 0.39 s steady on an idle run)
-    try canary2Once() catch { case _: Throwable => () }
-    canary() // baseline sample, post-warmup
-    // sorted order: Map iteration order is arbitrary and would shift
-    // residual warmup between queries run-to-run / round-to-round
-    // Per-query hygiene (UNTIMED — applied after the measurement):
-    // registry bodies legitimately cache frames their lazy results
-    // reference, with no in-body unpersist seam, so a 139-query sweep
-    // accumulates pinned blocks + heap residue; by the warm section
-    // that pressure made late queries measure GC, not plans (warm
-    // x87 ran ABOVE cold before this). Evict after every query and
-    // collect periodically.
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
+    val canaries = new Canaries(spark, sfDir)
+    // per-query hygiene, untimed: evict after every query, collect
+    // every 10th
     var sinceGc = 0
-    def perQueryIsolate(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      sinceGc += 1
-      if (sinceGc >= 10) { sinceGc = 0; System.gc() }
-    }
-    // a FAILED query records -1 (visible in the JSON), never its
-    // time-to-failure — the r7 x67 overflow hid behind an honest-
-    // looking elapsed number for a whole round.
-    // A def, not a val: the lifecycle phase now runs FIRST (r13
-    // verdict "What's wrong" #3 / "Next round" #8 — 186 queries of
-    // heap/JIT residue landed on the lifecycle stages despite the
-    // phase-boundary isolate(), overstating the official t2 segment
-    // ~1.9x vs the isolated cost), so the sweep executes after it.
-    def registrySweep(): Seq[(String, Double)] =
-      (if (lifecycleOnly) Seq.empty
-        else SparkEntry.queries.toSeq.sortBy(_._1)).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        perQueryIsolate()
-        name -> (if (ok) dt else -1.0)
-    }
-    // tile-scale lifecycle: segment -> tile -> prediction over a chip
-    // grid through the job queue (the reference's own suite ordering,
-    // test/test_B_tile.py:51-54), timed end to end — the per-chip
-    // partition economy at a multi-chip unit of work. Run at TWO grid
-    // sizes (25 and 100 chips, env-overridable) so the round-over-round
-    // record shows wall-time scaling ~linearly in chips: per-chip jobs
-    // are independent partitions, so 4x the chips ≈ 4x the work on a
-    // fixed-core box, NOT a super-linear shuffle blowup.
-    // Returns (wall, segment, tile, prediction) seconds — the stage
-    // splits make round-over-round lifecycle regressions attributable
-    // to a stage instead of one opaque wall number.
-    def lifecycle(nChips: Int): (Double, Double, Double, Double) = try {
+    def bestOf(n: Int, name: String): Double =
+      Harness.bestOf(n, name, {
+        sinceGc += 1
+        Harness.isolate(spark, gc = sinceGc % 10 == 0)
+      })(Harness.query(spark, sfDir, name))
+    // segment -> tile -> prediction over a chip grid through the job
+    // queue (the reference's own suite ordering, test/test_B_tile.py:
+    // 51-54), timed end to end and per stage, so a lifecycle
+    // regression is attributable to a stage
+    def lifecycle(name: String, nChips: Int): Stages = {
       import graft.ops.SyntheticTile
       import graft.streaming.{JobQueue, JobRequest}
       implicit val reqEnc =
         org.apache.spark.sql.Encoders.product[JobRequest]
-      val t0 = System.nanoTime()
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-tile-bench").toString
-      val jq = new JobQueue(spark, new store.ParquetStore(root),
-        ardSource = (cx, cy) => SyntheticTile.chip(spark, cx, cy),
-        auxSource = () => SyntheticTile.aux(spark, nChips),
-        classifier = new ml.GradientBoostedClassifier(
-          ml.BoostConfig(numRound = 15, numClass = 4, maxDepth = 3)),
-        // per-chip jobs are small vs cluster capacity; overlap enough
-        // of them to keep all cores fed (measured 28.5s -> 10.9s at
-        // par 4 -> 16 on local[32]; env-overridable for A/B runs).
-        // 3/4 of cores, not 1/2: the r12 A/B read t2-segment mins
-        // 42.9/31.5/24.3 s at par 16 vs 21.4/24.4/24.1 at par 24 —
-        // deeper overlap both shaves the tail and dampens exposure
-        // to one stalled job under host pressure; par 32 regressed
-        // t1 segment (13.4 vs 8.4 s), so full-width is too deep.
-        parallelism = sys.env.get("SPARK_GRAFT_JQ_PAR")
-          .flatMap { v =>
-            // validated override: a typo'd value must not crash the
-            // bench at startup, and 0/negative would build a hung or
-            // crashing job queue instead of a clear error
-            val p = v.toIntOption.filter(_ > 0)
-            if (p.isEmpty)
-              System.err.println(s"[bench] ignoring SPARK_GRAFT_JQ_PAR" +
-                s"='$v' (not a positive integer); using the computed " +
-                "default")
-            p
-          }
-          .getOrElse(math.max(4, cpus.toInt * 3 / 4)))
-      def timed(f: => Unit): Double = {
-        val s0 = System.nanoTime(); f; (System.nanoTime() - s0) / 1e9
-      }
-      val seg = timed(jq.dispatch(spark.createDataset(
-        (0 until nChips).map(k =>
-          JobRequest("segment", SyntheticTile.cxOf(k), SyntheticTile.Cy,
-            0, 0, "", 0, 0)))))
-      val tile = timed(jq.dispatch(spark.createDataset(Seq(
-        JobRequest("tile", 0, 0, 7, 9, "1987-07-01", 0, 0)))))
-      val pred = timed(jq.dispatch(spark.createDataset(
-        (0 until nChips).map(k =>
-          JobRequest("prediction", SyntheticTile.cxOf(k), SyntheticTile.Cy,
-            7, 9, "", 7, 1)))))
-      require(jq.results.forall(_.ok),
-        jq.results.filterNot(_.ok).take(3).toString)
-      jq.close() // release the batch-scoped aux cache
-      ((System.nanoTime() - t0) / 1e9, seg, tile, pred)
-    } catch { case _: Throwable => (-1.0, -1.0, -1.0, -1.0) }
-    // Phase isolation: each sweep leaves cached blocks and heap
-    // residue behind (several registry bodies cache frames their lazy
-    // results still reference, so they have no in-body unpersist
-    // seam); evict at every phase boundary so each phase measures its
-    // own plans, not the previous phase's GC shadow — t2 measured
-    // 88-134 s after the sweep vs 41 s isolated before this, and warm
-    // timings ran ABOVE cold after the 100-chip lifecycle.
-    def isolate(): Unit =
-      try { spark.catalog.clearCache(); System.gc() }
-      catch { case _: Throwable => () }
-    // MIN of two isolated runs per grid size, like the warm set:
-    // single-sample lifecycle stages inflated 5-10x under driver-VM
-    // contention (the r8 t2-segment reading). Component-wise min —
-    // each stage's honest cost is its best isolated sample; a failed
-    // run (-1) never wins the min unless both runs failed. BOTH raw
-    // runs ship alongside the min (the r11 lesson: the official
-    // record carried a ~4.7x t2-prediction artifact with every health
-    // bit green — a reader could not see that both samples were
-    // corrupted; with the raw runs in the record, one clean sample
-    // defends the stage and two corrupted ones are visibly weather).
-    def lifecycle2(n: Int): ((Double, Double, Double, Double),
-        Seq[(Double, Double, Double, Double)]) = {
-      val a = lifecycle(n)
-      isolate()
-      val b = lifecycle(n)
-      isolate()
-      def m(x: Double, y: Double) =
-        if (x < 0) y else if (y < 0) x else math.min(x, y)
-      ((m(a._1, b._1), m(a._2, b._2), m(a._3, b._3), m(a._4, b._4)),
-        Seq(a, b))
-    }
-    isolate()
-    val t1Chips = sys.env.getOrElse("SPARK_GRAFT_TILE_CHIPS", "25").toInt
-    val t2Chips =
-      sys.env.getOrElse("SPARK_GRAFT_TILE_CHIPS_SCALE", "100").toInt
-    val (t1, t1Runs) = lifecycle2(t1Chips)
-    canary()
-    val (t2, t2Runs) = lifecycle2(t2Chips)
-    canary()
-    // Scaling pin (off by default; set e.g. =400 to regenerate the
-    // 4x-chips claim from the harness instead of trusting prose):
-    // per-chip jobs are independent partitions, so s/chip should hold
-    // ~flat from t2's grid to this one.
-    val t3 = sys.env.get("SPARK_GRAFT_TILE_CHIPS_SCALE2").map { v =>
-      val t = lifecycle2(v.toInt)
-      canary()
-      v.toInt -> t._1
-    }
-    // registry sweep AFTER the lifecycle phase (see registrySweep's
-    // comment): the lifecycle stages measure their own plans, not the
-    // sweep's heap/JIT shadow; each sweep query keeps its own per-query
-    // isolation exactly as before
-    val registry = registrySweep()
-    canary()
-    val results = registry :+ ("t1_tile_lifecycle" -> t1._1) :+
-      ("t2_tile_lifecycle_100" -> t2._1) :++
-      t3.map { case (n, t) => s"t3_tile_lifecycle_$n" -> t._1 }.toSeq
-    def stageJson(t: (Double, Double, Double, Double)): String =
-      s"""{"segment":${t._2},"tile":${t._3},"prediction":${t._4}}"""
-    def stageRunsJson(min: (Double, Double, Double, Double),
-        runs: Seq[(Double, Double, Double, Double)]): String =
-      stageJson(min).dropRight(1) +
-        s""","runs":[${runs.map(stageJson).mkString(",")}]}"""
-    val stages =
-      s"""{"t1":${stageRunsJson(t1, t1Runs)}""" +
-        s""","t2":${stageRunsJson(t2, t2Runs)}""" +
-        t3.fold("")(t => s""","t3":${stageJson(t._2)}""") + "}"
-    // second pass over the heaviest text/vector queries: warm timings
-    // separate one-time JIT/codegen warmup (which lands on whichever
-    // heavy query runs first in the cold sweep) from actual plan cost —
-    // the r4 x19/x21 "regressions" were exactly this attribution noise.
-    // Covers every query whose r5 cold time exceeded ~1 s (the round-5
-    // ask: x27/x20's cold swings get a stable signal) plus the new
-    // ANN/training entries.
-    val warmSet = Seq("x19_components", "x21_bigrams", "x14_tfidf",
-      "x6_ngram_jaccard", "x7_minhash_lsh", "x10_embed_neardup",
-      "x26_contamination", "x28_winnow", "x11_ann_lsh",
-      "x30_span_dedup", "x31_decontam_bloom", "x33_incremental_dedup",
-      "x27_filter_report", "x20_dedup_resolve", "x29_ann_nprobe",
-      "x34_ann_pq", "x37_ann_ivfpq", "x38_ann_ivfpq_nprobe",
-      "x39_kmeans_train", "x40_ann_ivf_trained", "x41_pq_train",
-      "x42_ann_pq_trained", "x43_ann_ivfpq_trained",
-      "x44_ann_ivfpq_residual", "x45_ann_ivfpq_residual_probe",
-      "x46_kmeans_train_seeded", "x47_bm25", "x50_rrf_fusion",
-      "x51_ann_ivf_sq8", "x52_ann_pq_refine", "x53_mmr_diversify",
-      "x55_corpus_prep", "m2_train_score",
-      // round-7 additions: every new query whose cold sweep exceeded
-      // ~1.5 s at sf0.1, so the warm section stays the full heavy set
-      "x56_ann_recall_report", "x60_winnow_overlap", "x61_prf_expansion",
-      "x62_bpe_train", "x63_bpe_encode", "x64_cms_counts",
-      "x66_graph_pagerank", "x67_pmi_cooccur", "x69_retrieval_ndcg",
-      "x70_ppjoin", "x71_density_prune", "x72_mink_prob",
-      "x73_dsir_weights", "x74_nb_classifier", "x75_bm25_wand",
-      "x76_embed_topdir", "x77_abtt_search", "x78_label_prop",
-      "x81_simhash_dedup",
-      // graph-dedup family heavies (this round)
-      "x49_semantic_dedup", "x86_knn_graph", "x87_nn_descent",
-      // late-round-7 additions (multi-pass graph/training bodies)
-      "x97_cc_contract", "x98_triangles", "x100_containment",
-      "x101_ann_drift", "x107_release_manifest",
-      // round-8 additions over the BPE / BM25 chains
-      "x109_tokenizer_fertility", "x110_rerank_cross",
-      "x111_hard_negatives",
-      // round-9: rides the x6 blocking + a candidate-sliver verify
-      "x112_edit_neardup",
-      // round-9 graph/retrieval additions whose cold sweep exceeded
-      // ~1.5 s (multi-round hop bodies pay checkpoint job overhead
-      // cold; the warm number is the honest plan cost)
-      "x113_phrase_search", "x114_graph_search", "x116_graph_walks",
-      "x117_proximity_rank",
-      // rides the full BM25 chain like x110, plus the embedding joins
-      "x118_late_interaction",
-      // same posting plumbing as x47, Dirichlet-smoothed scoring
-      "x119_lm_dirichlet",
-      // re-derives the x116 walk chain before its window self-join
-      "x120_skipgram_pairs",
-      // second-order walk steps pay the same per-step checkpoint tax
-      "x121_node2vec_walks",
-      // round-10: the embedding trainer re-derives the walk chain and
-      // runs 8 checkpointed matvec rounds; the consumer re-derives the
-      // trainer — both pay multi-job overhead cold
-      "x122_embed_train", "x123_embed_neighbors",
-      // round-13 split halves: the d=4 trainer over the FIXTURE pair
-      // relation (pure ladder scheduler cost — pins.x124's target)
-      // and its serve-shaped consumer (same fixture train + the rank)
-      "x124_embed_train_d4", "x127_embed_serve_d4")
-    // MIN of two isolated runs per query: the r7 record showed single
-    // warm samples can inflate 5-10x on driver-VM contention (x40
-    // 9.1 s / x87 51 s in the round run vs 1.4 s / 4.1 s reproduced
-    // minutes later on identical code) — min-of-2 keeps an honest
-    // per-query cost while shedding one-shot noise spikes.
-    val warm = (if (lifecycleOnly) Seq.empty else warmSet)
-      .flatMap(n => SparkEntry.queries.get(n).map { fn =>
-      // only SUCCESSFUL runs compete for the min — a fast failure
-      // must not masquerade as a fast query; both failing records -1
-      val runs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val d = (System.nanoTime() - t0) / 1e9
-        perQueryIsolate()
-        (ok, d)
-      }
-      val good = runs.filter(_._1).map(_._2)
-      n -> (if (good.nonEmpty) good.min else -1.0)
-    })
-    canary()
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val ws = warm.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    def spreadOf(xs: Seq[Double]): Double =
-      if (xs.size >= 2 && xs.min > 0) xs.max / xs.min else -1.0
-    val cSpread = spreadOf(canarySamples.toSeq)
-    val c2Spread = spreadOf(canary2Samples.toSeq)
-    // the record's health bit is the OR of both canaries: the light
-    // one catches scheduler/CPU contention, the heavy one catches the
-    // memory-bandwidth contention the light one is blind to
-    val contended = cSpread > 3.0 || c2Spread > 3.0
-    import BenchPins.f3
-    def canaryJson(xs: Seq[Double], spread: Double): String =
-      s"""{"samples":[${xs.map(f3).mkString(",")}],""" +
-        s""""spread":${f3(spread)},"contended":${spread > 3.0}}"""
-    val cJson = canaryJson(canarySamples.toSeq, cSpread)
-    val c2Json = canaryJson(canary2Samples.toSeq, c2Spread)
-    // Machine-checked performance pins (the r10 agreement): a pinned
-    // query exceeding its bar in a CANARY-CLEAN record fails the
-    // report visibly — prose bars don't regress loudly, JSON does.
-    // Calibration, classification, and the r12-record regression
-    // fixtures live in [[BenchPins]] (unit-replayed by BenchPinsSpec).
-    //
-    // DEWEATHERED (the r13 ask): two rounds of official records
-    // stamped `violated: true` on pure box pressure (x107 r11+r12,
-    // x124 r12 — every one attributed to weather after the fact), so
-    // a fired pin now (a) re-probes the query min-of-3 — one-shot
-    // spikes never stamp at all — and (b) stamps the DISTINCT value
-    // "weather" when the record's own untouched reference queries
-    // read >1.3x their pinned clean anchors. A genuine regression
-    // (refs in band) still stamps an unqualified true.
-    val warmMap = warm.toMap
-    def reprobe(name: String): Double =
-      SparkEntry.queries.get(name).map { fn =>
-        val good = (1 to 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          val d = (System.nanoTime() - t0) / 1e9
-          perQueryIsolate()
-          if (ok) Some(d) else None
+      val stages = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val wall = Harness.time(name) {
+        val root = java.nio.file.Files
+          .createTempDirectory("graft-tile-bench").toString
+        val jq = new JobQueue(spark, new store.ParquetStore(root),
+          ardSource = (cx, cy) => SyntheticTile.chip(spark, cx, cy),
+          auxSource = () => SyntheticTile.aux(spark, nChips),
+          classifier = new ml.GradientBoostedClassifier(
+            ml.BoostConfig(numRound = 15, numClass = 4, maxDepth = 3)),
+          // 3/4 of cores: the r12 A/B read t2-segment mins
+          // 42.9/31.5/24.3 s at par 16 vs 21.4/24.4/24.1 at par 24 on
+          // local[32]; par 32 regressed t1 segment (13.4 vs 8.4 s)
+          parallelism = math.max(4, Harness.cpus.toInt * 3 / 4))
+        def stage(reqs: Seq[JobRequest]): Unit = {
+          val s0 = System.nanoTime()
+          jq.dispatch(spark.createDataset(reqs))
+          stages += (System.nanoTime() - s0) / 1e9
         }
-        if (good.nonEmpty) good.min else -1.0
-      }.getOrElse(-1.0)
+        stage((0 until nChips).map(k => JobRequest("segment",
+          SyntheticTile.cxOf(k), SyntheticTile.Cy, 0, 0, "", 0, 0)))
+        stage(Seq(JobRequest("tile", 0, 0, 7, 9, "1987-07-01", 0, 0)))
+        stage((0 until nChips).map(k => JobRequest("prediction",
+          SyntheticTile.cxOf(k), SyntheticTile.Cy, 7, 9, "", 7, 1)))
+        require(jq.results.forall(_.ok),
+          jq.results.filterNot(_.ok).take(3).toString)
+        jq.close() // release the batch-scoped aux cache
+      }
+      if (wall < 0) (-1.0, -1.0, -1.0, -1.0)
+      else (wall, stages(0), stages(1), stages(2))
+    }
+    // Min of two isolated runs per grid, stage by stage: single-sample
+    // stages inflated 5-10x under host contention (the r8
+    // t2-segment reading). Both raw runs ship beside the min (the r11
+    // record carried a ~4.7x t2-prediction artifact with every health
+    // bit green; with the raw runs one clean sample defends the stage
+    // and two corrupted ones are visibly weather).
+    def lifecycleRuns(name: String, nChips: Int): (Stages, Seq[Stages]) = {
+      val runs = Seq.fill(2) {
+        val r = lifecycle(name, nChips); Harness.isolate(spark); r
+      }
+      def b(f: Stages => Double) = Harness.best(runs.map(f))
+      ((b(_._1), b(_._2), b(_._3), b(_._4)), runs)
+    }
+    // The lifecycle runs first: after the sweep, 186 queries of heap/JIT
+    // residue overstated the t2 segment ~1.9x vs its isolated cost (r13).
+    Harness.isolate(spark)
+    val (t1, t1Runs) = lifecycleRuns("t1_tile_lifecycle", T1Chips)
+    canaries.sample()
+    val (t2, t2Runs) = lifecycleRuns("t2_tile_lifecycle_100", T2Chips)
+    canaries.sample()
+    val registry =
+      SparkEntry.queries.keys.toSeq.sorted.map(n => n -> bestOf(1, n))
+    canaries.sample()
+    val results = registry :+ ("t1_tile_lifecycle" -> t1._1) :+
+      ("t2_tile_lifecycle_100" -> t2._1)
+    val grids = Seq(("t1", t1, t1Runs), ("t2", t2, t2Runs))
+    // min of two isolated runs: single warm samples inflated 5-10x on
+    // host contention (r7: x40 9.1 s / x87 51 s vs 1.4 s / 4.1 s
+    // reproduced minutes later on identical code)
+    val warm = WarmSet.map(n => n -> bestOf(2, n))
+    canaries.sample()
+    val contended = canaries.contended
+    val cJson = Canaries.json(canaries.light.toSeq, true)
+    val c2Json = Canaries.json(canaries.heavy.toSeq, true)
+    // Pins: a pinned query over its bar in a canary-clean record fails
+    // the report visibly. A fired pin (a) re-probes the query min-of-3,
+    // so one-shot spikes never stamp, and (b) stamps "weather" when the
+    // record's own reference queries read >1.3x their clean anchors
+    // (two rounds of records stamped `violated: true` on pure box
+    // pressure). When a pin survives its re-probe, the refs re-probe
+    // once in the same window, since warm-sweep refs can be minutes
+    // stale; the record ships the refs actually used.
+    val warmMap = warm.toMap
     val refsWarm = BenchPins.RefAnchors.map { case (n, a) =>
       (n, warmMap.getOrElse(n, -1.0), a)
     }
-    // window-matched refs: the warm-sweep ref readings can be minutes
-    // stale by the time a fired pin re-probes — under SHIFTING weather
-    // that mismatch could stamp an unqualified true against refs
-    // measured in a calmer window (or mask a regression against refs
-    // from a stormier one). When any pin survives its re-probe, the
-    // refs are re-probed min-of-3 ONCE in the same window and every
-    // surviving pin classifies against those; the record ships the
-    // values actually used.
     lazy val refsNow = BenchPins.RefAnchors.map { case (n, a) =>
-      (n, reprobe(n), a)
+      (n, bestOf(3, n), a)
     }
-    def pinOf(name: String, bar: Double)
-        : (Double, Double, Seq[(String, Double, Double)],
-          BenchPins.Violation) = {
+    val queryPins = PinnedQueries.map { case (name, bar) =>
       val w = warmMap.getOrElse(name, -1.0)
-      if (contended || w < 0 || w <= bar)
-        (w, -1.0, refsWarm,
-          BenchPins.classify(w, bar, !contended, -1.0, refsWarm))
-      else {
-        val rp = reprobe(name)
-        if (rp > 0 && rp <= bar)
-          (w, rp, refsWarm,
-            BenchPins.classify(w, bar, !contended, rp, refsWarm))
-        else
-          (w, rp, refsNow,
-            BenchPins.classify(w, bar, !contended, rp, refsNow))
-      }
+      val (rp, refs) =
+        if (contended || w < 0 || w <= bar) (-1.0, refsWarm)
+        else {
+          val rp = bestOf(3, name)
+          (rp, if (rp > 0 && rp <= bar) refsWarm else refsNow)
+        }
+      (name, bar, w, rp, refs,
+        BenchPins.classify(w, bar, !contended, rp, refs))
     }
-    val (x107Warm, x107Rp, x107Refs, x107V) =
-      pinOf("x107_release_manifest", 3.5)
-    // x124 retargeted to the TRAIN-REPLAY half (the r12 agreement
-    // honored: the chain split into fixture-train + fixture-serve
-    // entries, the corpus-scale walk derivation gone from both): the
-    // bar derives from the half's anchored scheduler-job budget —
-    // ScaleGuardsSpec's 3·(d+1)·iters + 40 = 160 jobs at a ~40 ms
-    // clean per-job budget ≈ 6.4 s, rounded to 6.5 (measured 5.9-7.1
-    // warm at 1.2-1.3x box pressure → ~4.5-5.5 clean; the wall is
-    // pure scheduler latency — 130 stages, 3.3 s stage-sum — so the
-    // pin now watches exactly the cost the ladder's design accepts).
-    val x124Bar = 6.5
-    val (x124Warm, x124Rp, x124Refs, x124V) =
-      pinOf("x124_embed_train_d4", x124Bar)
-    val lp = BenchPins.lifecyclePin(t1, t2, t2Runs, t1Chips, t2Chips)
-    def queryPinJson(bar: Double, w: Double, rp: Double,
-        refs: Seq[(String, Double, Double)],
-        v: BenchPins.Violation): String =
-      s"""{"bar_sec":$bar,"warm_sec":${f3(w)},""" +
+    val lp = BenchPins.lifecyclePin(t1, t2, t2Runs, T1Chips, T2Chips)
+    val pinsJson = queryPins.map { case (name, bar, w, rp, refs, v) =>
+      s""""$name":{"bar_sec":$bar,"warm_sec":${f3(w)},""" +
         s""""reprobe_sec":${f3(rp)},"enforced":${!contended},""" +
         s""""violated":${v.json},""" +
         s""""weather_refs":${BenchPins.refsJson(refs)}}"""
-    val pinsJson =
-      s"""{"x107_release_manifest":${
-        queryPinJson(3.5, x107Warm, x107Rp, x107Refs, x107V)},""" +
-        s""""x124_embed_train_d4":${
-          queryPinJson(x124Bar, x124Warm, x124Rp, x124Refs, x124V)},""" +
-        s""""lifecycle_stages":${lp.json}}"""
-    def pinAlert(name: String, v: BenchPins.Violation, w: Double,
-        rp: Double, bar: Double): Unit =
+    }.mkString("{", ",", s""","lifecycle_stages":${lp.json}}""")
+    queryPins.foreach { case (name, bar, w, rp, _, v) =>
       if (v.fired)
         System.err.println(s"[bench] PIN ${
           if (v == BenchPins.Weather) "elevated (weather)"
@@ -503,8 +233,7 @@ object Bench {
           (if (v == BenchPins.Weather)
             " — the record's weather refs are elevated; box, not code"
           else " in a canary-clean, refs-in-band record"))
-    pinAlert("x107_release_manifest", x107V, x107Warm, x107Rp, 3.5)
-    pinAlert("x124_embed_train_d4", x124V, x124Warm, x124Rp, x124Bar)
+    }
     if (lp.violated)
       System.err.println(
         s"[bench] PIN VIOLATED: lifecycle stages — segment ratio ${
@@ -512,50 +241,22 @@ object Bench {
           s"tile wall ratio ${f3(lp.tileWallRatio)}, both-runs " +
           s"flags [${lp.bothRuns.mkString("; ")}] — the stage " +
           "numbers carry weather; read the raw runs")
-    // Sidecar record (the r13 ask): the full per-query/warm dicts
-    // outgrew the driver's capture window — BENCH_r11 AND r12 both
-    // shipped "parsed": null with the headline line visibly truncated
-    // mid-dict. The complete record lands in a sidecar file (path in
-    // the headline) and the final stdout line stays compact: totals +
-    // a 2-decimal per-query dict + stages/runs + canaries + pins.
-    // The default sidecar name is PER-RUN UNIQUE in the core count
-    // (r13 verdict "What's wrong" #1: the 8-core scaling run at the
-    // old fixed default overwrote the 32-core per-query record).
+    // the default sidecar name is unique per core count, so a scaling
+    // run at another core count keeps the other's record
     val detailsPath = sys.env.getOrElse("SPARK_GRAFT_DETAILS",
-      s"BENCH_DETAILS_${cpus}c.json")
-    val sidecar =
-      s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":$qs,"warm":$ws,"stages":$stages,""" +
-        s""""canary":$cJson,"canary2":$c2Json,""" +
-        s""""contended":$contended,"pins":$pinsJson,"sf":"$sfDir"}"""
+      s"BENCH_DETAILS_${Harness.cpus}c.json")
     try
       java.nio.file.Files.write(java.nio.file.Paths.get(detailsPath),
-        sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        sidecar(results, warm, stagesJson(grids, _.toString), cJson, c2Json,
+          contended, pinsJson, sfDir)
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch {
       case e: Throwable =>
         System.err.println(s"[bench] could not write sidecar " +
           s"$detailsPath: ${e.getMessage}")
     }
-    def stageJson3(t: (Double, Double, Double, Double)): String =
-      s"""{"segment":${f3(t._2)},"tile":${f3(t._3)},""" +
-        s""""prediction":${f3(t._4)}}"""
-    def stageRuns3(min: (Double, Double, Double, Double),
-        runs: Seq[(Double, Double, Double, Double)]): String =
-      stageJson3(min).dropRight(1) +
-        s""","runs":[${runs.map(stageJson3).mkString(",")}]}"""
-    val stages3 =
-      s"""{"t1":${stageRuns3(t1, t1Runs)}""" +
-        s""","t2":${stageRuns3(t2, t2Runs)}""" +
-        t3.fold("")(t => s""","t3":${stageJson3(t._2)}""") + "}"
-    // per-query dict INLINE in the artifact of record (r13 verdict
-    // "What's wrong" #1: the driver does not read the sidecar, so
-    // PERF per_query/scaling were empty two rounds running): 2-decimal
-    // floats keep the 188-entry dict ~5 KB — inside the ~12 KB capture
-    // window that truncated the old full-precision line. Full
-    // precision (and the warm dict) still ship in the sidecar.
-    val qs2 = results.map { case (k, v) => s"\"" + k + "\":" + BenchPins.f2(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs2,"stages":$stages3,"canary":$cJson,"canary2":$c2Json,"contended":$contended,"pins":$pinsJson,"details":"$detailsPath","sf":"$sfDir"}""")
+    println(headline(results, stagesJson(grids, f3), cJson, c2Json,
+      contended, pinsJson, detailsPath, sfDir))
     spark.stop()
   }
 }

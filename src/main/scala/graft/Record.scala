@@ -1,112 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import BenchPins.f3
+import Harness.Canaries
 
 /** One-query official-style record writer (not part of the driver
-  * contract): measures a pinned query with the bench harness's exact
-  * isolation discipline — table + codegen warmup, both contention
-  * canaries sampled at the phase boundaries, min-of-N with per-run
-  * cache-clear + GC — and emits a self-contained record JSON with the
-  * pin verdict, the weather refs, and their anchors. Exists because a
-  * pin's sub-bar evidence must be a FILE, not prose: the x107 plan fix
-  * landed in r12 but no official record ever carried
-  * `pins.x107.violated: false`, so the standing flag read as a false
-  * alarm. Usage: `runMain graft.Record [queryName [barSec]]`; writes
+  * contract): measures a pinned query with the bench harness's
+  * isolation discipline — the bench warm-up, both contention canaries
+  * sampled at the phase boundaries, min-of-N with per-run cache-clear +
+  * GC — and emits a self-contained record JSON with the pin verdict,
+  * the weather refs, and their anchors. Exists because a pin's sub-bar
+  * evidence must be a FILE, not prose: the x107 plan fix landed in r12
+  * but no official record ever carried `pins.x107.violated: false`, so
+  * the standing flag read as a false alarm. Usage:
+  * `runMain graft.Record [queryName [barSec]]`; writes
   * `records/<query>_<utc-stamp>.json` (and prints it).
   */
 object Record {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("x107_release_manifest")
     val bar = args.drop(1).headOption.map(_.toDouble).getOrElse(3.5)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try queries.TextOps.warmup(spark, sfDir)
-    catch { case _: Throwable => () }
-    def isolate(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      System.gc()
-    }
-    import org.apache.spark.sql.functions._
-    def canaryLight(): Double = {
-      val t0 = System.nanoTime()
-      Tables(spark, sfDir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sq"),
-          avg(col("l_extendedprice")).as("ap"),
-          count(lit(1)).as("n"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def canaryHeavy(): Double = {
-      val t0 = System.nanoTime()
-      val li = Tables(spark, sfDir, "lineitem")
-      val rev = Iterator.fill(8)(li).reduce(_ union _)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .as("rev"),
-          count(lit(1)).as("nl"),
-          sum(col("l_quantity")).as("qty"))
-      rev.join(Tables(spark, sfDir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("rev")).as("crev"), sum(col("nl")).as("cn"),
-          max(col("qty")).as("mq"))
-        .orderBy(col("crev").desc, col("o_custkey"))
-        .limit(100).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    try canaryHeavy() catch { case _: Throwable => () } // warm its shape
-    val c1 = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val c2 = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def canary(): Unit = {
-      try c1 += math.min(canaryLight(), canaryLight())
-      catch { case _: Throwable => () }
-      try c2 += math.min(canaryHeavy(), canaryHeavy())
-      catch { case _: Throwable => () }
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
+    val canaries = new Canaries(spark, sfDir)
+    // the successful runs' seconds
     def timeQ(q: String, n: Int): Seq[Double] =
-      SparkEntry.queries.get(q).map { fn =>
-        (1 to n).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          val d = (System.nanoTime() - t0) / 1e9
-          isolate()
-          if (ok) Some(d) else None
-        }
-      }.getOrElse(Seq.empty)
-    canary()
+      Harness.runs(n, q, Harness.isolate(spark))(
+        Harness.query(spark, sfDir, q)).filter(_ >= 0)
     timeQ(name, 1) // untimed warm pass: the cold run pays JIT, not plan
     val runs = timeQ(name, 3)
-    canary()
+    canaries.sample()
     val refRuns = BenchPins.RefAnchors.map { case (r, a) =>
       (r, timeQ(r, 3), a)
     }
-    canary()
-    def spreadOf(xs: Seq[Double]): Double =
-      if (xs.size >= 2 && xs.min > 0) xs.max / xs.min else -1.0
-    val contended = spreadOf(c1.toSeq) > 3.0 || spreadOf(c2.toSeq) > 3.0
-    val best = if (runs.nonEmpty) runs.min else -1.0
-    val refs = refRuns.map { case (r, rs, a) =>
-      (r, if (rs.nonEmpty) rs.min else -1.0, a)
-    }
-    val verdict = BenchPins.classify(best, bar, !contended, -1.0, refs,
-      refRuns.map(_._2))
-    import BenchPins.f3
+    canaries.sample()
+    val best = Harness.best(runs)
+    val refs = refRuns.map { case (r, rs, a) => (r, Harness.best(rs), a) }
+    val verdict = BenchPins.classify(best, bar, !canaries.contended, -1.0,
+      refs, refRuns.map(_._2))
     val stamp = java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd'T'HHmmss'Z'")
       .withZone(java.time.ZoneOffset.UTC)
@@ -115,11 +46,9 @@ object Record {
       s"""{"query":"$name","bar_sec":$bar,""" +
         s""""runs":[${runs.map(f3).mkString(",")}],""" +
         s""""min_sec":${f3(best)},""" +
-        s""""canary":{"samples":[${c1.map(f3).mkString(",")}],""" +
-        s""""spread":${f3(spreadOf(c1.toSeq))}},""" +
-        s""""canary2":{"samples":[${c2.map(f3).mkString(",")}],""" +
-        s""""spread":${f3(spreadOf(c2.toSeq))}},""" +
-        s""""contended":$contended,""" +
+        s""""canary":${Canaries.json(canaries.light.toSeq, false)},""" +
+        s""""canary2":${Canaries.json(canaries.heavy.toSeq, false)},""" +
+        s""""contended":${canaries.contended},""" +
         s""""weather_refs":${BenchPins.refsJson(refs)},""" +
         s""""ref_runs":${refRuns.map { case (r, rs, _) =>
           s""""$r":[${rs.map(f3).mkString(",")}]"""

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * token prepended to the text (so near-dup structure is preserved,
   * not multiplied) — large enough that per-row compute dominates the
   * fixed per-action cost, then times a handful of corpus-linear
-  * registry queries with the bench's own methodology (count() action,
-  * min of two isolated runs, cache-clear + gc between runs).
+  * registry queries with the bench's own harness (warm-up, count()
+  * action, min of two isolated runs, cache-clear + gc between runs).
   *
   * Run twice — SPARK_GRAFT_CPUS=8 and =32 — and compare the two
   * emitted JSON lines; the committed records under `records/` carry
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleWitness {
 
-  private val DefaultQueries = Seq(
+  val DefaultQueries = Seq(
     "x75_bm25_wand",          // whole-corpus postings + WAND top-k
     "x28_winnow",             // whole-corpus winnowing fingerprints
     "x109_tokenizer_fertility", // BPE encode over the whole corpus
@@ -38,55 +38,22 @@ object ScaleWitness {
     "x88_gopher_coverage")    // per-doc coverage filters
 
   def main(args: Array[String]): Unit = {
-    val srcDir =
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val srcDir = Harness.sfDir
     val factor =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "20").toInt
     val workDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_x$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = Harness.session()
     buildCorpus(spark, srcDir, workDir, factor)
-
+    Harness.warmup(spark, workDir)
     val names = if (args.nonEmpty) args.toSeq else DefaultQueries
-    // same warmup discipline as the bench: touch every table + the
-    // text machinery once so first-query JIT is not attributed
-    Tables.names.foreach { t =>
-      try Tables(spark, workDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try queries.TextOps.warmup(spark, workDir)
-    catch { case _: Throwable => () }
-    def isolate(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      System.gc()
-    }
     val results = names.map { n =>
-      val fn = SparkEntry.queries(n)
-      val runs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, workDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        isolate()
-        (ok, dt)
-      }
-      val good = runs.filter(_._1).map(_._2)
-      n -> (if (good.nonEmpty) good.min else -1.0)
+      n -> Harness.bestOf(2, n, Harness.isolate(spark))(
+        Harness.query(spark, workDir, n))
     }
-    val qs = results.map { case (k, v) =>
-      s"\"" + k + "\":" + BenchPins.f3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_witness","cpus":$cpus,""" +
-      s""""factor":$factor,"queries":$qs,"src":"$srcDir"}""")
+    println(s"""{"metric":"scale_witness","cpus":${Harness.cpus},""" +
+      s""""factor":$factor,""" +
+      s""""queries":${Harness.dict(results, BenchPins.f3)},"src":"$srcDir"}""")
     spark.stop()
   }
 

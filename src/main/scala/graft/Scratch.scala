@@ -1,32 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc timing scratchpad (not part of the driver contract).
-  * Times each named query N times after a warmup pass, with the
-  * bench harness's per-run isolation (cache clear + GC) so numbers
-  * here reproduce BENCH warm numbers. SPARK_GRAFT_STAGES=1 adds a
-  * per-stage timing dump (top stages by duration) for attribution.
+  * Times each named query three times after a cold pass, with the
+  * bench warm-up and per-run isolation (cache clear + GC) so numbers
+  * here reproduce BENCH warm numbers, then dumps the last run's top
+  * stages by duration for attribution.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    val dumpStages = sys.env.get("SPARK_GRAFT_STAGES").contains("1")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[
       (Int, String, Long, Int)]() // (stageId, name, millis, tasks)
     spark.sparkContext.addSparkListener(
@@ -52,66 +36,27 @@ object Scratch {
           stageLog.add((i.stageId, label.take(110), ms, i.numTasks))
         }
       })
-    def isolate(): Unit = {
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      System.gc()
-    }
     val names = if (args.nonEmpty) args.toSeq else Seq("x14_tfidf")
-    // SPARK_GRAFT_SWEEP=1: replicate the bench sweep's isolation
-    // EXACTLY (clearCache after every query, System.gc only every
-    // 10th) over the given names, one timed run each — for bisecting
-    // effects that only appear mid-sweep and vanish under Scratch's
-    // full per-run isolation (cache clear + GC every run).
-    if (sys.env.get("SPARK_GRAFT_SWEEP").contains("1")) {
-      var sinceGc = 0
-      names.foreach { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
-        sinceGc += 1
-        if (sinceGc >= 10) { sinceGc = 0; System.gc() }
-        println(f"SWEEP $name%-28s ${if (ok) dt else -1.0}%.3f")
-      }
-      spark.stop()
-      return
-    }
-    // SPARK_GRAFT_EXPLAIN=1 dumps each query's formatted physical
-    // plan (post-AQE initial plan) before timing — the .explain
-    // audit loop without a REPL
-    val dumpPlan = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      if (dumpPlan) fn(spark, sfDir).explain("formatted")
-      val c0 = System.nanoTime()
-      fn(spark, sfDir).count() // warm
-      val cold = (System.nanoTime() - c0) / 1e9
-      isolate()
-      val times = (1 to 3).map { _ =>
+      val cold = Harness.time(name)(Harness.query(spark, sfDir, name))
+      Harness.isolate(spark)
+      val times = Harness.runs(3, name, Harness.isolate(spark)) {
         stageLog.clear()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        isolate()
-        dt
+        Harness.query(spark, sfDir, name)
       }
-      println(f"SCRATCH $name%-18s cold=$cold%.3f min=${times.min}%.3f runs=${times.map(t => f"$t%.3f").mkString(",")}")
-      if (dumpStages) {
-        // flush the async listener bus so the last run's stage events
-        // are all delivered before reading the log; drop stages with
-        // missing timestamps instead of summing their -1 sentinels
-        try org.apache.spark.sql.graftbridge.ColumnBridge
-          .flushListenerBus(spark)
-        catch { case _: Throwable => () }
-        import scala.jdk.CollectionConverters._
-        val done = stageLog.asScala.toSeq.filter(_._3 >= 0)
-        done.sortBy(-_._3).take(20).foreach { case (id, n, ms, nt) =>
-          println(f"  STAGE $id%5d ${ms}%6d ms tasks=$nt%3d  $n")
-        }
-        println(f"  STAGE-SUM ${done.map(_._3).sum} ms over ${done.size} stages")
+      println(f"SCRATCH $name%-18s cold=$cold%.3f min=${Harness.best(times)}%.3f runs=${times.map(t => f"$t%.3f").mkString(",")}")
+      // flush the async listener bus so the last run's stage events
+      // are all delivered before reading the log; drop stages with
+      // missing timestamps instead of summing their -1 sentinels
+      try org.apache.spark.sql.graftbridge.ColumnBridge
+        .flushListenerBus(spark)
+      catch { case _: Throwable => () }
+      import scala.jdk.CollectionConverters._
+      val done = stageLog.asScala.toSeq.filter(_._3 >= 0)
+      done.sortBy(-_._3).take(20).foreach { case (id, n, ms, nt) =>
+        println(f"  STAGE $id%5d ${ms}%6d ms tasks=$nt%3d  $n")
       }
+      println(f"  STAGE-SUM ${done.map(_._3).sum} ms over ${done.size} stages")
     }
     spark.stop()
   }

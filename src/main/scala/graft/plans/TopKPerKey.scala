@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute,
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, UnspecifiedDistribution}
+  Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy,
   UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}

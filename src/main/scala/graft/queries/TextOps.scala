@@ -2638,7 +2638,6 @@ object TextOps {
       val cnts = LangMarkers.map { case (l, ms) =>
         l -> size(filter(tk, w => w.isin(ms: _*)))
       }
-      val langs = LangMarkers.map(_._1)
       val predicted = cnts.zipWithIndex.foldRight(lit("und")) {
         case (((l, c), i), els) =>
           val rest = cnts.drop(i + 1).map(_._2)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.core.PixelTimeseries
 import graft.ops.SegmentPipeline
 import graft.store.ParquetStore

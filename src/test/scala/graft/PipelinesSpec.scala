@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.time.LocalDate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._

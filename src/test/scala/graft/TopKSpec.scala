@@ -237,7 +237,6 @@ class TopKSpec extends AnyFunSuite with SparkSpec {
   test("a foreign WindowGroupLimit (smaller limit than k) blocks the " +
     "rewrite instead of being silently dropped") {
     import org.apache.spark.sql.catalyst.dsl.expressions._
-    import org.apache.spark.sql.catalyst.dsl.plans._
     import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending,
       Literal, RowFrame, RowNumber, SortOrder => CSortOrder,
       SpecifiedWindowFrame, UnboundedPreceding, CurrentRow,
